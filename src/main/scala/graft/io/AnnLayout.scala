@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.Similarity
+import DirSwap.Dirs
 
 /** At-rest IVF layout — the missing half of
   * [[graft.ops.Similarity.knnIvf]]'s scale story. knnIvf's scaladoc
@@ -79,17 +80,12 @@ object AnnLayout {
     * append and the reps refresh leaves the OLD reps intact (stale
     * codebook: queries still probe correctly, merely without the new
     * clusters until a retried append completes the swap), never a
-    * half-written one. The swap itself is TWO renames (target→.old,
-    * stage→target), so there is a window — and any crash inside it —
-    * where the target directory is missing and only the `.old`
-    * backup exists; every read path here goes through
-    * [[readSwapped]], which falls back to the backup (the consistent
-    * pre-swap version) without mutating anything, so readers observe
-    * old-or-new data, never a failure, and repair stays the next
-    * writer's job ([[swapDir]] calls [[repairSwap]] first). Single
-    * WRITER assumed (two concurrent appends would race the swap) —
-    * the same contract every no-table-format parquet maintenance
-    * path here carries.
+    * half-written one. The swap is [[DirSwap.swap]], and every read
+    * path here goes through [[DirSwap.read]], so a crash at any step
+    * of it leaves readers old-or-new data, never a failure, and
+    * repair stays the next writer's job. Single WRITER assumed (two
+    * concurrent appends would race the swap) — the same contract
+    * every no-table-format parquet maintenance path here carries.
     */
   def appendIvf(newVecs: DataFrame, path: String,
       clusterCol: String = "label", idCol: String = "vec_id",
@@ -104,7 +100,7 @@ object AnnLayout {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(clusterCol)
       .parquet(s"$path/corpus")
-    val old = readSwapped(spark, s"$path/reps")
+    val old = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
     val merged = old
       .unionByName(repsOf(newVecs, clusterCol, idCol, vecCol))
       .groupBy(col(clusterCol))
@@ -116,85 +112,12 @@ object AnnLayout {
     spark.createDataFrame(
         spark.sparkContext.parallelize(merged.toIndexedSeq, 1), old.schema)
       .write.mode("overwrite").parquet(s"$path/reps.stage")
-    swapDir(spark, s"$path/reps.stage", s"$path/reps")
+    DirSwap.swap(spark, Dirs.sibling(s"$path/reps"))
     if (compactWhenFilesOver > 0)
       compactIvfPartitions(spark, path, clusterCol, idCol,
         compactFiles, compactWhenFilesOver,
         maxRecordsPerFile = maxRecordsPerFile)
     ()
-  }
-
-  /** Rename `stage` into `target` (backup-then-rename: target →
-    * `backup` (default `<target>.old`), stage → target, delete
-    * backup). Both paths must share a filesystem; callers are
-    * single-writer. The explicit `backup` parameter exists for
-    * Hive-partition directories, whose backup must be a HIDDEN
-    * sibling (`.old_cluster=5`) — a visible `cluster=5.old` would be
-    * parsed by partition discovery as partition value "5.old".
-    *
-    * Self-repairing: a crash between the two renames leaves the
-    * target missing and the backup present — the next swap (the
-    * single writer's retry) restores the backup FIRST, so the window
-    * where a reader can observe a missing target is bounded by the
-    * writer's absence, never permanent; [[readSwapped]] additionally
-    * lets default-backup readers fall back without mutating.
-    */
-  private[graft] def swapDir(spark: SparkSession, stage: String,
-      target: String, backup: String = null): Unit = {
-    import org.apache.hadoop.fs.Path
-    val t = new Path(target)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = new Path(stage)
-    val bak = new Path(if (backup == null) target + ".old" else backup)
-    repairSwap(spark, target, backup)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(t)) { if (!fs.rename(t, bak)) sys.error(s"rename $t -> $bak failed") }
-    if (!fs.rename(s, t)) {
-      // restore the backup so the layout never points at nothing
-      if (fs.exists(bak)) fs.rename(bak, t)
-      sys.error(s"rename $s -> $t failed")
-    }
-    fs.delete(bak, true)
-    ()
-  }
-
-  /** Restore `target` from its backup (default `<target>.old`) if a
-    * previous swap was interrupted between its two renames (target
-    * gone, backup present). Writers call this before touching the
-    * directory — [[swapDir]] does, and so does any compaction that
-    * READS the target before staging its rewrite.
-    */
-  private[graft] def repairSwap(spark: SparkSession, target: String,
-      backup: String = null): Unit = {
-    import org.apache.hadoop.fs.Path
-    val t = new Path(target)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(if (backup == null) target + ".old" else backup)
-    if (!fs.exists(t) && fs.exists(bak)) {
-      if (!fs.rename(bak, t)) sys.error(s"repair rename $bak -> $t failed")
-    }
-    ()
-  }
-
-  /** Crash-tolerant READ of a [[swapDir]]-maintained directory: read
-    * `target` if it exists, else its `.old` backup — the consistent
-    * pre-swap version a crash between the two swap renames leaves
-    * behind. Deliberately MUTATION-FREE (no repair rename): a reader
-    * must never race a live writer mid-swap, and restoring the
-    * backup is [[swapDir]]'s own first step on the writer's retry.
-    * Every reps/index read in this package and in
-    * [[graft.ops.Dedup.readFirstOccurrenceIndex]] goes through here,
-    * so a crashed maintenance pass degrades readers to the previous
-    * version instead of path-not-found (LayoutSpec pins it).
-    */
-  private[graft] def readSwapped(spark: SparkSession,
-      target: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val t = new Path(target)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = if (!fs.exists(t) && fs.exists(new Path(target + ".old")))
-      target + ".old" else target
-    spark.read.parquet(src)
   }
 
   /** Bounded POINT FETCH from an at-rest parquet table: the rows
@@ -290,8 +213,8 @@ object AnnLayout {
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame =
-    knnIvfOn(readSwapped(spark, s"$path/reps"), queries, k, nprobe,
-      idCol, vecCol, clusterCol,
+    knnIvfOn(DirSwap.read(spark, Dirs.sibling(s"$path/reps")), queries,
+      k, nprobe, idCol, vecCol, clusterCol,
       pc => spark.read.parquet(s"$path/corpus")
         .filter(col(clusterCol).isin(pc: _*)))
 
@@ -389,7 +312,7 @@ object AnnLayout {
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
-    val reps = readSwapped(spark, s"$path/reps")
+    val reps = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"), col("rep_codes"),
         col("rep_scale"))
     val q = Similarity.q8CodesScaled(queries, idCol, vecCol,
@@ -474,7 +397,7 @@ object AnnLayout {
     cents.select(col("cluster").as(clusterCol),
         col("cluster").as("rep_id"), col("cv").as("rep_vec"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/reps.stage")
-    swapDir(spark, s"$path/reps.stage", s"$path/reps")
+    DirSwap.swap(spark, Dirs.sibling(s"$path/reps"))
     cents
   }
 
@@ -512,7 +435,7 @@ object AnnLayout {
       .select(col("rep_id").as(clusterCol), col("rep_id"),
         col("rep_codes"), col("rep_scale"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/reps.stage")
-    swapDir(spark, s"$path/reps.stage", s"$path/reps")
+    DirSwap.swap(spark, Dirs.sibling(s"$path/reps"))
     cents
   }
 
@@ -575,10 +498,10 @@ object AnnLayout {
     cents.select(col("cluster").as(clusterCol),
         col("cluster").as("rep_id"), col("cv").as("rep_vec"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/reps.stage")
-    swapDir(spark, s"$path/reps.stage", s"$path/reps")
+    DirSwap.swap(spark, Dirs.sibling(s"$path/reps"))
     // Stage+swap like reps: a plain overwrite on a RE-build into an
     // existing layout can crash mid-write and leave a torn pq dir
-    // with no .old for readSwapped to fall back to — the pq codebook
+    // with no .old for DirSwap.read to fall back to — the pq codebook
     // carries the same crash-safety contract as every other artifact
     // here.
     model.codebooks.zipWithIndex
@@ -586,7 +509,7 @@ object AnnLayout {
         (s, code, cv.toSeq, residual) } }
       .toDF("s", "code", "cv", "residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/pq.stage")
-    swapDir(spark, s"$path/pq.stage", s"$path/pq")
+    DirSwap.swap(spark, Dirs.sibling(s"$path/pq"))
     (cents, model)
   }
 
@@ -594,7 +517,7 @@ object AnnLayout {
     * layout's `pq` artifact — codebook-sized read.
     */
   def readPqModel(spark: SparkSession, path: String): graft.ops.Pq.PqModel = {
-    val rows = readSwapped(spark, s"$path/pq")
+    val rows = DirSwap.read(spark, Dirs.sibling(s"$path/pq"))
       .orderBy("s", "code").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toIndexedSeq))
     val m = rows.map(_._1).max + 1
@@ -609,7 +532,7 @@ object AnnLayout {
     * layouts lack the column and read as raw).
     */
   def readPqResidualFlag(spark: SparkSession, path: String): Boolean = {
-    val df = readSwapped(spark, s"$path/pq")
+    val df = DirSwap.read(spark, Dirs.sibling(s"$path/pq"))
     df.columns.contains("residual") &&
       df.select("residual").head().getBoolean(0)
   }
@@ -627,7 +550,7 @@ object AnnLayout {
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
     val model = readPqModel(spark, path)
-    val reps = readSwapped(spark, s"$path/reps")
+    val reps = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"),
         Similarity.asDouble(col("rep_vec")).as("rv"))
       .withColumn("rn", Similarity.norm2(col("rv")))
@@ -656,7 +579,7 @@ object AnnLayout {
         membersRaw.select(col("cluster"), col("neighbor_id"),
           decoded.as("cv"))
       else membersRaw
-        .join(broadcast(readSwapped(spark, s"$path/reps")
+        .join(broadcast(DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
           .select(col(clusterCol).as("cluster"),
             Similarity.asDouble(col("rep_vec")).as("_cc"))),
           Seq("cluster"))
@@ -692,7 +615,7 @@ object AnnLayout {
     val spark = newVecs.sparkSession
     repairPartitionSwaps(spark, path)
     val model = readPqModel(spark, path)
-    val cents = readSwapped(spark, s"$path/reps")
+    val cents = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"), col("rep_vec").as("cv"))
     val base = newVecs.drop(clusterCol)
     val labels = Similarity.assignNearest(base, cents, idCol, vecCol)
@@ -756,12 +679,9 @@ object AnnLayout {
       maxRecordsPerFile: Long = 5000000L,
       compactWhenFilesOver: Int = 0, compactFiles: Int = 1): Unit = {
     val spark = newVecs.sparkSession
-    // complete any pending paired corpus+reps publish BEFORE landing
-    // rows: appending to a corpus whose staged rebuild is about to
-    // roll forward would lose this batch to the swap
-    repairTrainedSwap(spark, path)
+    DirSwap.repair(spark, Dirs.sibling(s"$path/reps"))
     repairPartitionSwaps(spark, path)
-    val cents = readSwapped(spark, s"$path/reps")
+    val cents = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"), col("rep_vec").as("cv"))
     val base = newVecs.drop(clusterCol)
     val labeled = base.join(
@@ -795,13 +715,13 @@ object AnnLayout {
     * deliberately untouched: deleting members changes cell OCCUPANCY,
     * not the frozen quantizer — exactly the [[appendTrained]]
     * frozen-codebook rule in reverse; heavy deletion shows up in the
-    * next [[maintainTrained]] batch's crowding gate, whose retrain
-    * is the codebook's refresh path. Ids absent from the layout are
-    * no-ops. Returns the number of rows deleted.
+    * next [[EpochLayout.maintainTrained]] batch's crowding gate, whose
+    * retrain is the codebook's refresh path. Ids absent from the
+    * layout are no-ops. Returns the number of rows deleted.
     */
   def deleteTrained(spark: SparkSession, path: String, ids: Seq[Long],
       idCol: String = "vec_id", clusterCol: String = "label"): Long = {
-    repairTrainedSwap(spark, path)
+    DirSwap.repair(spark, Dirs.sibling(s"$path/reps"))
     repairPartitionSwaps(spark, path)
     if (ids.isEmpty) return 0L
     val fetched = fetchByIds(spark, s"$path/corpus", ids, idCol)
@@ -852,9 +772,9 @@ object AnnLayout {
       maxRecordsPerFile: Long = 5000000L,
       compactWhenFilesOver: Int = 0, compactFiles: Int = 1): AppendStats = {
     val spark = newVecs.sparkSession
-    repairTrainedSwap(spark, path)  // same pre-append rule as appendTrained
+    DirSwap.repair(spark, Dirs.sibling(s"$path/reps"))
     repairPartitionSwaps(spark, path)
-    val cents = readSwapped(spark, s"$path/reps")
+    val cents = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"), col("rep_vec").as("cv"))
     val base = newVecs.drop(clusterCol)
     val assigned = Similarity.assignNearest(base, cents, idCol, vecCol)
@@ -890,140 +810,13 @@ object AnnLayout {
       cellsUsed = occ.length.toLong)
   }
 
-  /** Outcome of one [[maintainTrained]] epoch: the append's drift
-    * statistics plus which policy gates fired. `retrained = true`
-    * means the layout's codebook was REBUILT this call (queries keep
-    * answering identically across the swap — LayoutSpec pins it).
+  /** Outcome of one [[EpochLayout.maintainTrained]] epoch: the
+    * append's drift statistics plus which policy gates fired.
+    * `retrained = true` means the crowding gate fired and a rebuilt
+    * codebook was published as a new epoch.
     */
   final case class MaintainResult(stats: AppendStats,
       warned: Boolean, retrained: Boolean)
-
-  /** The measured retrain policy, WIRED: append the batch via
-    * [[appendTrainedWithStats]], then apply the gates its statistics
-    * feed — WARN when the batch's assignment-cosine p50 falls under
-    * `warnCosP50` (default 0.7 — drift is visible but recall is
-    * still intact; the caller should start planning a retrain), and
-    * RETRAIN when the batch's top-cell share exceeds
-    * `retrainShareFactor / k` (default 3/k — the measured knee where
-    * crowding starts inflating probed bytes; PERF.md round-11
-    * "frozen-codebook drift"). k is read from the layout's own reps
-    * table, so the gate threshold always matches the codebook
-    * actually installed.
-    *
-    * The retrain is a full [[trainIvf]]-shape rebuild over the
-    * UNIONED corpus (which already includes this batch — the append
-    * lands first, so no rows are ever in flight during the rebuild).
-    * Crash discipline for the PAIRED artifacts: BOTH `corpus.stage`
-    * and `reps.stage` are fully staged (each carrying Spark's
-    * `_SUCCESS` commit marker) before either swap, then the two
-    * swaps run back-to-back, corpus first. A crash anywhere is
-    * repaired by [[repairTrainedSwap]] on the next entry: both
-    * stages complete → finish the publish (roll forward); only the
-    * reps stage left (corpus already swapped) → complete the reps
-    * swap; any incomplete stage → delete the stages (roll back to
-    * the still-consistent old pair). The remaining inconsistency
-    * window for a CONCURRENT reader is exactly the two renames — a
-    * reader in that window can see the new corpus against old reps
-    * (probe-list mismatch costs recall, never wrong rows from the
-    * rerank); a single-pointer epoch directory would close even
-    * that, at the cost of doubling the at-rest footprint during
-    * maintenance.
-    *
-    * This is the production intake loop's single entry point: call
-    * per epoch, log the returned stats, and the codebook keeps
-    * itself fit without a second corpus pass — the gate inputs ride
-    * the append's own assignment.
-    */
-  def maintainTrained(newVecs: DataFrame, path: String, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      clusterCol: String = "label",
-      warnCosP50: Double = 0.7, retrainShareFactor: Double = 3.0,
-      maxRecordsPerFile: Long = 5000000L,
-      compactWhenFilesOver: Int = 0, compactFiles: Int = 1,
-      kppSeeds: Boolean = false)
-      : MaintainResult = {
-    val spark = newVecs.sparkSession
-    repairTrainedSwap(spark, path)
-    val stats = appendTrainedWithStats(newVecs, path, idCol, vecCol,
-      clusterCol, maxRecordsPerFile, compactWhenFilesOver, compactFiles)
-    val k = readSwapped(spark, s"$path/reps").count()
-    require(k > 0, s"empty reps table at $path")
-    val warned = stats.assignCosP50 < warnCosP50
-    val retrain = stats.topCellShare > retrainShareFactor / k.toDouble
-    if (retrain) {
-      val base = spark.read.parquet(s"$path/corpus")
-        .drop(clusterCol)
-        .select(col(idCol), col(vecCol))
-      // kppSeeds: distance-aware k-means‖ seeding for the rebuild
-      // (3 bounded corpus passes extra). The retrain fires exactly
-      // when the corpus CROWDS — the regime where first-k-ids seeds
-      // are most likely to all land in the crowded region (and where
-      // duplicate head rows make first-k permanently degenerate —
-      // PERF.md round-12 kpp_seeding). Ids here are ingestion ids,
-      // which at intake time correlate with source/time by
-      // construction, so the crowding retrain is kpp's home case.
-      val seeds = if (kppSeeds)
-        Similarity.kmeansParInit(base, k.toInt, idCol = idCol,
-          vecCol = vecCol).select(col("cluster"), col("cv"))
-      else null
-      val cents = Similarity.kmeans(base, k.toInt, iters, idCol, vecCol,
-        seeds = seeds)
-      val labeled = base.join(
-        Similarity.assignNearest(base, cents, idCol, vecCol)
-          .select(col("vec_id").as(idCol), col("cluster").as(clusterCol)),
-        Seq(idCol))
-      // stage BOTH artifacts to completion, THEN swap back-to-back
-      // (corpus first): a crash anywhere leaves a state
-      // repairTrainedSwap rolls forward or back — never a published
-      // new corpus with no staged reps to pair it with
-      Bucketing.writePartitioned(labeled, s"$path/corpus.stage",
-        Seq(clusterCol), Seq(idCol), maxRecordsPerFile)
-      cents.select(col("cluster").as(clusterCol),
-          col("cluster").as("rep_id"), col("cv").as("rep_vec"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/reps.stage")
-      swapDir(spark, s"$path/corpus.stage", s"$path/corpus")
-      swapDir(spark, s"$path/reps.stage", s"$path/reps")
-    }
-    MaintainResult(stats, warned, retrained = retrain)
-  }
-
-  /** Repair for [[maintainTrained]]'s PAIRED corpus+reps publish
-    * (the docstring's crash discipline). Completeness of a stage is
-    * its `_SUCCESS` commit marker. Cases, in order:
-    *  - both stages complete → the crash hit before (or between) the
-    *    swaps: finish the publish, corpus then reps (ROLL FORWARD —
-    *    the pair was fully built, installing it is always valid);
-    *  - only a complete reps stage → the corpus swap already
-    *    happened: complete the reps swap (the cross-artifact
-    *    inconsistency the old single-directory repair missed —
-    *    without this, appends assign against the OLD centroids into
-    *    NEW-label partitions and probes silently lose recall);
-    *  - anything incomplete → delete the stages; the published pair
-    *    was never touched and remains consistent (ROLL BACK).
-    * Single-directory rename crashes are repaired first, as always.
-    */
-  private[graft] def repairTrainedSwap(spark: SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def ex(p: String) = fs.exists(new Path(p))
-    def complete(p: String) = fs.exists(new Path(p + "/_SUCCESS"))
-    val cs = s"$path/corpus.stage"
-    val rs = s"$path/reps.stage"
-    repairSwap(spark, s"$path/corpus")
-    repairSwap(spark, s"$path/reps")
-    if (ex(cs) && complete(cs) && ex(rs) && complete(rs)) {
-      swapDir(spark, cs, s"$path/corpus")
-      swapDir(spark, rs, s"$path/reps")
-    } else if (!ex(cs) && ex(rs) && complete(rs)) {
-      swapDir(spark, rs, s"$path/reps")
-    } else {
-      if (ex(cs)) fs.delete(new Path(cs), true)
-      if (ex(rs)) fs.delete(new Path(rs), true)
-    }
-    ()
-  }
 
   /** Incremental maintenance for a TRAINED Q8 layout
     * ([[trainIvfQ8]]): assign the new batch against the DEQUANTIZED
@@ -1046,7 +839,7 @@ object AnnLayout {
       compactWhenFilesOver: Int = 0, compactFiles: Int = 1): Unit = {
     val spark = newVecs.sparkSession
     repairPartitionSwaps(spark, path)
-    val cents = readSwapped(spark, s"$path/reps")
+    val cents = DirSwap.read(spark, Dirs.sibling(s"$path/reps"))
       .select(col(clusterCol).as("cluster"),
         transform(col("rep_codes"),
           c => c.cast("double") * col("rep_scale") / lit(127.0)).as("cv"))
@@ -1095,12 +888,12 @@ object AnnLayout {
     * Crash safety: stage dirs and backups are HIDDEN siblings inside
     * the corpus root (`.stage_cluster=5` / `.old_cluster=5` — dot
     * prefix, ignored by partition discovery, so a reader NEVER sees a
-    * partial partition as data). The swap is the two-rename
-    * [[swapDir]]; a crash inside it leaves the partition directory
-    * missing and the hidden backup present — invisible-rows, not
-    * wrong-rows — and [[repairPartitionSwaps]] (called on entry here
-    * and by every append) restores it. The reps codebook is never
-    * touched. Single writer assumed, as everywhere in this layout.
+    * partial partition as data). The swap is [[DirSwap.swap]]; a
+    * crash inside it leaves the partition directory missing and the
+    * hidden backup present — invisible-rows, not wrong-rows — and
+    * [[repairPartitionSwaps]] (called on entry here and by every
+    * append) restores it. The reps codebook is never touched. Single
+    * writer assumed, as everywhere in this layout.
     *
     * Returns the number of partitions rewritten. LayoutSpec pins
     * query-identity before/after on a multi-append layout and the
@@ -1139,8 +932,8 @@ object AnnLayout {
             .sortWithinPartitions(idCol)
             .write.option("maxRecordsPerFile", maxRecordsPerFile)
             .mode("overwrite").parquet(stage.toString)
-          swapDir(spark, stage.toString, st.getPath.toString,
-            backup = new Path(corpus, s".old_$name").toString)
+          DirSwap.swap(spark, Dirs(stage.toString, st.getPath.toString,
+            new Path(corpus, s".old_$name").toString))
           compacted += 1
         }
       }
@@ -1149,29 +942,12 @@ object AnnLayout {
   }
 
   /** Finish any partition swap a crashed [[compactIvfPartitions]]
-    * left half-done: for each hidden `.old_<partition>` backup in the
-    * corpus root, restore it if its partition directory is missing
-    * (crash between the two renames) or drop it if the swap committed
-    * (crash before the backup delete). One driver-side listing; every
-    * layout writer calls this on entry, so a crash degrades the
-    * layout for at most one maintenance cycle.
+    * left half-done ([[DirSwap.repairPartitions]] over the corpus
+    * root). Every layout writer calls this on entry, so a crash
+    * degrades the layout for at most one maintenance cycle.
     */
-  def repairPartitionSwaps(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val corpus = new Path(s"$path/corpus")
-    val fs = corpus.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(corpus)) return
-    fs.listStatus(corpus).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(".old_")) {
-        val target = new Path(corpus, name.stripPrefix(".old_"))
-        if (!fs.exists(target)) {
-          if (!fs.rename(st.getPath, target))
-            sys.error(s"repair rename ${st.getPath} -> $target failed")
-        } else fs.delete(st.getPath, true)
-      }
-    }
-  }
+  def repairPartitionSwaps(spark: SparkSession, path: String): Unit =
+    DirSwap.repairPartitions(spark, s"$path/corpus", stageRoot = None)
 
   /** Per-partition layout statistics from ONE driver-side listing —
     * no data read: `(cluster value, parquet file count, bytes)` for
@@ -1214,9 +990,9 @@ object AnnLayout {
     * sequential opens are latency-bound (~10 ms each measured on
     * local disk, worse on object stores), and the fetches are
     * independent, so the wall cost is files/16 round trips. This
-    * makes the CROWDING statistic the retrain
-    * policy gates on exact AT REST: [[maintainTrained]] reads it from
-    * the append batch's own assignment, but a layout that drifted
+    * makes the CROWDING statistic the retrain policy gates on exact
+    * AT REST: [[EpochLayout.maintainTrained]] reads it from the
+    * append batch's own assignment, but a layout that drifted
     * across many past appends (or was inherited from another writer)
     * can be audited without pushing any batch through —
     * [[auditTrained]] below.
@@ -1281,23 +1057,23 @@ object AnnLayout {
   final case class AuditResult(cells: Long, rows: Long,
       topCellShare: Double, retrain: Boolean)
 
-  /** The [[maintainTrained]] crowding gate applied AT REST — no
-    * append, no assignment pass, no corpus read: row counts come from
-    * the parquet footers, k from the layout's own reps table, and the
-    * gate threshold is the same measured `retrainShareFactor / k`
-    * knee (PERF.md round-11 "frozen-codebook drift": crowding, not
-    * assignment fit, is what inflates probed bytes). The periodic
-    * maintenance audit a fleet runs over every layout it owns —
-    * codebook-sized cost per layout, independent of corpus size.
-    * A fired gate is acted on by pushing the next batch through
-    * [[maintainTrained]] (whose rebuild machinery already exists) or
-    * rebuilding directly via [[trainIvf]].
+  /** The [[EpochLayout.maintainTrained]] crowding gate applied AT
+    * REST — no append, no assignment pass, no corpus read: row
+    * counts come from the parquet footers, k from the layout's own
+    * reps table, and the gate threshold is the same measured
+    * `retrainShareFactor / k` knee (PERF.md round-11 "frozen-codebook
+    * drift": crowding, not assignment fit, is what inflates probed
+    * bytes). The periodic maintenance audit a fleet runs over every
+    * layout it owns — codebook-sized cost per layout, independent of
+    * corpus size. A fired gate is acted on by pushing the next batch
+    * through [[EpochLayout.maintainTrained]] (whose rebuild machinery
+    * already exists) or rebuilding directly via [[trainIvf]].
     */
   def auditTrained(spark: SparkSession, path: String,
       retrainShareFactor: Double = 3.0,
       clusterCol: String = "label"): AuditResult = {
     val stats = layoutRowStats(spark, path, clusterCol)
-    val k = readSwapped(spark, s"$path/reps").count()
+    val k = DirSwap.read(spark, Dirs.sibling(s"$path/reps")).count()
     require(k > 0, s"empty reps table at $path")
     val total = stats.map(_._4).sum
     val share =

@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * No table format is assumed (same design stance as [[AnnLayout]]'s
   * maintenance paths): the table is plain parquet under
   * `path/<partCol>=<v>/`, and the unit of atomicity is one partition
-  * directory, swapped with the package's backup-then-rename
-  * discipline (hidden `.old_<dir>` backups, crash repair on the next
-  * writer's entry — [[AnnLayout.swapDir]]'s contract). A reader
-  * concurrent with a multi-partition merge can observe SOME
+  * directory, swapped by [[DirSwap.swap]] (hidden `.old_<dir>`
+  * backups, [[DirSwap.repairPartitions]] on the next writer's entry).
+  * A reader concurrent with a multi-partition merge can observe SOME
   * partitions new and others old; each is individually consistent
   * (the merge is per-partition independent by the partition-key
   * contract below). A pipeline that needs all-or-nothing visibility
@@ -99,34 +98,6 @@ object CowTable {
           "the partition key upstream")
     }
 
-  /** Finish any partition swap a crashed [[merge]] left half-done —
-    * the [[AnnLayout.repairPartitionSwaps]] rule over this table's
-    * root: restore `.old_<dir>` if its partition is missing, drop it
-    * if the swap committed. Also clears a leftover staging root (a
-    * crashed merge's stage is garbage — the live table was never
-    * touched before the swap loop, and any partition the loop DID
-    * swap is already consistent).
-    */
-  private[graft] def repair(spark: SparkSession, path: String,
-      partCol: String): Unit = {
-    val root = new Path(path)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(".old_")) {
-        val target = new Path(root, name.stripPrefix(".old_"))
-        if (!fs.exists(target)) {
-          if (!fs.rename(st.getPath, target))
-            sys.error(s"repair rename ${st.getPath} -> $target failed")
-        } else fs.delete(st.getPath, true)
-      }
-      if (st.isDirectory && name == ".merge_stage")
-        fs.delete(st.getPath, true)
-    }
-    ()
-  }
-
   /** Apply one change batch. Returns the partition/row counts the
     * caller's audit log wants. See the object doc for the contract;
     * violations throw BEFORE any write.
@@ -134,7 +105,8 @@ object CowTable {
   def merge(spark: SparkSession, path: String, changes: DataFrame,
       idCol: String, partCol: String,
       maxRecordsPerFile: Long = 5000000L): MergeStats = {
-    repair(spark, path, partCol)
+    val stage = s"$path/.merge_stage"
+    DirSwap.repairPartitions(spark, path, Some(stage))
     // ONE bounded validation aggregate: op domain + per-(id, part)
     // uniqueness + the per-id cross-partition coherence rule + the
     // touched-partition list, all from a change-batch-sized groupBy.
@@ -252,7 +224,6 @@ object CowTable {
           .select(tableCols.map(col): _*)
         Some(if (kept == null) ups else kept.unionByName(ups))
       } else Option(kept)
-    val stage = s"$path/.merge_stage"
     mergedOpt match {
       case Some(m) =>
         m.repartition(col(partCol))
@@ -281,38 +252,46 @@ object CowTable {
     // ObservationManager behavior a different version need not share.
     // The staged write has already executed by here, so the listener
     // either fires within a beat or never will: wait a bounded
-    // moment on a daemon thread, then fall back to the exact probe
+    // moment ([[observedDels]]), then fall back to the exact probe
     // job. Normal path cost: zero (the metric is already complete).
     val deletedRows =
       if (hitObs == null) 0L
-      else {
-        import scala.concurrent.{Await, Future, TimeoutException}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val observed =
-          try Await.result(Future(hitObs.get), 10.seconds).get("dels")
-          catch { case _: TimeoutException => None }
-        observed match {
-          case Some(v) => v.asInstanceOf[Long]
-          case None =>
-            live.select(col(partCol), col(idCol))
-              .join(broadcast(changes.select(col(partCol), col(idCol),
-                col("op"))), Seq(partCol, idCol))
-              .agg(coalesce(sum(when(col("op") === "delete", 1L)
-                .otherwise(0L)), lit(0L))).head().getLong(0)
-        }
-      }
+      else observedDels(hitObs, 10000L).getOrElse(
+        live.select(col(partCol), col(idCol))
+          .join(broadcast(changes.select(col(partCol), col(idCol),
+            col("op"))), Seq(partCol, idCol))
+          .agg(coalesce(sum(when(col("op") === "delete", 1L)
+            .otherwise(0L)), lit(0L))).head().getLong(0))
     touched.foreach { v =>
       val staged = new Path(s"$stage/$partCol=$v")
       // a partition whose rows were all deleted writes no staged dir;
       // install an EMPTY directory so the outcome is a present-but-
       // empty partition, never an ambiguous missing one
       if (!fs.exists(staged)) fs.mkdirs(staged)
-      AnnLayout.swapDir(spark, staged.toString, s"$path/$partCol=$v",
-        backup = s"$path/.old_$partCol=$v")
+      DirSwap.swap(spark, DirSwap.Dirs(staged.toString,
+        s"$path/$partCol=$v", s"$path/.old_$partCol=$v"))
     }
     fs.delete(new Path(stage), true)
     MergeStats(touched.length, deletedRows, audit.getLong(4))
+  }
+
+  /** The `dels` metric of `obs`, or None when it does not report
+    * within `timeoutMs`. The wait runs on its own daemon thread,
+    * interrupted on timeout, so a listener event that never arrives
+    * strands no thread and blocks no shared pool's worker.
+    */
+  private[graft] def observedDels(obs: org.apache.spark.sql.Observation,
+      timeoutMs: Long): Option[Long] = {
+    val got = new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
+    val waiter = new Thread(() =>
+      try got.set(obs.get.get("dels").map(_.asInstanceOf[Long]))
+      catch { case _: Exception => () }, // interrupted or failed: probe
+      "cow-merge-observation")
+    waiter.setDaemon(true)
+    waiter.start()
+    waiter.join(timeoutMs)
+    waiter.interrupt()
+    got.get
   }
 
   // ---- merge-on-read deletes (tombstones) -------------------------

@@ -6,16 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
 
-/** Epoch-directory publication for paired at-rest artifacts — the
-  * single-pointer design [[AnnLayout.maintainTrained]]'s docstring
-  * names as the way to close its last reader window.
-  *
-  * The flat layout publishes a retrain with TWO directory swaps
-  * (`corpus`, then `reps`); [[AnnLayout.repairTrainedSwap]] makes
-  * crashes safe, but a CONCURRENT reader inside the two renames can
-  * still observe the new corpus against the old reps (recall loss,
-  * never wrong rows). Here a version of the whole pair lives under
-  * one epoch directory:
+/** Epoch-directory publication for paired at-rest artifacts. A
+  * retrain replaces the corpus AND its reps codebook together; two
+  * back-to-back directory swaps would let a CONCURRENT reader inside
+  * the renames observe the new corpus against the old reps (recall
+  * loss, never wrong rows), and would need a paired three-state crash
+  * repair. Here a version of the whole pair lives under one epoch
+  * directory:
   *
   * {{{
   * root/epochs/e3/corpus/...    root/epochs/e3/reps/...
@@ -29,19 +26,19 @@ import graft.ops.Similarity
   * file CREATE (the marker), which a reader either sees or doesn't.
   * Every resolution is a consistent pair by construction — the
   * marker is written only after both artifacts are fully on disk —
-  * so the flat layout's cross-artifact window does not exist at all,
-  * and no repair logic is needed for readers (an unmarked epoch is
-  * simply invisible; the writer deletes it on its next entry).
+  * so no cross-artifact window exists at all, and no repair logic is
+  * needed for readers (an unmarked epoch is simply invisible; the
+  * writer deletes it on its next entry).
   *
-  * Cost accounting (why this is cost-NEUTRAL versus the flat
-  * layout, not the naive "doubles the footprint"): a retrain already
-  * writes a complete second copy (`corpus.stage` + `reps.stage`)
-  * before swapping, so peak at-rest bytes during maintenance are
-  * identical; the epoch store additionally RETAINS `retain`
-  * previous epochs after publish (default 1) for in-flight readers —
-  * that retention is the one real cost over the flat layout, and it
-  * is the same snapshot-retention contract every table format
-  * (Iceberg/Delta snapshot expiry) charges for the same guarantee.
+  * Cost accounting (why this is cost-NEUTRAL versus staged swaps,
+  * not the naive "doubles the footprint"): any crash-safe retrain
+  * writes a complete second copy of the pair before installing it,
+  * so peak at-rest bytes during maintenance are identical; the epoch
+  * store additionally RETAINS `retain` previous epochs after publish
+  * (default 1) for in-flight readers — that retention is the one real
+  * cost, and it is the same snapshot-retention contract every table
+  * format (Iceberg/Delta snapshot expiry) charges for the same
+  * guarantee.
   *
   * Contracts carried over unchanged from [[AnnLayout]]: single
   * writer; a reader's query lifetime must be shorter than `retain`
@@ -89,9 +86,8 @@ object EpochLayout {
 
   /** The current epoch's directory — highest-numbered COMPLETE
     * epoch — or None before the first publish. Mutation-free: safe
-    * under a concurrent writer (the analogue of
-    * [[AnnLayout.readSwapped]], except nothing can ever need
-    * falling back from).
+    * under a concurrent writer (the analogue of [[DirSwap.read]],
+    * except nothing can ever need falling back from).
     */
   def current(spark: SparkSession, root: String): Option[String] =
     epochs(spark, root).filter(e => isComplete(spark, e._2))
@@ -114,9 +110,8 @@ object EpochLayout {
     * Writer-entry repair: any UNMARKED epoch directory is a crashed
     * previous build and is deleted first — readers never saw it, so
     * this is pure garbage collection, with no roll-forward/roll-back
-    * case analysis to get right (contrast
-    * [[AnnLayout.repairTrainedSwap]]'s three-state repair; the
-    * marker-only protocol has one state: complete or garbage).
+    * case analysis to get right (the marker-only protocol has one
+    * state: complete or garbage).
     */
   def publish(spark: SparkSession, root: String, retain: Int = 1)
       (build: String => Unit): String = {
@@ -162,17 +157,32 @@ object EpochLayout {
     AnnLayout.knnIvf(spark, currentOrFail(spark, root), queries, k,
       nprobe)
 
-  /** The intake loop against the epoch store —
-    * [[AnnLayout.maintainTrained]]'s policy (same gates, same
-    * measured thresholds) with the retrain re-targeted at a new
-    * epoch:
+  /** The measured retrain policy, wired into the intake loop —
+    * the production entry point: call per epoch, log the returned
+    * stats, and the codebook keeps itself fit without a second corpus
+    * pass (the gate inputs ride the append's own assignment).
     *  - the batch APPENDS into the CURRENT epoch in place (via
     *    [[AnnLayout.appendTrainedWithStats]] — reps untouched, so no
     *    pair consistency is at stake);
-    *  - when the crowding gate fires, the rebuilt corpus+reps are
-    *    written into the next epoch directory and published with the
-    *    marker create. No staging siblings, no paired swap, no
-    *    repair cases: the build target is invisible until complete.
+    *  - WARN when the batch's assignment-cosine p50 falls under
+    *    `warnCosP50` (default 0.7 — drift is visible but recall is
+    *    still intact; plan a retrain);
+    *  - RETRAIN when the batch's top-cell share exceeds
+    *    `retrainShareFactor / k` (default 3/k — the measured knee
+    *    where crowding starts inflating probed bytes; PERF.md
+    *    round-11 "frozen-codebook drift"). k is read from the current
+    *    epoch's reps, so the threshold always matches the codebook
+    *    actually installed.
+    * The retrain is a full [[AnnLayout.trainIvf]] rebuild over the
+    * UNIONED corpus (which already includes this batch — the append
+    * lands first, so no rows are in flight during the rebuild),
+    * written into the next epoch directory and published with the
+    * marker create: invisible until complete, so there are no repair
+    * cases. `kppSeeds` seeds the rebuild with k-means‖
+    * ([[Similarity.kmeansParInit]], 3 bounded corpus passes extra):
+    * the retrain fires exactly when the corpus CROWDS, the regime
+    * where first-k-ids seeds most likely all land in the crowded
+    * region (PERF.md round-12 kpp_seeding).
     */
   def maintainTrained(newVecs: DataFrame, root: String, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",

@@ -42,26 +42,16 @@ object FrozenStore {
   }
 
   /** A DataFrame-shaped artifact (weight tables, LM ratio tables):
-    * first call builds and publishes (write to `<name>.stage`, then
-    * one atomic rename — a crashed build leaves only a stage dir
-    * that the next call overwrites); every call returns a reader
-    * over the published parquet, so consumers exercise the true
+    * first call builds and publishes it through [[frozenPath]] (an
+    * overwrite-mode write, so a crashed build's stage is simply
+    * rewritten on retry); every call returns a reader over the
+    * published parquet, so consumers exercise the true
     * read-the-artifact path.
     */
   def frozenDf(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    val path = dfPaths.getOrElseUpdate(key, this.synchronized {
-      val fin = root.resolve(safeName(key))
-      if (!java.nio.file.Files.exists(fin)) {
-        val stage = root.resolve(safeName(key) + ".stage")
-        build.write.mode("overwrite").parquet(stage.toString)
-        java.nio.file.Files.move(stage, fin,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      fin.toString
-    })
-    spark.read.parquet(path)
-  }
+      (build: => DataFrame): DataFrame =
+    spark.read.parquet(
+      frozenPath(key)(dir => build.write.mode("overwrite").parquet(dir)))
 
   /** A driver-sized derived value (a sketch cut, a threshold pair, a
     * collected weight array): memoized per key. At production scale

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.DirSwap
 
 /** Deduplication family for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash. All hashing is md5-based (portable,
@@ -1049,7 +1050,8 @@ object Dedup {
     * O(distinct keys) + at most `compactEvery` triggers of appends:
     * the Redis in-place-SET semantic (cache_service.go:45) realized
     * for index state, exactly as Pipeline.upsertLatest/rebuildLatest
-    * already do for the latest-tick table.
+    * do for the latest-tick table, through the same
+    * [[graft.io.DirSwap]] protocol.
     *
     * `compactWhenFilesOver > 0` is the THRESHOLD policy — the way
     * production log-structured stores actually trigger compaction:
@@ -1086,13 +1088,12 @@ object Dedup {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a compaction may have crashed between its two swap renames
-        // while the stream was down; restore the backup BEFORE this
-        // append recreates the directory — an append-first recreation
-        // would make repairSwap see a live target and strand the
-        // backed-up index (silent truncation). One exists-check per
-        // trigger.
-        graft.io.AnnLayout.repairSwap(batch.sparkSession, indexDir)
+        // a compaction may have crashed mid-swap while the stream was
+        // down; repair BEFORE this append recreates the directory — an
+        // append-first recreation would make the repair see a live
+        // target and strand the backed-up index (silent truncation).
+        // One exists-check per trigger.
+        DirSwap.repair(batch.sparkSession, DirSwap.Dirs.sibling(indexDir))
         if (onBatch == null) batch.write.mode("append").parquet(indexDir)
         else {
           val b = batch.persist()
@@ -1134,14 +1135,13 @@ object Dedup {
     */
   def readFirstOccurrenceIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
-    graft.io.AnnLayout.readSwapped(spark, indexDir)
+    DirSwap.read(spark, DirSwap.Dirs.sibling(indexDir))
       .groupBy("_pd_h").agg(min(col("_pd_first")).as("_pd_first"))
 
   /** MATERIALIZED compaction of a [[firstOccurrenceStreamIndex]]
     * append log: rewrite the log to its compacted form — ONE min row
-    * per `_pd_h`, in `numFiles` files — and swap it into place
-    * (stage-write + directory rename, the rebuildLatest /
-    * AnnLayout.swapDir pattern). Read-equivalence is the same
+    * per `_pd_h`, in `numFiles` files — and swap it into place with
+    * [[graft.io.DirSwap.swap]]. Read-equivalence is the same
     * monotonicity argument as [[readFirstOccurrenceIndex]]: every
     * appended row for a hash is a running min, so min-per-hash is
     * idempotent — compact(compact(L) ∪ M) == compact(L ∪ M) — and a
@@ -1154,13 +1154,14 @@ object Dedup {
     */
   def compactFirstOccurrenceIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, numFiles: Int = 8): Unit = {
-    // a previous compaction may have crashed between its two swap
-    // renames — restore the backup before reading
-    graft.io.AnnLayout.repairSwap(spark, indexDir)
+    // a previous compaction may have crashed mid-swap — repair
+    // before reading
+    val dirs = DirSwap.Dirs.sibling(indexDir)
+    DirSwap.repair(spark, dirs)
     readFirstOccurrenceIndex(spark, indexDir)
       .repartition(numFiles)
-      .write.mode("overwrite").parquet(s"$indexDir.stage")
-    graft.io.AnnLayout.swapDir(spark, s"$indexDir.stage", indexDir)
+      .write.mode("overwrite").parquet(dirs.stage)
+    DirSwap.swap(spark, dirs)
   }
 
   /** Stage 3: tag each paragraph occurrence against the index and

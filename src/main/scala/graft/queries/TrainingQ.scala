@@ -3872,7 +3872,7 @@ object TrainingQ {
     * the index is at-rest data, the trigger work is proportional to
     * arriving queries × probed fraction, which is what makes this
     * the 100 TB online-serving shape (layout maintenance runs
-    * separately via appendTrained/maintainTrained, swap-safe under
+    * separately via appendTrained/EpochLayout.maintainTrained, safe under
     * readers). foreachBatch is the documented Spark route for
     * per-batch top-k against static data; AvailableNow drains the
     * backlog in bounded triggers. Same oracle as q_ann_ivf_trained —
@@ -3915,7 +3915,7 @@ object TrainingQ {
     * `epochs/e<N>/` and "current" is the highest epoch whose
     * `_EPOCH_COMPLETE` marker exists — publishing is one atomic file
     * create, so a reader can never resolve a half-published pair
-    * (the flat layout's two-rename window, closed structurally).
+    * (no window between two directory swaps to close).
     * The probe itself is [[qAnnIvfTrained]]'s probe against the
     * resolved epoch, and MUST answer identically — hence the shared
     * oracle. Crash invisibility, retention GC, and the

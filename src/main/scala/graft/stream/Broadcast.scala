@@ -56,9 +56,10 @@ object Broadcast {
       maxConsecutiveTickFailures: Int = 0,
       compiledMaxBranches: Int = 4): StreamingQuery = {
     val consecutiveFailures = new java.util.concurrent.atomic.AtomicInteger(0)
+    val query = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
     val ticker = spark.readStream.format("rate")
       .option("rowsPerSecond", 1).load()
-    ticker.writeStream
+    val q = ticker.writeStream
       .queryName("graft-broadcast")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(period))
@@ -87,6 +88,10 @@ object Broadcast {
             compiledMaxBranches), batchId)
           consecutiveFailures.set(0)
         } catch {
+          // the query's own stop() cuts a running tick short: it marks
+          // the query terminated, then cancels its jobs and interrupts
+          // this thread. A clean shutdown, not a serve failure.
+          case _: Exception if query.get != null && !query.get.isActive => ()
           case e: Exception =>
             metrics.foreach(_.serveTickFailures.increment())
             val streak = consecutiveFailures.incrementAndGet()
@@ -99,6 +104,8 @@ object Broadcast {
         }
       }
       .start()
+    query.set(q)
+    q
   }
 
   /** The serve-time flatten for a latest table in the ingest

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.Path
+import graft.io.DirSwap
 import graft.ops.{Ingest, Latest}
 
 /** The §3.1 ingest hot path as one Structured Streaming query:
@@ -112,61 +113,45 @@ object Pipeline {
         df.write.format("jdbc").options(j.options).mode("append").save()
     }
 
-  /** Complete an interrupted two-rename swap: if `current` is missing,
-    * promote `stage` when its write completed (_SUCCESS present — a
-    * crash between rename(cur→old) and rename(stage→cur) leaves the
-    * newest state there), else fall back to `old`. Without this, a
-    * crash in that window would silently rebuild latest from the next
-    * batch alone, dropping all prior per-key state.
+  /** The latest table's swap directories under `latestDir`. */
+  private def latestDirs(latestDir: String) =
+    DirSwap.Dirs(s"$latestDir/stage", s"$latestDir/current", s"$latestDir/old")
+
+  /** Keep-last over `rows` (∪ the current table when `withCurrent`),
+    * staged and swapped in through [[DirSwap]]. The entry repair
+    * finishes a swap a crash interrupted — a micro-batch replayed
+    * after the crash then reads the state it would have read — so no
+    * prior per-key state is lost to a crash between the renames. The
+    * read-modify-write is safe because a streaming query runs batches
+    * serially.
     */
-  private[stream] def repairSwap(fs: org.apache.hadoop.fs.FileSystem,
-      latestDir: String): Unit = {
-    val cur = new Path(s"$latestDir/current")
-    if (!fs.exists(cur)) {
-      val stage = new Path(s"$latestDir/stage")
-      val old = new Path(s"$latestDir/old")
-      if (fs.exists(new Path(stage, "_SUCCESS"))) { fs.rename(stage, cur); () }
-      else if (fs.exists(old)) { fs.rename(old, cur); () }
-    }
+  private def writeLatest(spark: SparkSession, rows: DataFrame,
+      latestDir: String, keyCols: Seq[String], orderCols: Seq[String],
+      withCurrent: Boolean): Unit = {
+    val d = latestDirs(latestDir)
+    DirSwap.repair(spark, d)
+    val fs = new Path(latestDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base =
+      if (withCurrent && fs.exists(new Path(d.target)))
+        spark.read.parquet(d.target).unionByName(rows)
+      else rows
+    Latest.keepLastPerKey(base, keyCols, orderCols)
+      .write.mode("overwrite").parquet(d.stage)
+    DirSwap.swap(spark, d)
   }
 
   /** Keep-last upsert (K3): previous latest ∪ batch → argmax per key,
-    * staged then atomically swapped in. Crash-safe: an interrupted
-    * prior swap is repaired before reading previous state.
+    * staged then atomically swapped in; crash-safe (see writeLatest).
     */
   def upsertLatest(spark: SparkSession, batch: DataFrame, latestDir: String,
-      keyCols: Seq[String], orderCols: Seq[String]): Unit = {
-    val fs = new Path(latestDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairSwap(fs, latestDir)
-    val cur = new Path(s"$latestDir/current")
-    val prev =
-      if (fs.exists(cur)) spark.read.parquet(cur.toString).unionByName(batch)
-      else batch
-    val next = Latest.keepLastPerKey(prev, keyCols, orderCols)
-    val stage = new Path(s"$latestDir/stage")
-    next.write.mode("overwrite").parquet(stage.toString)
-    // swap: current → old, stage → current (read-modify-write is safe
-    // because a streaming query runs batches serially)
-    val old = new Path(s"$latestDir/old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) fs.rename(cur, old)
-    fs.rename(stage, cur)
-  }
+      keyCols: Seq[String], orderCols: Seq[String]): Unit =
+    writeLatest(spark, batch, latestDir, keyCols, orderCols, withCurrent = true)
 
-  /** Read the latest-state table, tolerating an interrupted swap:
-    * prefers `current`, falls back to a completed `stage` then `old`
-    * (read-only — the next upsert's repairSwap fixes the layout).
+  /** Read the latest-state table, tolerating an interrupted swap
+    * (read-only — the next upsert's entry repair fixes the layout).
     */
-  def readLatest(spark: SparkSession, latestDir: String): DataFrame = {
-    val fs = new Path(latestDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(s"$latestDir/current")
-    val stage = new Path(s"$latestDir/stage")
-    val pick =
-      if (fs.exists(cur)) cur
-      else if (fs.exists(new Path(stage, "_SUCCESS"))) stage
-      else new Path(s"$latestDir/old")
-    spark.read.parquet(pick.toString)
-  }
+  def readLatest(spark: SparkSession, latestDir: String): DataFrame =
+    DirSwap.read(spark, latestDirs(latestDir))
 
   /** Quarantine location for a failed batch under the append dir. The
     * leading underscore keeps Spark's file index from sweeping it into
@@ -227,21 +212,7 @@ object Pipeline {
     val appended = fromBatch
       .fold(appendedRaw)(b => appendedRaw.filter(col("batch") >= b))
       .drop("batch")
-    val fs = new Path(latestDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairSwap(fs, latestDir)
-    val base =
-      if (includeExisting && fs.exists(new Path(s"$latestDir/current")))
-        appended.unionByName(readLatest(spark, latestDir))
-      else appended
-    val next = Latest.keepLastPerKey(base, keyCols, orderCols)
-    val stage = new Path(s"$latestDir/stage")
-    next.write.mode("overwrite").parquet(stage.toString)
-    val cur = new Path(s"$latestDir/current")
-    val old = new Path(s"$latestDir/old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) fs.rename(cur, old)
-    fs.rename(stage, cur)
-    ()
+    writeLatest(spark, appended, latestDir, keyCols, orderCols, includeExisting)
   }
 
   /** Build and start the ingest query over an already-decoded streaming

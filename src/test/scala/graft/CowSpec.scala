@@ -587,4 +587,25 @@ class CowSpec extends AnyFunSuite {
     assert(got.deleted > 0 && got.upserted > 0, s"$got")
     assert(readAll(t) == readAll(tRef))
   }
+
+  test("timed-out displacement waits strand no thread; the global pool stays usable") {
+    // an Observation that never reports: the shape the merge's bounded
+    // wait exists for
+    val waits = Runtime.getRuntime.availableProcessors + 2
+    (1 to waits).foreach { _ =>
+      assert(CowTable.observedDels(org.apache.spark.sql.Observation(), 20L)
+        .isEmpty)
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    assert(Await.result(Future(42), 10.seconds) == 42)
+    // each timed-out waiter was interrupted and has exited
+    def waiters = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .count(t => t.getName == "cow-merge-observation" && t.isAlive)
+    val deadline = System.currentTimeMillis() + 10000
+    while (waiters > 0 && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    assert(waiters == 0, "timed-out observation waiters still alive")
+  }
 }

@@ -68,8 +68,10 @@ object ScaleProbe {
         // pathGlobFilter contract)
         val stage = s"$out/_stage_$t"
         scaled.coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-          .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+        val part = scala.util.Using.resource(
+            java.nio.file.Files.list(java.nio.file.Paths.get(stage))) {
+          _.filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+        }
         java.nio.file.Files.move(part, outP.resolve(s"$t.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         scala.util.Using.resource(

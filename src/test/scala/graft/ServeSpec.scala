@@ -424,4 +424,20 @@ class ServeSpec extends AnyFunSuite {
     assert(vOf(compiled)("sym1") == "2.0",
       "null-valued rule must pass the raw value through unchanged")
   }
+
+  test("a tick cut short by the query's own stop is not a serve failure") {
+    val (latestDir, configs) = serveFixture()
+    val metrics = new Metrics
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    // the sink blocks until stop() interrupts the tick
+    val q = Broadcast.start(spark, latestDir, configs, tmp("ckptStop"),
+      sink = (_, _) => { entered.countDown(); Thread.sleep(600000L) },
+      period = "100 milliseconds", metrics = Some(metrics),
+      maxConsecutiveTickFailures = 1)
+    try assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    finally q.stop()
+    assert(metrics.serveTickFailures.sum() == 0L)
+    assert(q.exception.isEmpty, s"stop surfaced as a failure: ${q.exception}")
+  }
 }
+
