@@ -214,9 +214,17 @@ object ForgetStore {
     * corpus generation at entry, at the collision probe, and at the
     * serve tail). In-JVM metadata only — nothing persists across
     * processes, and the cached object is a schema, not data.
+    * [[gcBlobs]] evicts a generation's keys when it deletes the
+    * generation, so the cache is bounded by the retained generations.
     */
   private val inferredSchemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
+
+  /** The cached generation keys, for specs. */
+  private[graft] def cachedSchemaKeys: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    inferredSchemas.keySet.asScala.toSet
+  }
 
   private def readInferCached(spark: SparkSession, base: String,
       ds: Seq[String]): DataFrame = {
@@ -551,7 +559,15 @@ object ForgetStore {
     fs.listStatus(blobs).filter(_.isDirectory).foreach { art =>
       fs.listStatus(art.getPath).filter(_.isDirectory).foreach { gen =>
         val rel = s"blobs/${art.getPath.getName}/${gen.getPath.getName}"
-        if (!referenced.contains(rel)) fs.delete(gen.getPath, true)
+        if (!referenced.contains(rel)) {
+          fs.delete(gen.getPath, true)
+          val g = gen.getPath.toString
+          inferredSchemas.keySet.removeIf { k =>
+            val q = new Path(k).makeQualified(fs.getUri,
+              fs.getWorkingDirectory).toString
+            q == g || q.startsWith(g + "/")
+          }
+        }
       }
     }
   }

@@ -41,9 +41,6 @@ final case class SymbolConfig(
     removeFields: Seq[String] = Seq.empty
 )
 
-/** Per-client config: symbol → SymbolConfig (dto/client.go:3-5). */
-final case class ClientConfig(symbols: Map[String, SymbolConfig])
-
 object Schemas {
 
   /** Wire message schema — doubly nested payload (server.go:180-182).

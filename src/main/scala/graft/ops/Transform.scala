@@ -183,115 +183,18 @@ object Transform {
     * `configs` columns: client_id, symbol, rules, renames, removes,
     * overrides. Configs are per-client dimension data — small — so the
     * join is broadcast: the snapshot fans out map-side, no shuffle.
+    * One client-agnostic plan serves any number of clients; zero
+    * configs serve zero rows (the empty cross join).
+    *
+    * Duplicate (client, symbol) rows are malformed — the reference
+    * keys a client's config by symbol — and are normalized to one row
+    * each before the join, so a duplicated config row never doubles a
+    * client's served records.
     */
-  /** Plan-compiled serving variant — the reference's per-client loop
-    * (server.go:106-115) taken literally: configs are collected
-    * driver-side and compiled into literal when-chains, one union
-    * branch per client. Semantically identical to [[serveSnapshot]]
-    * (tested); plan size grows with clients × symbols, so this is the
-    * right choice only for few clients — the interpreter is the scale
-    * path. Kept per SURVEY §7's risk register as the explicit
-    * trade-off pair.
-    */
-  def serveSnapshotCompiled(
-      snapshot: DataFrame,
-      configs: Map[String, graft.model.ClientConfig],
-      symbolCol: String = "symbol",
-      payloadCol: String = "flat"): DataFrame = {
-    val frames = configs.toSeq.sortBy(_._1).map { case (clientId, cfg) =>
-      val transformed = cfg.symbols.toSeq.sortBy(_._1)
-        .foldLeft(col(payloadCol)) { case (acc, (sym, sc)) =>
-          when(col(symbolCol) === sym, applySymbolConfig(col(payloadCol), sc))
-            .otherwise(acc)
-        }
-      snapshot
-        .withColumn("client_id", lit(clientId))
-        .withColumn(payloadCol, transformed)
-    }
-    frames.reduce(_ unionByName _)
-  }
-
-  /** Collect a parsed config table ([[graft.ops.Config.parse]] shape:
-    * client_id, symbol, rules, renames, removes, overrides) into the
-    * typed map [[serveSnapshotCompiled]] consumes. Driver-side by
-    * design — the compiled path only exists for config sets small
-    * enough to inline into a plan, so collecting them is free by the
-    * same argument.
-    */
-  def collectClientConfigs(configs: DataFrame): Map[String, graft.model.ClientConfig] =
-    clientConfigsFromRows(configs.select("client_id", "symbol", "rules",
-      "renames", "removes", "overrides").collect())
-
-  private def clientConfigsFromRows(
-      rows: Array[org.apache.spark.sql.Row]): Map[String, graft.model.ClientConfig] = {
-    import org.apache.spark.sql.Row
-    rows.groupBy(_.getString(0))
-      .map { case (client, rs) =>
-        client -> graft.model.ClientConfig(rs.map { r =>
-          // a rule with a null op or null value is identity in the
-          // interpreter (applyRule's when-chain falls through to the
-          // raw value) — skip it here so the compiled plan agrees
-          // instead of NPE-ing on getDouble
-          val rules = Option(r.getMap[String, Row](2))
-            .map(_.toMap.collect {
-              case (k, v) if !v.isNullAt(0) && !v.isNullAt(1) =>
-                k -> graft.model.ValueRule(v.getString(0), v.getDouble(1))
-            })
-            .getOrElse(Map.empty[String, graft.model.ValueRule])
-          r.getString(1) -> graft.model.SymbolConfig(
-            renameFields = Option(r.getMap[String, String](3))
-              .map(_.toMap).getOrElse(Map.empty),
-            valueRules = rules,
-            overrideFields = Option(r.getMap[String, String](5))
-              .map(_.toMap).getOrElse(Map.empty),
-            removeFields = Option(r.getSeq[String](4)).getOrElse(Seq.empty))
-        }.toMap)
-      }
-  }
-
-  /** Serve-tick entry point that picks the physical strategy FROM THE
-    * CONFIG SHAPE: at or below `maxCompiledBranches` total
-    * (client, symbol) config rows the tick compiles to per-client
-    * literal when-chains ([[serveSnapshotCompiled]] — whole-stage
-    * codegen, no per-row interpreter); above it the interpreted
-    * broadcast-join plan ([[serveSnapshot]]) serves any client count
-    * at a flat plan size. The probe-pinned crossover (Probe
-    * serve_crossover, PERF.md round-7) sets the default: on WARM
-    * plans the compiled tick costs ~0.07 s per branch (CollapseProject
-    * re-inlines the payload expression per when-branch) while the
-    * interpreted tick is flat ~0.4 s regardless of client count, so
-    * the paths cross near 5 branches — compiled is at parity at 4 and
-    * strictly loses beyond. The default compiles only that
-    * measured-safe trivial-config shape. The decision costs ONE
-    * bounded action — `limit(n+1).collect()` — whose rows, when they
-    * fit, directly seed the compiled map (no second read, no window
-    * for the config table to grow between count and collect). Zero
-    * configs take the interpreted path, whose empty cross join
-    * correctly serves zero rows. Duplicate (client, symbol) rows are
-    * malformed per the reference's map-keyed config and are
-    * normalized away first, so both physical paths serve identical
-    * rows regardless of which side of the threshold fires.
-    */
-  def serveSnapshotAuto(snapshot: DataFrame, configs: DataFrame,
-      maxCompiledBranches: Int = 4,
-      symbolCol: String = "symbol", payloadCol: String = "flat"): DataFrame = {
-    val cfg = configs.dropDuplicates("client_id", "symbol")
-    if (maxCompiledBranches <= 0)
-      serveSnapshot(snapshot, cfg, symbolCol, payloadCol)
-    else {
-      val taken = cfg.select("client_id", "symbol", "rules", "renames",
-        "removes", "overrides").limit(maxCompiledBranches + 1).collect()
-      if (taken.nonEmpty && taken.length <= maxCompiledBranches)
-        serveSnapshotCompiled(snapshot, clientConfigsFromRows(taken),
-          symbolCol, payloadCol)
-      else serveSnapshot(snapshot, cfg, symbolCol, payloadCol)
-    }
-  }
-
   def serveSnapshot(snapshot: DataFrame, configs: DataFrame,
       symbolCol: String = "symbol", payloadCol: String = "flat"): DataFrame = {
     val clients = configs.select("client_id").distinct()
-    val cfg = configs
+    val cfg = configs.dropDuplicates("client_id", "symbol")
       .withColumnRenamed("symbol", "_cfg_symbol")
       .withColumnRenamed("client_id", "_cfg_client")
     snapshot
@@ -305,4 +208,11 @@ object Transform {
           col("removes"), col("overrides")))
       .drop("rules", "renames", "removes", "overrides")
   }
+
+  /** Forwarder to [[serveSnapshot]], kept because the benchmark
+    * harness (`perfbench/`, which compiles this tree) calls it.
+    */
+  def serveSnapshotAuto(snapshot: DataFrame, configs: DataFrame,
+      symbolCol: String = "symbol", payloadCol: String = "flat"): DataFrame =
+    serveSnapshot(snapshot, configs, symbolCol, payloadCol)
 }

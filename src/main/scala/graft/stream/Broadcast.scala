@@ -32,8 +32,8 @@ object Broadcast {
     * .normalizeShape()` — no intermediate serve-shaped copy, so a
     * tick picks up whatever the CONCURRENTLY-running ingest query
     * last swapped in. Defaults to identity for pre-shaped caches.
-    */
-  /** `metrics`, when given, counts every skipped tick
+    *
+    * `metrics`, when given, counts every skipped tick
     * (`serve_tick_failures`, surfaced on the ops `/metrics` plane) so
     * a broken serve loop is visible, not silent.
     * `maxConsecutiveTickFailures` distinguishes the benign transient
@@ -53,8 +53,7 @@ object Broadcast {
       registry: Option[Registry] = None,
       shape: DataFrame => DataFrame = identity,
       metrics: Option[Metrics] = None,
-      maxConsecutiveTickFailures: Int = 0,
-      compiledMaxBranches: Int = 4): StreamingQuery = {
+      maxConsecutiveTickFailures: Int = 0): StreamingQuery = {
     val consecutiveFailures = new java.util.concurrent.atomic.AtomicInteger(0)
     val query = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
     val ticker = spark.readStream.format("rate")
@@ -78,14 +77,7 @@ object Broadcast {
             configs.filter(org.apache.spark.sql.functions.col("client_id")
               .isin(ids.map(x => x: Any): _*))
           }
-          // per-tick physical-strategy choice (Transform
-          // .serveSnapshotAuto): a small ACTIVE config set — the
-          // common idle-server case — compiles to codegen'd
-          // when-chains; a large one takes the flat interpreted
-          // broadcast-join plan. compiledMaxBranches = 0 forces the
-          // interpreted path unconditionally.
-          sink(Transform.serveSnapshotAuto(snapshot, active,
-            compiledMaxBranches), batchId)
+          sink(Transform.serveSnapshot(snapshot, active), batchId)
           consecutiveFailures.set(0)
         } catch {
           // the query's own stop() cuts a running tick short: it marks

@@ -355,78 +355,8 @@ object Probe {
       println(s"""{"probe":"serve_snapshot","symbols":$nSyms,"clients":$nClients,""" +
         s""""configs":${nClients * 20},"sec":$tSv,"served_rows":$rSv,""" +
         s""""rows_per_sec":${(rSv / tSv).toLong}}""")
-
-      // The compiled variant of the same tick: per-client when-chains
-      // codegen'd instead of the interpreted rules HOF — the recommended
-      // path when the fan-out outgrows the interpreted tick. Same
-      // clients/symbol coverage, so rows match serve_snapshot above and
-      // the two numbers are directly comparable.
-      val compiledCfgs = (0L until nClients).map { c =>
-        val syms = (0L until nClients * 20)
-          .filter(_ % nClients == c)
-          .map(i => s"S${(i * 997L) % nSyms}" -> graft.model.SymbolConfig(
-            renameFields = Map("ts" -> "t"),
-            valueRules = Map("v" -> graft.model.ValueRule("multiply", 2.0)),
-            overrideFields = Map("src" -> "graft"),
-            removeFields = Seq("drop_me"))).toMap
-        s"C$c" -> graft.model.ClientConfig(syms)
-      }.toMap
-      val (tSc, rSc) = time(
-        graft.ops.Transform.serveSnapshotCompiled(snapshot, compiledCfgs))
-      println(s"""{"probe":"serve_snapshot_compiled","symbols":$nSyms,""" +
-        s""""clients":$nClients,"sec":$tSc,"served_rows":$rSc,""" +
-        s""""rows_per_sec":${(rSc / tSc).toLong}}""")
     }
 
-    if (enabled("serve_crossover")) {
-      // Where does the compiled serve tick stop winning? Both paths
-      // over the same 200k-symbol snapshot at growing config sizes
-      // (total branches = clients × symbols-per-client) — the curve
-      // that pins Transform.serveSnapshotAuto's default threshold.
-      val nSymsX = 200000L
-      val snapX = spark.range(nSymsX).select(
-        concat(lit("S"), col("id")).as("symbol"),
-        map(
-          lit("v"), (pmod(hash(col("id")), lit(10000)) / lit(100.0)).cast("string"),
-          lit("ts"), col("id").cast("string"),
-          lit("drop_me"), lit("x")).as("flat")).persist()
-      snapX.count()
-      // warm both code paths once (plan compilation + codegen JIT) so
-      // the 1-client shape isn't measured cold — the first probe run
-      // showed a spurious compiled "win" that was interpreted-path
-      // session warmup
-      locally {
-        val wCfg = spark.range(4).select(
-          concat(lit("C"), pmod(col("id"), lit(1L))).as("client_id"),
-          concat(lit("S"), pmod(col("id") * 997L, lit(nSymsX))).as("symbol"),
-          map(lit("v"), struct(lit("multiply").as("op"), lit(2.0).as("value"))).as("rules"),
-          map(lit("ts"), lit("t")).as("renames"),
-          array(lit("drop_me")).as("removes"),
-          map(lit("src"), lit("graft")).as("overrides"))
-        graft.ops.Transform.serveSnapshot(snapX, wCfg).count()
-        graft.ops.Transform.serveSnapshotCompiled(snapX,
-          graft.ops.Transform.collectClientConfigs(wCfg)).count()
-      }
-      for ((nCl, spc) <- Seq((1, 4), (1, 20), (2, 10), (4, 16), (8, 16), (16, 16))) {
-        val nCfg = nCl.toLong * spc
-        val cfgDf = spark.range(nCfg).select(
-          concat(lit("C"), pmod(col("id"), lit(nCl.toLong))).as("client_id"),
-          concat(lit("S"), pmod(col("id") * 997L, lit(nSymsX))).as("symbol"),
-          map(lit("v"), struct(lit("multiply").as("op"), lit(2.0).as("value"))).as("rules"),
-          map(lit("ts"), lit("t")).as("renames"),
-          array(lit("drop_me")).as("removes"),
-          map(lit("src"), lit("graft")).as("overrides"))
-        val cfgMap = graft.ops.Transform.collectClientConfigs(cfgDf)
-        val (tI2, rI2) = time(graft.ops.Transform.serveSnapshot(snapX, cfgDf))
-        val (tC2, rC2) = time(
-          graft.ops.Transform.serveSnapshotCompiled(snapX, cfgMap))
-        println(s"""{"probe":"serve_crossover","symbols":$nSymsX,""" +
-          s""""clients":$nCl,"branches":$nCfg,""" +
-          s""""interpreted_sec":$tI2,"compiled_sec":$tC2,""" +
-          s""""interpreted_rows":$rI2,"compiled_rows":$rC2}""")
-      }
-      snapX.unpersist()
-    }
     if (enabled("semdedup")) {
       // SemDeDup at 100× the sf0.1 embedding table: 200k synthetic
       // 64-dim vectors in 256 REAL clusters (each vector = its
@@ -852,10 +782,8 @@ object Probe {
       // FLAT per emitted row as client count grows (output rows =
       // clients x snapshot by the serving semantic, so total time is
       // necessarily linear in clients — what must NOT grow is the
-      // per-row cost or the plan itself, which is what kills the
-      // compiled path at ~0.07 s/branch). 20k-tick snapshot, 100
-      // symbols; 10/100/1000 clients x 4 symbol configs each, all past
-      // the compile cap so every run is the interpreted single plan.
+      // per-row cost or the plan itself). 20k-tick snapshot, 100
+      // symbols; 10/100/1000 clients x 4 symbol configs each.
       val nRec = 20000L
       val snapshot = spark.range(nRec).select(
         concat(lit("sym"), pmod(col("id"), lit(100))).as("symbol"),
@@ -871,7 +799,7 @@ object Probe {
           .withColumn("renames", lit(null).cast("map<string,string>"))
           .withColumn("removes", lit(null).cast("array<string>"))
           .withColumn("overrides", map(lit("src"), col("client_id")))
-        val served = graft.ops.Transform.serveSnapshotAuto(snapshot, cfgDf)
+        val served = graft.ops.Transform.serveSnapshot(snapshot, cfgDf)
         // sum over the PAYLOAD so the interpret expression cannot be
         // pruned by a count (the count()-prunes-the-work trap)
         def run(): Long = served

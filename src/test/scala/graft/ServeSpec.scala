@@ -355,54 +355,40 @@ class ServeSpec extends AnyFunSuite {
     }
   }
 
-  test("serve tick auto-selects compiled vs interpreted by config-branch count") {
+  test("duplicate config rows serve the same rows as the clean table") {
     val (latestDir, configs) = serveFixture()
-    val snapshot = graft.stream.Pipeline.readLatest(spark, latestDir)
+    val snapshot = Pipeline.readLatest(spark, latestDir)
       .select("symbol", "flat")
-    // 1 config row <= threshold: compiled path (a per-client Union of
-    // literal when-chains; no config join in the plan)
-    val small = graft.ops.Transform.serveSnapshotAuto(snapshot, configs,
-      maxCompiledBranches = 64)
-    val smallPlan = small.queryExecution.analyzed.toString
-    assert(smallPlan.contains("Union") || configs.count() == 1,
-      s"small config set should compile; plan:\n$smallPlan")
-    assert(!smallPlan.contains("_cfg_symbol"),
-      s"compiled path must not join the config table; plan:\n$smallPlan")
-    // same row count / same transformed values through both paths
-    val interp = graft.ops.Transform.serveSnapshot(snapshot, configs)
-    def served(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
+    // a multiset, so a doubled record would show
+    def served(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String)] =
       df.collect().map { r =>
-        val m = r.getMap[String, String](r.fieldIndex("flat"))
         (r.getString(r.fieldIndex("client_id")),
-          r.getString(r.fieldIndex("symbol")), m.getOrElse("v", "")) }.toSet
-    assert(served(small) == served(interp))
-    // threshold 0 forces the interpreted broadcast-join plan
-    val forced = graft.ops.Transform.serveSnapshotAuto(snapshot, configs,
-      maxCompiledBranches = 0)
-    assert(forced.queryExecution.analyzed.toString.contains("_cfg_symbol"),
-      "threshold 0 must select the interpreted config-join path")
-    // branch count above threshold: interpreted
-    val big = graft.ops.Transform.serveSnapshotAuto(snapshot, configs,
-      maxCompiledBranches = 64)
-    assert(served(big) == served(interp))
-    // duplicate (client, symbol) rows are malformed and NORMALIZED by
-    // the auto entry point, so the served rows cannot flip with the
-    // threshold side; a self-union must serve the same rows, through
-    // either physical path
+          r.getString(r.fieldIndex("symbol")),
+          r.getMap[String, String](r.fieldIndex("flat")).getOrElse("v", ""))
+      }.toSeq.sorted
+    val clean = served(graft.ops.Transform.serveSnapshot(snapshot, configs))
+    assert(clean == Seq(("alpha", "sym1", "4.0"), ("alpha", "sym2", "3.0")))
+    // duplicate (client, symbol) rows are malformed config: a
+    // self-union serves each record once, directly and in a serve tick
     val dup = configs.unionByName(configs)
-    assert(served(graft.ops.Transform.serveSnapshotAuto(snapshot, dup,
-      maxCompiledBranches = 64)) == served(interp))
-    assert(served(graft.ops.Transform.serveSnapshotAuto(snapshot, dup,
-      maxCompiledBranches = 0)) == served(interp))
+    assert(served(graft.ops.Transform.serveSnapshot(snapshot, dup)) == clean)
+    val tick = scala.concurrent.Promise[Seq[(String, String, String)]]()
+    val q = Broadcast.start(spark, latestDir, dup, tmp("ckptDup"),
+      sink = (df, _) => tick.trySuccess(served(df)),
+      period = "100 milliseconds")
+    try {
+      import scala.concurrent.duration._
+      assert(scala.concurrent.Await.result(tick.future, 60.seconds) == clean)
+    } finally q.stop()
   }
 
-  test("compiled path skips null-valued rules like the interpreter (identity passthrough)") {
+  test("a null-valued rule passes the raw value through (identity)") {
     val (latestDir, _) = serveFixture()
-    val snapshot = graft.stream.Pipeline.readLatest(spark, latestDir)
+    val snapshot = Pipeline.readLatest(spark, latestDir)
       .select("symbol", "flat")
     // value_rules entry with a null value: from_json fills missing
     // struct fields with null; the interpreter passes the raw value
-    // through — the compiled path must agree, not NPE
+    // through instead of failing
     val nullRule = spark.sql(
       """SELECT 'alpha' AS client_id, 'sym1' AS symbol,
            map('v', named_struct('op', 'multiply',
@@ -410,18 +396,12 @@ class ServeSpec extends AnyFunSuite {
            CAST(NULL AS MAP<STRING,STRING>) AS renames,
            CAST(NULL AS ARRAY<STRING>) AS removes,
            CAST(NULL AS MAP<STRING,STRING>) AS overrides""")
-    val compiled = graft.ops.Transform.serveSnapshotAuto(snapshot, nullRule,
-      maxCompiledBranches = 4)
-    assert(compiled.queryExecution.analyzed.toString.contains("Union") ||
-      !compiled.queryExecution.analyzed.toString.contains("_cfg_symbol"))
-    val interp = graft.ops.Transform.serveSnapshot(snapshot, nullRule)
-    def vOf(df: org.apache.spark.sql.DataFrame): Map[String, String] =
-      df.collect().map { r =>
+    val v = graft.ops.Transform.serveSnapshot(snapshot, nullRule)
+      .collect().map { r =>
         r.getString(r.fieldIndex("symbol")) ->
           r.getMap[String, String](r.fieldIndex("flat")).getOrElse("v", "")
       }.toMap
-    assert(vOf(compiled) == vOf(interp))
-    assert(vOf(compiled)("sym1") == "2.0",
+    assert(v == Map("sym1" -> "2.0", "sym2" -> "3.0"),
       "null-valued rule must pass the raw value through unchanged")
   }
 

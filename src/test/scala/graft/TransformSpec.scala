@@ -76,18 +76,10 @@ class TransformSpec extends AnyFunSuite {
       "exchange" -> "FOREX", "bid" -> "1.08"))
   }
 
-  test("compiled per-client serving equals the data-driven interpreter") {
-    import graft.model.ClientConfig
+  test("serveSnapshot: per-(client, symbol) rows equal literal expectations") {
     val snapshot = Seq(("sym1", "10"), ("sym2", "20"), ("sym3", "30"))
       .toDF("symbol", "v")
       .withColumn("flat", map(lit("v"), col("v"))).drop("v")
-    val scalaCfgs = Map(
-      "alpha" -> ClientConfig(Map(
-        "sym1" -> SymbolConfig(valueRules = Map("v" -> ValueRule("multiply", 2)),
-          overrideFields = Map("src" -> "alpha")),
-        "sym2" -> SymbolConfig(renameFields = Map("v" -> "v2")))),
-      "beta" -> ClientConfig(Map(
-        "sym1" -> SymbolConfig(removeFields = Seq("v")))))
     val cfgDf = spark.sql(
       """SELECT * FROM VALUES
           ('alpha', 'sym1', map('v', named_struct('op', 'multiply', 'value', 2.0D)),
@@ -97,45 +89,18 @@ class TransformSpec extends AnyFunSuite {
           ('beta', 'sym1', CAST(NULL AS MAP<STRING,STRUCT<op:STRING,value:DOUBLE>>),
            CAST(NULL AS MAP<STRING,STRING>), array('v'), CAST(NULL AS MAP<STRING,STRING>))
         AS t(client_id, symbol, rules, renames, removes, overrides)""")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("client_id", "symbol", "flat").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getMap[String, String](2).toMap))
-        .sortBy(t => (t._1, t._2)).toSeq
-    val interpreted = canon(Transform.serveSnapshot(snapshot, cfgDf))
-    val compiled = canon(Transform.serveSnapshotCompiled(snapshot, scalaCfgs))
-    assert(compiled == interpreted)
-  }
-
-  test("serveSnapshotAuto: compiled AT the cap, interpreted one past it, identical rows either side") {
-    val snapshot = Seq(("sym1", "10"), ("sym2", "20"))
-      .toDF("symbol", "v")
-      .withColumn("flat", map(lit("v"), col("v"))).drop("v")
-    def cfgDfOf(n: Int) = (0 until n).map(i => (s"c$i", "sym1"))
-      .toDF("client_id", "symbol")
-      .withColumn("rules",
-        lit(null).cast("map<string,struct<op:string,value:double>>"))
-      .withColumn("renames", lit(null).cast("map<string,string>"))
-      .withColumn("removes", lit(null).cast("array<string>"))
-      .withColumn("overrides", map(lit("src"), col("client_id")))
-    // discriminator: the interpreted path fans out through a broadcast
-    // cross (BroadcastNestedLoopJoin); the compiled path is a join-free
-    // union of literal when-chain projections
-    def interpretedPlan(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("client_id", "symbol", "flat").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getMap[String, String](2).toMap))
-        .sortBy(t => (t._1, t._2)).toSeq
-    val atCap = Transform.serveSnapshotAuto(snapshot, cfgDfOf(4))
-    assert(!interpretedPlan(atCap),
-      "exactly maxCompiledBranches rows must take the compiled path")
-    val pastCap = Transform.serveSnapshotAuto(snapshot, cfgDfOf(5))
-    assert(interpretedPlan(pastCap),
-      "cap+1 rows must take the interpreted single-plan path")
-    // decision changes the PLAN, never the rows
-    assert(canon(atCap) == canon(Transform.serveSnapshot(snapshot, cfgDfOf(4))))
-    assert(canon(pastCap) == canon(Transform.serveSnapshotCompiled(snapshot,
-      Transform.collectClientConfigs(cfgDfOf(5)))))
+    val served = Transform.serveSnapshot(snapshot, cfgDf)
+      .select("client_id", "symbol", "flat").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getMap[String, String](2).toMap))
+      .sortBy(t => (t._1, t._2)).toSeq
+    // every client sees every record; unconfigured pairs pass through
+    assert(served == Seq(
+      ("alpha", "sym1", Map("v" -> "20.0", "src" -> "alpha")),
+      ("alpha", "sym2", Map("v2" -> "20")),
+      ("alpha", "sym3", Map("v" -> "30")),
+      ("beta", "sym1", Map.empty[String, String]),
+      ("beta", "sym2", Map("v" -> "20")),
+      ("beta", "sym3", Map("v" -> "30"))))
   }
 
   test("override timestamp=current injects wall-clock millis") {
