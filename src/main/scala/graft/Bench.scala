@@ -36,6 +36,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.SharedCodegen._1, GraftSession.SharedCodegen._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated query filter for focused iteration; the

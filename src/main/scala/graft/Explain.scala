@@ -18,6 +18,7 @@ object Explain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.SharedCodegen._1, GraftSession.SharedCodegen._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))

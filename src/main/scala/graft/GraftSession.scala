@@ -19,7 +19,11 @@ import org.apache.spark.sql.SparkSession
   *    multiple of total executor cores, or let AQE coalesce);
   *  - parquet TIMESTAMP(NANOS) readable (SPARK-40819 legacy flag);
   *  - UTC session timezone (all engine/oracle time arithmetic is
-  *    epoch-millis).
+  *    epoch-millis);
+  *  - per-session artifact isolation off ([[SharedCodegen]]): graft
+  *    adds no session artifacts, and with isolation on every
+  *    streaming query's tasks run in a class loader of their own, so
+  *    each query recompiles the same generated code.
   *
   * Callers chain further config before `getOrCreate()`:
   * {{{
@@ -39,6 +43,22 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", parallelism.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(SharedCodegen._1, SharedCodegen._2)
+
+  /** Per-session artifact isolation off. Spark caches compiled
+    * generated code per (class loader, source); every
+    * `writeStream.start()` runs on a cloned session with a new id, and
+    * with isolation on (the default) executors give each such session
+    * its own class loader, so every new streaming query recompiles the
+    * same classes in Janino and runs them interpreted until the JIT
+    * catches up again. graft never adds artifacts to a session (no
+    * `addArtifact`, no per-session jars), so with isolation off all
+    * queries share the executor's default loader and the JVM-wide
+    * codegen cache hits across queries. Read at session creation —
+    * set it on the builder, not on a running session.
+    */
+  val SharedCodegen: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
 
   /** The default HDFSBackedStateStore keeps every streaming key's state
     * in executor HEAP — fine for bench-scale keyed state, an OOM at

@@ -31,6 +31,7 @@ object StateBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.SharedCodegen._1, GraftSession.SharedCodegen._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

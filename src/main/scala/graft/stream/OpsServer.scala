@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** C5 — the ops HTTP plane: the reference's `/health` 200-OK probe and
   * Prometheus `/metrics` exposition (main.go:47-59, metrics.go:8-34),
@@ -18,7 +19,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * error classes as `graft_errors_total{type="..."}` label variants —
   * the reference's errors_total CounterVec shape — and, when a
   * [[Registry]] is attached, `graft_connected_clients` as the serving
-  * plane's gauge.
+  * plane's gauge. `graft_codegen_compilations_total` is the JVM's
+  * generated-code compile count (Spark's `CodegenMetrics`).
   */
 final class OpsServer(
     metrics: Metrics,
@@ -50,6 +52,10 @@ final class OpsServer(
     counter("graft_queries_failed_total", snap("queries_failed"))
     counter("graft_batches_quarantined_total", snap("batches_quarantined"))
     counter("graft_serve_tick_failures_total", snap("serve_tick_failures"))
+    // Janino compiles of generated code in this JVM, read here and not
+    // counted per record: flat once every running plan's classes are
+    // cached, rising while queries recompile
+    counter("graft_codegen_compilations_total", CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     sb.append("# TYPE graft_errors_total counter\n")
     Seq("unmarshal", "validation", "sink").foreach { t =>
       sb.append(s"""graft_errors_total{type="$t"} ${snap(s"errors_total_$t")}\n""")

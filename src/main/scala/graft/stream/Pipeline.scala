@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
 import org.apache.hadoop.fs.Path
 import graft.io.DirSwap
 import graft.ops.{Ingest, Latest}
@@ -108,10 +109,26 @@ object Pipeline {
   def appendBatch(df: DataFrame, sink: SinkConfig, batchId: Long): Unit =
     sink match {
       case ParquetSink(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+        df.write.options(plainEncoded(df.schema)).mode("overwrite")
+          .parquet(s"$dir/batch=$batchId")
       case j: JdbcSink =>
         df.write.format("jdbc").options(j.options).mode("append").save()
     }
+
+  /** Parquet writer options that keep dictionary encoding off the
+    * append sink's high-cardinality columns: every bigint column and
+    * every map's values (for the ingest schema, `timestamp` and the
+    * payload values). Ticks carry near-distinct values there, so
+    * parquet-mr builds a dictionary, finds it no smaller than the plain
+    * page at the first page check and re-encodes the page plain — the
+    * dictionary hashing is pure CPU. Strings such as `name` and
+    * `exchange`, and the map keys, keep their dictionaries.
+    */
+  private def plainEncoded(schema: StructType): Map[String, String] =
+    schema.fields.collect {
+      case StructField(n, LongType, _, _) => n
+      case StructField(n, _: MapType, _, _) => s"$n.key_value.value"
+    }.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
   /** The latest table's swap directories under `latestDir`. */
   private def latestDirs(latestDir: String) =

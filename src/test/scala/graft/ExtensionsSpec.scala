@@ -1,9 +1,15 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Similarity
+import graft.ops.{Ingest, Similarity}
+import graft.sources.{LogSource, TickSource}
+import graft.stream.Pipeline
 
 /** The SparkSessionExtensions path: graft_dot SQL function + the
   * HOF→native optimizer rewrite. Uses its own session (extensions are
@@ -46,6 +52,45 @@ class ExtensionsSpec extends AnyFunSuite {
       val d = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
         .collect().head.getDouble(0)
       assert(d == 11.0)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("GraftSession: a second identical streaming drain compiles no generated code") {
+    val shared = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = GraftSession.builder(parallelism = 4)
+      .master("local[4]").appName("graft-codegen-test")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      val root = Files.createTempDirectory("codegen").toString
+      val logDir = s"$root/log"
+      (0 until 2).foreach(p => LogSource.append(logDir, p,
+        (0L until 200L).filter(_ % 2 == p).map(TickSource.frame(_, 5))))
+      val dim = s.createDataFrame(Seq(("SYM0", "NYSE"), ("SYM1", "LSE")))
+        .toDF("symbol", "exchange")
+      // each drain is a new streaming query, so a new cloned session
+      def drain(n: Int): Long = {
+        val raw = s.readStream.format("graft-log").option("path", logDir)
+          .option("maxOffsetsPerTrigger", "100").load()
+        Pipeline.start(Ingest.parseWire(raw), dim, s"$root/append$n",
+          s"$root/latest$n", Seq("name"), Seq("timestamp"), "name", "timestamp",
+          s"$root/ckpt$n", trigger = Trigger.AvailableNow(), retries = 1)
+          .awaitTermination()
+        s.read.parquet(s"$root/append$n").count()
+      }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val first = drain(1)
+      val afterFirst = compiles.getCount
+      val second = drain(2)
+      assert(first > 0 && second == first)
+      assert(compiles.getCount - afterFirst == 0,
+        s"${compiles.getCount - afterFirst} classes compiled again by the second drain")
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -309,7 +309,12 @@ class ServeSpec extends AnyFunSuite {
     val registry = new Registry
     registry.connect("alpha"); registry.connect("beta")
     val ops = new OpsServer(metrics, Some(registry))
+    val codegenRe = "graft_codegen_compilations_total (\\d+)".r
+    def compilations(body: String): Long =
+      codegenRe.findFirstMatchIn(body).map(_.group(1).toLong)
+        .getOrElse(fail(s"no graft_codegen_compilations_total line: $body"))
     try {
+      val compiledBefore = compilations(get(ops.boundPort, "/metrics")._2)
       // drive one real streaming batch so the counters are non-zero
       implicit val sqlCtx = spark.sqlContext
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
@@ -330,6 +335,9 @@ class ServeSpec extends AnyFunSuite {
       assert(body.contains("""graft_errors_total{type="unmarshal"}"""))
       assert(body.contains("graft_serve_tick_failures_total"))
       assert(body.contains("graft_connected_clients 2"))
+      // a JVM-wide counter read at scrape time: never decreases
+      assert(body.contains("# TYPE graft_codegen_compilations_total counter"))
+      assert(compilations(body) >= compiledBefore)
       // K5 histogram parity (metrics.go:29-33): bucketed latency
       // exposition with the Prometheus default bounds — _bucket lines
       // cumulative and monotone, +Inf == _count, observations real

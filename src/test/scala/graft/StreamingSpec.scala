@@ -54,6 +54,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 1)
   }
 
+  test("append sink writes bigint columns and map values plain; strings keep their dictionaries") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    // few distinct values in every column, so parquet-mr would keep a
+    // dictionary on each of them unless the sink turns it off
+    val rows = (0 until 400).map(i => (s"S${i % 3}", 1700000000000L + i % 5,
+      Map("bid" -> s"${i % 4}.5", "ask" -> s"${i % 4}.75"), Seq("nse", "mcx")(i % 2)))
+    val df = rows.toDF("name", "timestamp", "payload", "exchange").coalesce(1)
+    val dir = tmp("appendEnc")
+    Pipeline.appendBatch(df, dir, 3L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = new Path(s"$dir/batch=3")
+    val files = out.getFileSystem(conf).listStatus(out).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    val chunks = files.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+      finally reader.close()
+    }
+    def dictionary(column: String): Seq[Boolean] = {
+      val cs = chunks.filter(_.getPath.toDotString == column)
+      assert(cs.nonEmpty, s"no chunk for $column in ${chunks.map(_.getPath.toDotString)}")
+      cs.map(c => c.hasDictionaryPage || c.getEncodings.asScala.exists(_.usesDictionary))
+    }
+    Seq("timestamp", "payload.key_value.value").foreach(c =>
+      assert(dictionary(c).forall(!_), s"$c is dictionary-encoded"))
+    Seq("name", "exchange", "payload.key_value.key").foreach(c =>
+      assert(dictionary(c).forall(identity), s"$c lost its dictionary"))
+    val back = spark.read.parquet(out.toString).collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), r.getMap[String, String](2).toMap, r.getString(3)))
+    assert(back.sortBy(_.toString) == rows.sortBy(_.toString))
+  }
+
   test("JDBC sink option plumbing carries batchsize/isolation/DDL types (K1/K2)") {
     val j = Pipeline.JdbcSink("jdbc:postgresql://db:5432/md", "market_data",
       user = "u", password = "p", batchSize = 500,
