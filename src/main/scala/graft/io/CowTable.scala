@@ -1,8 +1,13 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.BinaryStatistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** Copy-on-write MERGE (upsert + delete) for a Hive-partitioned
   * parquet table — the maintenance operation a 100 TB training
@@ -23,8 +28,14 @@ import org.apache.spark.sql.functions._
   * composes this with [[EpochLayout.publish]] — build the merged
   * table in the invisible epoch directory, publish with the marker.
   *
-  * Change-batch contract (validated in one bounded aggregate before
-  * any write):
+  * Two ways to apply a batch, one contract: [[merge]] rewrites the
+  * touched partitions now (copy-on-write); [[appendChanges]] appends
+  * it to the table's ONE merge-on-read log, which [[readMor]]
+  * resolves and [[compactChangelog]] folds through [[merge]]. A
+  * takedown is a delete-only change batch on either path.
+  *
+  * Change-batch contract (validated by the one [[audit]], a single
+  * bounded aggregate, before any write on either path):
   *  - columns: the table's columns plus `op` (`"upsert"` |
   *    `"delete"`); delete rows may carry nulls in the payload
   *    columns — only (idCol, partCol) are read — and a DELETE-ONLY
@@ -98,50 +109,57 @@ object CowTable {
           "the partition key upstream")
     }
 
-  /** Apply one change batch. Returns the partition/row counts the
-    * caller's audit log wants. See the object doc for the contract;
-    * violations throw BEFORE any write.
+  /** What [[audit]] hands its caller: the upsert count and the
+    * touched partition values (null included), already validated.
     */
-  def merge(spark: SparkSession, path: String, changes: DataFrame,
-      idCol: String, partCol: String,
-      maxRecordsPerFile: Long = 5000000L): MergeStats = {
-    val stage = s"$path/.merge_stage"
-    DirSwap.repairPartitions(spark, path, Some(stage))
-    // ONE bounded validation aggregate: op domain + per-(id, part)
-    // uniqueness + the per-id cross-partition coherence rule + the
-    // touched-partition list, all from a change-batch-sized groupBy.
-    // Grouping by the ID ALONE (round 16) is what lets one job see an
-    // id's changes ACROSS partition values: the contract permits an
-    // id to span partitions only as the atomic-move pair (delete in
-    // the old partition + upsert in the new — key-disjoint ops that
-    // commute physically), so two UPSERTS of one id assert it lives
-    // in two partitions at once and refuse, while a repeated
-    // (id, part) key refuses as before (row count > distinct
-    // partition values for that id).
+  private final case class Audit(upserts: Long, touched: Seq[Any])
+
+  /** The ONE change-batch audit every intake path runs — [[merge]],
+    * [[appendChanges]] and with it every takedown — as ONE bounded
+    * aggregate action: op domain + per-(id, part) uniqueness + the
+    * per-id cross-partition coherence rule + the touched-partition
+    * list, all from a change-batch-sized groupBy, then
+    * [[validatePartitionValues]] on that list. Throws before any
+    * write.
+    *
+    * Grouping by the ID ALONE is what lets one job see an id's changes
+    * ACROSS partition values: the contract permits an id to span
+    * partitions only as the atomic-move pair (delete in the old
+    * partition + upsert in the new — key-disjoint ops that commute
+    * physically), so two UPSERTS of one id assert it lives in two
+    * partitions at once and refuse, while a repeated (id, part) key
+    * refuses too (row count > distinct partition values for that
+    * id).
+    *
+    * The touched-partition list rides the SAME job as the contract
+    * checks: the per-trigger CDC intake loops (q_stream_cow,
+    * q_stream_mor) pay the driver-side job floor once per trigger, so
+    * every fused job is a per-trigger saving. The per-id _ps sets are
+    * tiny, but collecting one set PER ID into the final buffer
+    * (collect_list + flatten) would make that buffer O(change-batch
+    * ids) on one task; instead posexplode the sets (narrow — no extra
+    * exchange) and union with collect_set, whose buffer is bounded by
+    * partition-KEY cardinality. The scalar sums ride the same
+    * aggregate, gated to each id's first exploded row (_i null for an
+    * all-null-partition id, else 0) so every id contributes exactly
+    * once. Nulls are counted separately since collect_set drops them;
+    * an id's distinct partition count is its set's size plus that
+    * null flag, so the audit holds no distinct aggregate (whose
+    * rewrite would add a shuffle stage, a job under AQE, per call).
+    */
+  private def audit(changes: DataFrame, idCol: String,
+      partCol: String): Audit = {
     val perId = changes.groupBy(col(idCol))
       .agg(count(lit(1)).as("_n"),
-        (count_distinct(col(partCol)) +
-          max(when(col(partCol).isNull, 1).otherwise(0))).as("_np"),
+        max(when(col(partCol).isNull, 1).otherwise(0)).as("_null"),
         sum(when(col("op") === "delete", 1).otherwise(0)).as("_d"),
         sum(when(col("op") === "upsert", 1).otherwise(0)).as("_u"),
         collect_set(col(partCol)).as("_ps"))
-    // the touched-partition list rides the SAME job as the contract
-    // audit: the per-trigger CDC intake loop (q_stream_cow) pays
-    // merge's driver-side job floor once per trigger, so every fused
-    // validation job is a per-trigger saving. The per-id _ps sets are
-    // tiny, but collecting one set PER ID into the final buffer
-    // (collect_list + flatten) would make that buffer O(change-batch
-    // ids) on one task; instead posexplode the sets (narrow — no
-    // extra exchange) and union with collect_set, whose buffer is
-    // bounded by partition-KEY cardinality. The scalar sums ride the
-    // same aggregate, gated to each id's first exploded row (_i null
-    // for an all-null-partition id, else 0) so every id contributes
-    // exactly once. Nulls are counted separately since collect_set
-    // drops them.
     val _first = col("_i").isNull || col("_i") === 0
-    val audit = perId
-      .select(col("_n"), col("_np"), col("_d"), col("_u"),
-        size(col("_ps")).as("_sz"),
+    val a = perId
+      .select(col("_n"), col("_null"), col("_d"), col("_u"),
+        // distinct partition values of the id, null counted as one
+        (size(col("_ps")) + col("_null")).as("_np"),
         posexplode_outer(col("_ps")).as(Seq("_i", "_part")))
       .agg(
         coalesce(sum(when(_first, col("_n")).otherwise(0L)), lit(0L))
@@ -155,24 +173,37 @@ object CowTable {
         coalesce(sum(when(_first, col("_u")).otherwise(0L)), lit(0L))
           .as("ups"),
         collect_set(col("_part")).as("parts"),
-        coalesce(sum(when(_first && col("_np") > col("_sz"), 1)
-          .otherwise(0)), lit(0L)).as("nullParts")).head()
-    require(audit.getLong(1) == 0,
-      s"${audit.getLong(1)} ids carry more than one change for one " +
+        coalesce(sum(when(_first, col("_null")).otherwise(0)), lit(0L))
+          .as("nullParts")).head()
+    require(a.getLong(1) == 0,
+      s"${a.getLong(1)} ids carry more than one change for one " +
         s"$partCol value in this batch — order within a batch is " +
         "undefined; sequence them across batches")
-    require(audit.getLong(2) == 0,
-      s"${audit.getLong(2)} ids are upserted under more than one " +
+    require(a.getLong(2) == 0,
+      s"${a.getLong(2)} ids are upserted under more than one " +
         s"$partCol value in this batch — an id lives in exactly one " +
         "partition; a move is delete (old partition) + upsert (new)")
-    require(audit.getLong(3) + audit.getLong(4) == audit.getLong(0),
+    require(a.getLong(3) + a.getLong(4) == a.getLong(0),
       "changes.op must be exactly 'upsert' or 'delete'")
-    val touched: Array[Any] =
-      ((if (audit.getLong(6) > 0) Seq(null) else Nil) ++
-        audit.getSeq[Any](5)).toArray
+    val touched = (if (a.getLong(6) > 0) Seq(null) else Nil) ++
+      a.getSeq[Any](5)
+    validatePartitionValues(touched)
+    Audit(a.getLong(4), touched)
+  }
+
+  /** Apply one change batch. Returns the partition/row counts the
+    * caller's audit log wants. See the object doc for the contract;
+    * violations throw BEFORE any write.
+    */
+  def merge(spark: SparkSession, path: String, changes: DataFrame,
+      idCol: String, partCol: String,
+      maxRecordsPerFile: Long = 5000000L): MergeStats = {
+    val stage = s"$path/.merge_stage"
+    DirSwap.repairPartitions(spark, path, Some(stage))
+    val checked = audit(changes, idCol, partCol)
+    val touched = checked.touched
     if (touched.isEmpty)
       return MergeStats(0, 0L, 0L)
-    validatePartitionValues(touched.toIndexedSeq)
     val fs = fsOf(spark, path)
     // a partition emptied by a previous delete-all is present but
     // holds no parquet files — reading it would defeat schema
@@ -219,7 +250,7 @@ object CowTable {
     // columns at all — only (idCol, partCol, op) are read, so a
     // minimal takedown DataFrame is a valid change batch
     val mergedOpt =
-      if (audit.getLong(4) > 0L) {
+      if (checked.upserts > 0L) {
         val ups = changes.filter(col("op") === "upsert")
           .select(tableCols.map(col): _*)
         Some(if (kept == null) ups else kept.unionByName(ups))
@@ -272,7 +303,7 @@ object CowTable {
         s"$path/$partCol=$v", s"$path/.old_$partCol=$v"))
     }
     fs.delete(new Path(stage), true)
-    MergeStats(touched.length, deletedRows, audit.getLong(4))
+    MergeStats(touched.length, deletedRows, checked.upserts)
   }
 
   /** The `dels` metric of `obs`, or None when it does not report
@@ -294,26 +325,40 @@ object CowTable {
     got.get
   }
 
-  // ---- merge-on-read deletes (tombstones) -------------------------
+  // ---- merge-on-read: the changelog -------------------------------
   //
-  // [[merge]] is copy-on-write: a delete pays a rewrite of its whole
+  // [[merge]] is copy-on-write: a change pays a rewrite of its whole
   // partition NOW and readers pay nothing. The other end of the
-  // classic trade-off is merge-on-read: a delete appends a TOMBSTONE
-  // in O(batch) regardless of partition size, and every read pays a
-  // bounded anti-join until [[compactTombstones]] folds the
-  // tombstones into the base files through the same copy-on-write
-  // swap. Use MOR when takedown latency matters more than read
-  // latency (compliance clocks), COW when reads dominate; the read
-  // tax and delete-latency gap are measured in Probe cow_tombstone.
+  // classic trade-off is merge-on-read: every change batch appends to
+  // a CHANGELOG in O(batch) regardless of partition size, stamped
+  // with a monotone sequence number; reads resolve latest-wins per
+  // key ([[readMor]]) and [[compactChangelog]] folds the resolved set
+  // through [[merge]]'s copy-on-write swap. Use MOR when change
+  // latency matters more than read latency (a takedown's compliance
+  // clock), COW when reads dominate; Probe cow_tombstone measures the
+  // split. Same batch contract as merge, checked by the same
+  // [[audit]] (≤1 change per key PER BATCH — revising an id across
+  // batches is the point of the log; the stamp orders them). A
+  // takedown is a DELETE-ONLY batch, which may carry just
+  // (idCol, partCol, op); repeating it is idempotent at read and at
+  // compaction.
   //
-  // Contract: tombstones mask (partCol, idCol) pairs until
-  // compaction. BETWEEN compactions the table is delete-only for the
-  // masked ids — re-upserting a tombstoned id via [[merge]] would
-  // write a row an old tombstone still hides; run
-  // [[compactTombstones]] first. Tombstone appends are idempotent
-  // (duplicates are deduped at read and compaction).
-
-  private def tombDir(path: String) = s"$path/.tombstones"
+  // At-rest layout: each batch is ONE directory `cseq=<N>` under
+  // `.changelog`, installed by a single atomic rename from a hidden
+  // stage. That one decision buys three properties:
+  //  - the next sequence number is a DIRECTORY LISTING (O(outstanding
+  //    batches) metadata, no data read), and two racing writers
+  //    serialize on the rename — the loser's rename fails against the
+  //    non-empty installed directory and retries at N+1, so every
+  //    batch gets a unique stamp (CowSpec runs the race);
+  //  - readers never observe a half-written batch: before the rename
+  //    the batch is invisible (dot-prefixed stage), after it the
+  //    batch is complete — a crash leaves only stage garbage, swept
+  //    at the next compaction;
+  //  - per-batch schemas may legitimately differ (a delete-only batch
+  //    may omit payload columns), so every changelog read takes the
+  //    union of ALL batches' footer schemas ([[readLog]]) instead of
+  //    trusting one sampled footer.
 
   /** Total committed parquet bytes under a side directory (recursive;
     * staging and hidden names excluded) — the cheap, exact signal for
@@ -351,102 +396,6 @@ object CowTable {
     if (thr > 0 && onDiskBytes <= thr / 2) broadcast(df) else df
   }
 
-  /** Does this side-directory hold any COMMITTED parquet file? A
-    * crashed append can leave the directory existing with only
-    * Spark's `_temporary` staging inside — `spark.read.parquet` on
-    * that throws at schema inference, so every tombstone/changelog
-    * read and the next writer's sequence probe must treat such a
-    * directory as ABSENT, not fail (CowSpec pins it).
-    */
-  private def hasCommitted(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, dir)
-    fs.exists(p) && fs.listStatus(p).exists(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** O(batch) delete: append the (partCol, idCol) pairs as a
-    * tombstone file. No table partition is touched — the base files'
-    * bytes are exactly as before (CowSpec pins it). A crash mid-
-    * append leaves only Spark's `_temporary` staging, which readers
-    * ignore.
-    */
-  def deleteTombstone(spark: SparkSession, path: String,
-      dels: DataFrame, idCol: String, partCol: String): Unit = {
-    dels.select(col(partCol), col(idCol))
-      .coalesce(1) // takedown batches are bounded by contract
-      .write.mode("append").parquet(tombDir(path))
-    ()
-  }
-
-  /** Read the table with tombstones applied — the merge-on-read
-    * path: base scan anti-joined against the (broadcast, deduped)
-    * tombstone set. The tax is one broadcast hash anti-join per
-    * read, bounded by tombstones outstanding since the last
-    * compaction.
-    */
-  def read(spark: SparkSession, path: String, idCol: String,
-      partCol: String): DataFrame = {
-    val base = spark.read.option("basePath", path).parquet(path)
-    if (!hasCommitted(spark, tombDir(path))) base
-    else base.join(
-      maybeBroadcast(spark.read.parquet(tombDir(path)).distinct(),
-        dirParquetBytes(spark, tombDir(path))),
-      Seq(partCol, idCol), "left_anti")
-  }
-
-  /** Fold outstanding tombstones into the base files (one [[merge]]
-    * delete batch over the distinct tombstone set) and clear the
-    * tombstone directory. Apply-then-clear: a crash between the two
-    * re-applies the tombstones on the next compaction — deleting
-    * already-absent ids is a no-op, so the retry converges.
-    */
-  def compactTombstones(spark: SparkSession, path: String,
-      idCol: String, partCol: String): MergeStats = {
-    val fs = fsOf(spark, path)
-    if (!hasCommitted(spark, tombDir(path))) {
-      // a crashed append's _temporary-only carcass is garbage
-      if (fs.exists(new Path(tombDir(path))))
-        fs.delete(new Path(tombDir(path)), true)
-      return MergeStats(0, 0L, 0L)
-    }
-    val tombs = spark.read.parquet(tombDir(path)).distinct()
-      .withColumn("op", lit("delete"))
-    val stats = merge(spark, path, tombs, idCol, partCol)
-    fs.delete(new Path(tombDir(path)), true)
-    stats
-  }
-
-  // ---- full merge-on-read: the changelog ---------------------------
-  //
-  // [[deleteTombstone]] covers delete-only MOR. The full shape also
-  // defers UPSERTS: every change batch appends to a CHANGELOG with a
-  // monotone sequence stamp, reads resolve latest-wins per key, and
-  // compaction folds the resolved set through [[merge]]. Same batch
-  // contract as merge (op domain, ≤1 change per key PER BATCH —
-  // revising an id across batches is the point of the log; the stamp
-  // orders them). A table uses ONE deferred mode between compactions
-  // — tombstones or the changelog, not both ([[read]] resolves only
-  // tombstones, [[readMor]] only the changelog).
-  //
-  // At-rest layout: each batch is ONE directory `cseq=<N>` under
-  // `.changelog`, installed by a single atomic rename from a hidden
-  // stage. That one decision buys three properties the previous
-  // flat-file append lacked:
-  //  - the next sequence number is a DIRECTORY LISTING (O(outstanding
-  //    batches) metadata, no data read), and two racing writers
-  //    serialize on the rename — the loser's rename fails against the
-  //    non-empty installed directory and retries at N+1, so every
-  //    batch gets a unique stamp (CowSpec runs the race);
-  //  - readers never observe a half-written batch: before the rename
-  //    the batch is invisible (dot-prefixed stage), after it the
-  //    batch is complete — a crash leaves only stage garbage, swept
-  //    at the next compaction;
-  //  - per-batch schemas may legitimately differ (the merge contract
-  //    lets a delete-only batch omit payload columns), so every
-  //    changelog read merges footers across batch directories
-  //    (`mergeSchema`) instead of trusting one sampled footer.
-
   private def logDir(path: String) = s"$path/.changelog"
   private val SeqDirRe = "cseq=([0-9]+)".r
 
@@ -470,80 +419,94 @@ object CowTable {
     }.sorted
   }
 
+  /** Parquet footers of the committed batches, read on the driver —
+    * one open per batch file, no Spark job; outstanding batches are
+    * few by the compaction policy (see [[readMor]]).
+    */
+  private def logFooters(spark: SparkSession, path: String)
+      : Seq[ParquetMetadata] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = fsOf(spark, path)
+    logSeqs(spark, path)
+      .flatMap(n => fs.listStatus(new Path(s"${logDir(path)}/cseq=$n")))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getFooter finally r.close()
+      }
+  }
+
   /** The changelog as one DataFrame with its `_seq` stamp column —
-    * schema-merged across batch directories (delete-only batches may
-    * omit payload columns; they read back as nulls).
+    * at the union of the batches' schemas (delete-only batches may
+    * omit payload columns; they read back as nulls). Every batch is
+    * written by [[appendChanges]] through Spark, which records the
+    * batch's schema in each footer, so the union comes from `footers`
+    * without the Spark job schema inference would run.
     */
   private[graft] def readLog(spark: SparkSession, path: String)
       : DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(logDir(path))
-      .withColumn("_seq", col("cseq").cast("long")).drop("cseq")
+    readLog(spark, path, logFooters(spark, path))
 
-  /** O(batch) deferred merge: validate the batch exactly like
-    * [[merge]] (op domain, per-key uniqueness, AND the partition-key
-    * path contract — refusing here is what guarantees the eventual
-    * compaction cannot), then install it as the next `cseq=<N>`
-    * directory with one atomic rename. No base partition is touched.
+  private def readLog(spark: SparkSession, path: String,
+      footers: Seq[ParquetMetadata]): DataFrame = {
+    val schema = footers.map { f =>
+      val json = f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      require(json != null, s"changelog batch under ${logDir(path)} " +
+        "carries no Spark schema; only appendChanges writes the log")
+      DataType.fromJson(json).asInstanceOf[StructType]
+    }.foldLeft(new StructType()) { (acc, batch) =>
+      batch.fields.foldLeft(acc) { (a, f) =>
+        if (a.fieldNames.contains(f.name)) a else a.add(f)
+      }
+    }.add("cseq", LongType)
+    spark.read.schema(schema).parquet(logDir(path))
+      .withColumnRenamed("cseq", "_seq")
+  }
+
+  /** Footer key under which Spark's parquet writer records the
+    * written rows' schema (as DataType JSON).
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Can the log hold an upsert? Answered from its batches' footers'
+    * `op` statistics ([[logFooters]]), no Spark job: the audit admits
+    * only "delete" and "upsert", so a row group whose `op` maximum is
+    * "delete" holds deletes only. A delete-only log — every takedown
+    * — lets [[readMor]] skip resolving upserts; a footer without
+    * statistics answers yes.
+    */
+  private def logHasUpserts(footers: Seq[ParquetMetadata]): Boolean = {
+    import scala.jdk.CollectionConverters._
+    footers.exists(_.getBlocks.asScala.exists(_.getColumns.asScala
+      .filter(_.getPath.toDotString == "op")
+      .forall(_.getStatistics match {
+        case b: BinaryStatistics if b.hasNonNullValue =>
+          b.genericGetMax.toStringUsingUTF8 != "delete"
+        case _ => true
+      })))
+  }
+
+  /** O(batch) deferred merge: validate the batch through [[merge]]'s
+    * own [[audit]] (op domain, per-key uniqueness, AND the
+    * partition-key path contract — refusing here is what guarantees
+    * the eventual compaction cannot), then install it as the next
+    * `cseq=<N>` directory with one atomic rename. No base partition
+    * is touched. A takedown is a delete-only batch; it may carry just
+    * (idCol, partCol, op).
     */
   def appendChanges(spark: SparkSession, path: String,
       changes: DataFrame, idCol: String, partCol: String): Unit = {
-    // same per-id validation shape as [[merge]]'s (grouping by the id
-    // alone sees cross-partition changes; the move pair stays legal,
-    // dual upserts of one id refuse — see merge's audit comment)
-    val perId = changes.groupBy(col(idCol))
-      .agg(count(lit(1)).as("_n"),
-        (count_distinct(col(partCol)) +
-          max(when(col(partCol).isNull, 1).otherwise(0))).as("_np"),
-        sum(when(col("op") === "upsert", 1).otherwise(0)).as("_u"),
-        sum(when(col("op").isin("delete", "upsert"), 0).otherwise(1))
-          .as("_bad"),
-        collect_set(col(partCol)).as("_ps"))
-    // ONE validation job, not two: the per-trigger CDC intake loop
-    // (q_stream_mor) pays appendChanges' driver-side job floor three
-    // times per run, so the distinct-partition-values pass rides the
-    // same aggregation as the contract audit — via the same bounded
-    // posexplode + collect_set shape as [[merge]]'s (one set per id
-    // in the final buffer would be O(batch ids); collect_set over the
-    // exploded rows is bounded by partition-key cardinality, and the
-    // scalar sums gate to each id's first exploded row). collect_set
-    // drops nulls, so null partition keys are counted separately and
-    // refuse through the same message validatePartitionValues carries.
-    val _first = col("_i").isNull || col("_i") === 0
-    val audit = perId
-      .select(col("_n"), col("_np"), col("_u"), col("_bad"),
-        size(col("_ps")).as("_sz"),
-        posexplode_outer(col("_ps")).as(Seq("_i", "_part")))
-      .agg(
-        coalesce(sum(when(_first && col("_n") > col("_np"), 1)
-          .otherwise(0)), lit(0L)),
-        coalesce(sum(when(_first && col("_u") > 1, 1).otherwise(0)),
-          lit(0L)),
-        coalesce(sum(when(_first, col("_bad")).otherwise(0L)), lit(0L)),
-        collect_set(col("_part")),
-        coalesce(sum(when(_first && col("_np") > col("_sz"), 1)
-          .otherwise(0)), lit(0L)))
-      .head()
-    require(audit.getLong(0) == 0,
-      "more than one change per (id, partition) in this batch — the " +
-        "changelog's sequence stamp orders batches, not rows within one")
-    require(audit.getLong(1) == 0,
-      "ids upserted under more than one partition value in one " +
-        "batch — an id lives in exactly one partition; a move is " +
-        "delete (old partition) + upsert (new)")
-    require(audit.getLong(2) == 0,
-      "changes.op must be exactly 'upsert' or 'delete'")
-    // bounded by batch contract (grouped keys, not rows)
-    validatePartitionValues(
-      (if (audit.getLong(4) > 0) Seq(null) else Nil) ++
-        audit.getSeq[Any](3))
+    // change batches are bounded by contract: ONE task audits and
+    // writes the batch, and on one partition the audit's groupBy
+    // needs no shuffle — one single-stage job
+    val batch = changes.coalesce(1)
+    audit(batch, idCol, partCol)
     require(!changes.columns.contains("cseq"),
       "'cseq' is the changelog's reserved stamp column")
     val fs = fsOf(spark, path)
     val stage = new Path(logDir(path),
       ".stage_" + java.util.UUID.randomUUID().toString)
-    changes
-      .coalesce(1) // change batches are bounded by contract
-      .write.mode("overwrite").parquet(stage.toString)
+    batch.write.mode("overwrite").parquet(stage.toString)
     // CAS install: CLAIM the stamp with an atomic exclusive file
     // create, then rename the stage into the claimed slot. The claim
     // is load-bearing — "rename onto an existing dir fails" is NOT a
@@ -632,9 +595,8 @@ object CowTable {
     * sequence stamp. Bounded by keys outstanding since the last
     * compaction.
     */
-  private def resolvedLog(spark: SparkSession, path: String,
-      idCol: String, partCol: String): DataFrame = {
-    val log = readLog(spark, path)
+  private def resolvedLog(log: DataFrame, idCol: String,
+      partCol: String): DataFrame = {
     val payload = log.columns.filterNot(c => c == partCol || c == idCol)
     log.groupBy(col(partCol), col(idCol))
       .agg(max_by(struct(payload.map(col): _*), col("_seq")).as("_c"))
@@ -646,7 +608,10 @@ object CowTable {
     * base rows whose key carries NO outstanding change, plus the
     * latest upsert row per changed key (a key whose latest change is
     * a delete contributes nothing). The tax is one broadcast
-    * anti-join plus the bounded latest-wins aggregate.
+    * anti-join against the log's keys (duplicates across batches are
+    * harmless to an anti-join, so they need no aggregate) plus the
+    * bounded latest-wins aggregate for the upserts — skipped for a
+    * delete-only log ([[logHasUpserts]]), the takedown case.
     *
     * COMPACTION POLICY (hard recommendation, measured in Probe
     * cow_changelog): the outstanding-key set rides the BROADCAST side
@@ -662,21 +627,26 @@ object CowTable {
   def readMor(spark: SparkSession, path: String, idCol: String,
       partCol: String): DataFrame = {
     val base = spark.read.option("basePath", path).parquet(path)
-    if (logSeqs(spark, path).isEmpty) return base
-    val latest = resolvedLog(spark, path, idCol, partCol)
-    val ups = latest.filter(col("op") === "upsert")
-    // an all-delete changelog carries no payload columns at all;
-    // missing base columns null-fill at the base schema's types
+    val footers = logFooters(spark, path)
+    if (footers.isEmpty) return base
+    val log = readLog(spark, path, footers)
+    val kept = base.join(
+      maybeBroadcast(log.select(col(partCol), col(idCol)),
+        dirParquetBytes(spark, logDir(path))),
+      Seq(partCol, idCol), "left_anti")
+    if (!logHasUpserts(footers)) return kept
+    // the log is bounded by the compaction policy below: ONE task
+    // resolves it, with no shuffle stage
+    val ups = resolvedLog(log.coalesce(1), idCol, partCol)
+      .filter(col("op") === "upsert")
+    // a batch may omit payload columns (the takedown shape); missing
+    // base columns null-fill at the base schema's types
     val upsCols = ups.columns.toSet
     val sel = base.schema.fields.toSeq.map { f =>
       if (upsCols.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
-    base.join(
-        maybeBroadcast(latest.select(col(partCol), col(idCol)),
-          dirParquetBytes(spark, logDir(path))),
-        Seq(partCol, idCol), "left_anti")
-      .unionByName(ups.select(sel: _*))
+    kept.unionByName(ups.select(sel: _*))
   }
 
   /** Fold the resolved changelog through [[merge]] and clear it.
@@ -695,7 +665,7 @@ object CowTable {
       return MergeStats(0, 0L, 0L)
     }
     val stats = merge(spark, path,
-      resolvedLog(spark, path, idCol, partCol).drop("_seq"),
+      resolvedLog(readLog(spark, path), idCol, partCol).drop("_seq"),
       idCol, partCol)
     fs.delete(new Path(logDir(path)), true)
     stats

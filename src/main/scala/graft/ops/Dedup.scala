@@ -1040,18 +1040,17 @@ object Dedup {
     * `onBatch(batchId, rowCount)` (driver-side, optional) lets tests
     * pin the bounded-emission claim per trigger.
     *
-    * `compactEvery > 0` runs [[compactFirstOccurrenceIndex]] every
-    * that many triggers (synchronously, inside foreachBatch, so it
-    * is serialized with the appends — the single-writer contract
-    * holds by construction). Without it the append log grows with
-    * TOTAL UPDATES, not index size, and every read pays a min over
-    * all appends ever — the one unbounded-growth path a long-running
-    * intake stream would have. With it, on-disk state is
-    * O(distinct keys) + at most `compactEvery` triggers of appends:
-    * the Redis in-place-SET semantic (cache_service.go:45) realized
-    * for index state, exactly as Pipeline.upsertLatest/rebuildLatest
-    * do for the latest-tick table, through the same
-    * [[graft.io.DirSwap]] protocol.
+    * Without compaction the append log grows with TOTAL UPDATES, not
+    * index size, and every read pays a min over all appends ever —
+    * the one unbounded-growth path a long-running intake stream would
+    * have. Compaction ([[compactFirstOccurrenceIndex]], run
+    * synchronously inside foreachBatch, so it is serialized with the
+    * appends — the single-writer contract holds by construction)
+    * keeps on-disk state O(distinct keys) + the appends since the
+    * last compaction: the Redis in-place-SET semantic
+    * (cache_service.go:45) realized for index state, exactly as
+    * Pipeline.upsertLatest/rebuildLatest do for the latest-tick
+    * table, through the same [[graft.io.DirSwap]] protocol.
     *
     * `compactWhenFilesOver > 0` is the THRESHOLD policy — the way
     * production log-structured stores actually trigger compaction:
@@ -1059,13 +1058,13 @@ object Dedup {
     * count exceeds the threshold (one cheap driver-side directory
     * listing per trigger — no data read). Under a bursty trigger
     * cadence this does bounded work proportional to accumulated
-    * garbage rather than wall-clock; the two policies compose (either
-    * firing compacts). FLOOR: the threshold is checked AFTER each
-    * trigger's append, and one trigger appends up to
-    * `spark.sql.shuffle.partitions` files — a threshold at or below
-    * that (or below the compacted state's own `compactFiles`) fires
-    * EVERY trigger, i.e. a quiet full-log rewrite per trigger, the
-    * exact O(index)-per-trigger cost the policy exists to avoid.
+    * garbage rather than wall-clock; 0 never compacts. FLOOR: the
+    * threshold is checked AFTER each trigger's append, and one
+    * trigger appends up to `spark.sql.shuffle.partitions` files — a
+    * threshold at or below that (or below the compacted state's own
+    * `compactFiles`) fires EVERY trigger, i.e. a quiet full-log
+    * rewrite per trigger, the exact O(index)-per-trigger cost the
+    * policy exists to avoid.
     * `compactWhenFilesOver > compactFiles` is require()d; sizing it
     * to a few triggers' worth of shuffle-partition files is the
     * caller's contract (the catalog faces use shufflePartitions·4).
@@ -1075,7 +1074,6 @@ object Dedup {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       onBatch: (Long, Long) => Unit = null,
-      compactEvery: Int = 0,
       compactFiles: Int = 8,
       compactWhenFilesOver: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -1102,11 +1100,8 @@ object Dedup {
           b.unpersist()
           ()
         }
-        val cadenceDue = compactEvery > 0 &&
-          batchId % compactEvery == compactEvery - 1
-        val thresholdDue = compactWhenFilesOver > 0 &&
-          indexLogFileCount(batch.sparkSession, indexDir) > compactWhenFilesOver
-        if (cadenceDue || thresholdDue)
+        if (compactWhenFilesOver > 0 &&
+            indexLogFileCount(batch.sparkSession, indexDir) > compactWhenFilesOver)
           compactFirstOccurrenceIndex(batch.sparkSession, indexDir,
             compactFiles)
       }

@@ -195,12 +195,10 @@ object PipelineQ {
         .parquet(dir)
       // THRESHOLD-policy compaction — the production log-structured
       // policy (work proportional to accumulated garbage, one
-      // driver-side listing per trigger), not the compactEvery=1
-      // demonstrate-correctness setting that rewrote the FULL index
-      // every trigger (O(triggers × index) total — round-10's one
-      // bench regression). 4 triggers' worth of appends at 8 state
-      // partitions; StreamingSpec separately pins compactEvery=1
-      // read-equivalence mid-stream.
+      // driver-side listing per trigger); a full index rewrite every
+      // trigger is O(triggers × index) total (round-10's one bench
+      // regression). 4 triggers' worth of appends at 8 state
+      // partitions; StreamingSpec pins read-equivalence mid-stream.
       val q = Dedup.firstOccurrenceStreamIndex(
         Dedup.paragraphTable(paraCorpus(docStream), "doc_id", "text"),
         indexDir = s"$work/index", checkpointDir = s"$work/ckpt",
@@ -790,8 +788,7 @@ object PipelineQ {
     * scale killer no 100 TB plan should contain, and keeping it
     * cataloged meant the bench SFs exercised a plan we would never
     * run. It survives as the TEST-ONLY cross-validation of the
-    * scale-safe sketch face (q_quality_curriculum_sk) — the same
-    * demotion compactEvery=1 got in round 11: PipelineOpsSpec runs
+    * scale-safe sketch face (q_quality_curriculum_sk): PipelineOpsSpec runs
     * both formulations at sf0.001 and pins (a) the exact face's own
     * tercile invariants and (b) band agreement with the sketch face
     * within the sketch's documented rank error. The catalog keeps
@@ -1451,16 +1448,17 @@ object PipelineQ {
       Staged.offer("q_stream_cow", d, instantiateCowStream(s, d)))
   )
 
-  /** MERGE-ON-READ takedown (see [[graft.io.CowTable.deleteTombstone]]
-    * / [[graft.io.CowTable.read]]) — the other end of the maintenance
-    * trade-off q_cow_merge anchors: the delete lands as an O(batch)
-    * tombstone append (NO base partition is rewritten — CowSpec pins
-    * byte-identity even for holding partitions), and the read pays a
-    * bounded broadcast anti-join until compaction folds the
-    * tombstones through the copy-on-write path. The face reads the
-    * table UNCOMPACTED — the novel plan is the masked read itself;
-    * the compaction cycle is CowSpec's pin. Probe cow_tombstone
-    * measures the latency/tax split.
+  /** MERGE-ON-READ takedown (see [[graft.io.CowTable.appendChanges]]
+    * / `readMor`) — the other end of the maintenance trade-off
+    * q_cow_merge anchors: the takedown lands as an O(batch)
+    * delete-only changelog batch `(lang, doc_id, op)`, checked by the
+    * same change-batch audit merge runs (NO base partition is
+    * rewritten — CowSpec pins byte-identity even for holding
+    * partitions), and the read pays a bounded broadcast anti-join
+    * until `compactChangelog` folds the log through the copy-on-write
+    * path. The face reads the table UNCOMPACTED — the novel plan is
+    * the masked read itself; the compaction cycle is CowSpec's pin.
+    * Probe cow_tombstone measures the latency/tax split.
     */
   val qCowTombstone = Q(
     "q_cow_tombstone",
@@ -1470,10 +1468,11 @@ object PipelineQ {
         .createTempDirectory("cow_mor").toString + "/docs"
       graft.io.Bucketing.writePartitioned(docs, t, Seq("lang"),
         Seq("doc_id"))
-      graft.io.CowTable.deleteTombstone(spark, t,
-        docs.filter(col("doc_id") % 37 === 0).select("lang", "doc_id"),
+      graft.io.CowTable.appendChanges(spark, t,
+        docs.filter(col("doc_id") % 37 === 0).select("lang", "doc_id")
+          .withColumn("op", lit("delete")),
         "doc_id", "lang")
-      graft.io.CowTable.read(spark, t, "doc_id", "lang")
+      graft.io.CowTable.readMor(spark, t, "doc_id", "lang")
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
         .orderBy("doc_id")

@@ -166,8 +166,10 @@ class CowSpec extends AnyFunSuite {
   }
 
   test("merge-on-read: tombstone delete touches NO base file; compaction folds and clears") {
+    // a takedown is a delete-only changelog batch in the minimal
+    // (lang, doc_id, op) shape
     val t = freshTable()
-    def allFiles(): Map[String, Long] = {
+    def baseFiles(): Map[String, Long] = {
       def walk(d: java.io.File): Seq[java.io.File] =
         d.listFiles().toSeq.flatMap(f =>
           if (f.isDirectory && !f.getName.startsWith(".")) walk(f)
@@ -175,42 +177,42 @@ class CowSpec extends AnyFunSuite {
       walk(new java.io.File(t)).map(f =>
         f.getAbsolutePath -> f.lastModified()).toMap
     }
-    val before = allFiles()
-    val dels = docs.filter(col("doc_id") % 37 === 0)
-      .select("lang", "doc_id")
-    CowTable.deleteTombstone(spark, t, dels, "doc_id", "lang")
+    def takedown(ids: org.apache.spark.sql.Column) = docs.filter(ids)
+      .select(col("lang"), col("doc_id"), lit("delete").as("op"))
+    val before = baseFiles()
+    val dels = takedown(col("doc_id") % 37 === 0)
+    CowTable.appendChanges(spark, t, dels, "doc_id", "lang")
     // O(batch): every base file byte-identical, even in partitions
     // that HOLD deleted rows — that is the MOR/COW difference
-    assert(allFiles() == before, "a tombstone delete rewrote base files")
+    assert(baseFiles() == before, "a delete-only append rewrote base files")
     val want = docs.filter(col("doc_id") % 37 =!= 0)
       .select(cols.map(col): _*).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
-    def morRead() = CowTable.read(spark, t, "doc_id", "lang")
+    def morRead() = CowTable.readMor(spark, t, "doc_id", "lang")
       .select(cols.map(col): _*).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
     assert(morRead() == want)
     // duplicate appends are idempotent at read
-    CowTable.deleteTombstone(spark, t, dels.limit(3), "doc_id", "lang")
+    CowTable.appendChanges(spark, t, dels.limit(3), "doc_id", "lang")
     assert(morRead() == want)
-    // compaction folds tombstones into the base and clears them
-    val stats = CowTable.compactTombstones(spark, t, "doc_id", "lang")
+    // compaction folds the deletes into the base and clears the log
+    val stats = CowTable.compactChangelog(spark, t, "doc_id", "lang")
     assert(stats.deleted > 0)
-    assert(!new java.io.File(s"$t/.tombstones").exists())
+    assert(!new java.io.File(s"$t/.changelog").exists())
     assert(readAll(t) == want && morRead() == want)
     // re-compacting with nothing outstanding is a no-op
-    assert(CowTable.compactTombstones(spark, t, "doc_id", "lang")
+    assert(CowTable.compactChangelog(spark, t, "doc_id", "lang")
       == CowTable.MergeStats(0, 0L, 0L))
     // crash between apply and clear: re-applying converges (deletes
     // of already-absent ids are no-ops)
-    CowTable.deleteTombstone(spark, t,
-      docs.filter(col("doc_id") % 41 === 3).select("lang", "doc_id"),
+    CowTable.appendChanges(spark, t, takedown(col("doc_id") % 41 === 3),
       "doc_id", "lang")
     CowTable.merge(spark, t,
-      spark.read.parquet(s"$t/.tombstones").distinct()
-        .withColumn("op", lit("delete")), "doc_id", "lang")
-    // tombstone dir still present (the simulated crash) — compact
-    // must converge, not fail
-    CowTable.compactTombstones(spark, t, "doc_id", "lang")
+      CowTable.readLog(spark, t).drop("_seq"), "doc_id", "lang")
+    // log still present (the simulated crash) — compact must
+    // converge, not fail
+    CowTable.compactChangelog(spark, t, "doc_id", "lang")
+    assert(!new java.io.File(s"$t/.changelog").exists())
     assert(readAll(t) == docs
       .filter(col("doc_id") % 37 =!= 0 && col("doc_id") % 41 =!= 3)
       .select(cols.map(col): _*).orderBy("doc_id")
@@ -287,12 +289,13 @@ class CowSpec extends AnyFunSuite {
 
   test("changelog schema boundary: minimal-schema delete-only batch between full-schema batches") {
     // the takedown shape (doc_id, lang, op — no payload columns) as a
-    // CHANGELOG batch, appended next to full-schema batches: the
-    // mergeSchema read must null-fill the missing payload columns and
-    // latest-wins resolution must still order correctly across the
-    // schema boundary — including a minimal-schema delete REVOKING an
-    // earlier full-schema upsert, and a later full-schema upsert
-    // resurrecting a minimally-deleted key
+    // CHANGELOG batch, appended next to full-schema batches: the log
+    // read (at the union of every batch's schema) must null-fill the
+    // missing payload columns and latest-wins resolution must still
+    // order correctly across the schema boundary — including a
+    // minimal-schema delete REVOKING an earlier full-schema upsert,
+    // and a later full-schema upsert resurrecting a minimally-deleted
+    // key
     val t = freshTable()
     val ups = docs.filter(col("doc_id") % 41 === 3)
       .withColumn("text", concat(lit("v2 "), col("text")))
@@ -341,21 +344,16 @@ class CowSpec extends AnyFunSuite {
     val t = freshTable()
     val want = docs.select(cols.map(col): _*).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
-    // simulate a crash mid-append: the side dirs exist but hold only
-    // Spark's staging — no committed parquet footer to infer from
-    new java.io.File(s"$t/.tombstones/_temporary").mkdirs()
+    // simulate a crash mid-append: the log dir exists but holds only
+    // Spark's staging — no committed parquet footer to read
     new java.io.File(s"$t/.changelog/_temporary").mkdirs()
     def morRead(f: => org.apache.spark.sql.DataFrame) =
       f.select(cols.map(col): _*).orderBy("doc_id")
         .collect().map(_.toSeq).toSeq
-    assert(morRead(CowTable.read(spark, t, "doc_id", "lang")) == want)
     assert(morRead(CowTable.readMor(spark, t, "doc_id", "lang")) == want)
     // compaction treats the carcass as garbage and clears it
-    assert(CowTable.compactTombstones(spark, t, "doc_id", "lang")
-      == CowTable.MergeStats(0, 0L, 0L))
     assert(CowTable.compactChangelog(spark, t, "doc_id", "lang")
       == CowTable.MergeStats(0, 0L, 0L))
-    assert(!new java.io.File(s"$t/.tombstones").exists())
     assert(!new java.io.File(s"$t/.changelog").exists())
     // and the next writer starts cleanly at seq 1
     new java.io.File(s"$t/.changelog/_temporary").mkdirs()
@@ -486,7 +484,19 @@ class CowSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       CowTable.merge(spark, t, escapey, "doc_id", "lang")
     }
-    assert(readAll(t) == before, "a refused merge mutated the table")
+    // a TAKEDOWN (minimal delete-only changelog batch) runs the same
+    // audit: a Hive-escaping or null partition value never reaches
+    // the log, where it would make every later compaction throw
+    val takedown = one
+      .select(col("lang"), col("doc_id"), lit("delete").as("op"))
+    Seq(lit("e n"), lit(null).cast("string")).foreach { v =>
+      intercept[IllegalArgumentException] {
+        CowTable.appendChanges(spark, t, takedown.withColumn("lang", v),
+          "doc_id", "lang")
+      }
+    }
+    assert(readAll(t) == before, "a refused batch mutated the table")
+    assert(!new java.io.File(s"$t/.changelog").exists())
   }
 
   test("cross-partition id rules: the atomic move pair is legal; dual upserts of one id refuse") {

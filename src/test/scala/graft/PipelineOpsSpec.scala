@@ -368,8 +368,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // Round 13: q_quality_curriculum left the catalog — its
     // partition-less ntile window is a single-task global sort no
     // 100 TB plan should contain. The exact-rank semantics live on
-    // HERE as the cross-check of q_quality_curriculum_sk (the
-    // compactEvery=1 demotion pattern).
+    // HERE as the cross-check of q_quality_curriculum_sk.
     import org.apache.spark.sql.expressions.Window
     val dir = "/root/testdata/sf0.001"
     val docs = graft.io.Tables.documents(spark, dir)

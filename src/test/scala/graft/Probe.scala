@@ -2271,14 +2271,15 @@ object Probe {
         s""""sec_touch8":$s8,"deleted8":$d8,""" +
         s""""sec_touch32":$s32,"deleted32":$d32}""")
 
-      // MOR vs COW: the same 1000-delete batch as a tombstone append
-      // (no partition rewritten) vs the 32-partition merge above, and
-      // the read tax the tombstones charge until compaction
+      // MOR vs COW: the same 1000-delete batch as a delete-only
+      // changelog append (no partition rewritten) vs the 32-partition
+      // merge above, and the read tax the log charges until compaction
       val t = freshTable()
       val ch = spark.range(20000).select(col("id").as("doc_id"))
         .withColumn("p",
           pmod(hash(col("doc_id")), lit(parts)).cast("int"))
-        .limit(1000).select("p", "doc_id")
+        .limit(1000).select(col("p"), col("doc_id"),
+          lit("delete").as("op"))
       ch.count() // plan warm
       def readSec(f: => Long): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -2289,20 +2290,20 @@ object Probe {
           .getLong(0)
       }
       val tDel0 = System.nanoTime()
-      graft.io.CowTable.deleteTombstone(spark, t, ch, "doc_id", "p")
+      graft.io.CowTable.appendChanges(spark, t, ch, "doc_id", "p")
       val morDelete = (System.nanoTime() - tDel0) / 1e9
       def morReadSec(): Double = readSec {
-        graft.io.CowTable.read(spark, t, "doc_id", "p")
+        graft.io.CowTable.readMor(spark, t, "doc_id", "p")
           .agg(count(lit(1)), sum(length(col("payload")))).head()
           .getLong(0)
       }
       morReadSec() // warm the anti-join codegen
       val morRead = morReadSec()
       val tC0 = System.nanoTime()
-      graft.io.CowTable.compactTombstones(spark, t, "doc_id", "p")
+      graft.io.CowTable.compactChangelog(spark, t, "doc_id", "p")
       val compactSec = (System.nanoTime() - tC0) / 1e9
       val basePost = readSec {
-        graft.io.CowTable.read(spark, t, "doc_id", "p")
+        graft.io.CowTable.readMor(spark, t, "doc_id", "p")
           .agg(count(lit(1)), sum(length(col("payload")))).head()
           .getLong(0)
       }

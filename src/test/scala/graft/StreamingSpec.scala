@@ -855,16 +855,18 @@ class StreamingSpec extends AnyFunSuite {
     import graft.ops.Dedup
     // Same overlapping-paragraph corpus as above, but MANY triggers
     // (one doc per file) so the append log would otherwise accumulate
-    // a file set per trigger. compactEvery=2: compaction interleaves
-    // WITH later appends — the read-equivalence claim is exercised
-    // mid-stream, not just at the end.
+    // a file set per trigger. Threshold 2 (the smallest the
+    // compactFiles = 1 floor admits): every trigger that leaves more
+    // than two files compacts, so compaction interleaves WITH later
+    // appends — the read-equivalence claim is exercised mid-stream,
+    // not just at the end. Threshold 0 never compacts.
     val docs = Seq(
       (1L, "A\nB"), (2L, "A"), (3L, "B\nC"), (4L, "C"),
       (5L, "A\nD"), (6L, "D\nB"), (7L, "E"), (8L, "E\nA"))
-    def runStream(compactEvery: Int): String = {
-      val docsDir = tmp(s"cmpidx_docs$compactEvery")
+    def runStream(threshold: Int): String = {
+      val docsDir = tmp(s"cmpidx_docs$threshold")
       docs.zipWithIndex.foreach { case ((id, text), i) =>
-        val stage = tmp(s"cmpidx_stage${compactEvery}_$i")
+        val stage = tmp(s"cmpidx_stage${threshold}_$i")
         Seq((id, text)).toDF("doc_id", "text").coalesce(1)
           .write.mode("overwrite").parquet(stage)
         val part = new java.io.File(stage).listFiles()
@@ -872,7 +874,7 @@ class StreamingSpec extends AnyFunSuite {
         Files.copy(part.toPath,
           new java.io.File(docsDir, s"file$i.parquet").toPath)
       }
-      val work = tmp(s"cmpidx_work$compactEvery")
+      val work = tmp(s"cmpidx_work$threshold")
       val stream = spark.readStream
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1")
@@ -880,7 +882,7 @@ class StreamingSpec extends AnyFunSuite {
       val q = Dedup.firstOccurrenceStreamIndex(
         Dedup.paragraphTable(stream, "doc_id", "text"),
         indexDir = s"$work/index", checkpointDir = s"$work/ckpt",
-        compactEvery = compactEvery, compactFiles = 1)
+        compactFiles = 1, compactWhenFilesOver = threshold)
       q.awaitTermination()
       s"$work/index"
     }
@@ -891,27 +893,22 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getStruct(1).getLong(0),
           r.getStruct(1).getInt(1))).toSet
 
-    val compacted = runStream(compactEvery = 2)
-    val uncompacted = runStream(compactEvery = 0)
-    val everyTrigger = runStream(compactEvery = 1)
+    val compacted = runStream(threshold = 2)
+    val uncompacted = runStream(threshold = 0)
     val batchIndex = Dedup.firstParagraphOccurrence(
         Dedup.paragraphTable(docs.toDF("doc_id", "text"), "doc_id", "text"))
       .collect().map(r => (r.getString(0), r.getStruct(1).getLong(0),
         r.getStruct(1).getInt(1))).toSet
-    // all three cadences read to the exact batch-built index —
-    // including compactEvery=1 (full rewrite EVERY trigger, the
-    // demonstrate-correctness setting the catalog faces moved off of)
+    // both read to the exact batch-built index
     assert(indexSet(compacted) == batchIndex)
     assert(indexSet(uncompacted) == batchIndex)
-    assert(indexSet(everyTrigger) == batchIndex)
-    assert(parquetFiles(everyTrigger) == 1)
-    // bounded growth: 8 triggers with cadence-2 compaction leave at
-    // most compactFiles + (compactEvery - 1) triggers of appends on
-    // disk; the uncompacted log keeps every trigger's file set
+    // bounded growth: the threshold is checked after every trigger's
+    // append, so the log never ends a trigger above it; the
+    // uncompacted log keeps every trigger's file set
     val nC = parquetFiles(compacted)
     val nU = parquetFiles(uncompacted)
     assert(nU >= 8, s"uncompacted log should hold >= 1 file per trigger, got $nU")
-    assert(nC < nU && nC <= 1 + statePartitionsForTest,
+    assert(nC < nU && nC <= 2,
       s"compacted log not bounded: $nC files vs uncompacted $nU")
     // one more OFFLINE compaction pass is read-idempotent and lands
     // exactly at compactFiles files
@@ -1030,7 +1027,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   // the session's shuffle-partition setting caps one trigger's append
-  // file count in the test above
+  // file count in the threshold-policy test below
   private def statePartitionsForTest: Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 

@@ -1,8 +1,11 @@
 #!/usr/bin/env python3
-"""Catalog-honesty sweep over the public defs in src/main/scala/graft/ops/
-(and functions/, io/, stream/). `override def`s are skipped: the
-framework calls them (listener hooks, Aggregator plumbing), so a
-missing textual reference proves nothing.
+"""Catalog-honesty sweep over the public defs of the whole main tree:
+src/main/scala/graft/ (top level, ops/, functions/, io/, stream/,
+sources/, model/, queries/) and org/apache/spark/sql/graftbridge/.
+`override def`s are skipped: the framework calls them (listener hooks,
+Aggregator plumbing), so a missing textual reference proves nothing.
+`def apply`/`def unapply` are skipped for the same reason: Scala calls
+them through `Name(...)` and pattern matches, never by name.
 
 Pass 1 (orphans): every public def must be referenced from somewhere
 other than its own definition — a query, a spec, another operator,
@@ -30,8 +33,11 @@ import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCAN_DIRS = ["src/main/scala/graft/ops", "src/main/scala/graft/functions",
-             "src/main/scala/graft/io", "src/main/scala/graft/stream"]
+SCAN_DIRS = ["src/main/scala/graft", "src/main/scala/graft/ops",
+             "src/main/scala/graft/functions", "src/main/scala/graft/io",
+             "src/main/scala/graft/stream", "src/main/scala/graft/sources",
+             "src/main/scala/graft/model", "src/main/scala/graft/queries",
+             "src/main/scala/org/apache/spark/sql/graftbridge"]
 PROGRAM_DIRS = ["src/main/scala", "perfbench/src"]
 TEST_DIRS = ["src/test/scala"]
 
@@ -83,7 +89,7 @@ def public_defs():
                         # Aggregator/Encoder plumbing is framework-called
                         if name in ("zero", "reduce", "merge", "finish",
                                     "bufferEncoder", "outputEncoder",
-                                    "main", "apply"):
+                                    "main", "apply", "unapply"):
                             continue
                         out.append((path, i, name))
     return out
@@ -112,7 +118,8 @@ def main():
             test_only.append((path, line, key))
     unlisted = [t for t in test_only if t[2] not in TEST_ONLY_API]
     stale = sorted(set(TEST_ONLY_API) - {t[2] for t in test_only})
-    print(f"scanned {len(defs)} public defs in {'+'.join(SCAN_DIRS)}; "
+    print(f"scanned {len(defs)} public defs in {len(SCAN_DIRS)} main-tree "
+          f"dirs; "
           f"{len(test_only)} test-only, {len(TEST_ONLY_API)} listed")
     if orphans:
         print(f"ORPHANS ({len(orphans)}): public defs with no reference "
