@@ -1,6 +1,78 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.ListenerBus
 object Bench {
+  private final case class Job(id: Int, start: Long, stages: Int,
+    site: String, var end: Long = -1L)
+
+  /** The job chain of one face run, read from scheduler events: jobs,
+    * stages, tasks, shuffle and spill bytes, the task-time tail and the
+    * driver's idle time between jobs. Attached for the floor pass
+    * only, so the timed reps carry no listener; `reset` before a face,
+    * read it after draining the listener bus.
+    */
+  private final class JobChain extends SparkListener {
+    private val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
+    private val taskMs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    private var stages, shuffleRead, shuffleWrite, spill = 0L
+
+    def reset(): Unit = synchronized {
+      jobs.clear(); taskMs.clear()
+      stages = 0L; shuffleRead = 0L; shuffleWrite = 0L; spill = 0L
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      // the result stage is named after the action's callsite
+      val site = (e.stageInfos.sortBy(_.stageId).lastOption.map(_.name) ++
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map("sql " + _)).mkString(" | ")
+      jobs += Job(e.jobId, e.time, e.stageInfos.size, site)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.find(_.id == e.jobId).foreach(_.end = e.time)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      taskMs += Option(e.taskInfo).map(_.duration).getOrElse(0L)
+      Option(e.taskMetrics).foreach { m =>
+        shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        spill += m.diskBytesSpilled
+      }
+    }
+
+    /** Logs one line per job (offset from `t0` in epoch ms, duration,
+      * stages, callsite) to stderr and returns the record's fields
+      * after build/plan/exec.
+      */
+    def record(name: String, t0: Long): Seq[Any] = synchronized {
+      val byStart = jobs.sortBy(_.start)
+      byStart.foreach { j =>
+        val dur = if (j.end >= 0) (j.end - j.start) / 1e3 else -1.0
+        System.err.println(f"[floor] $name job ${j.id}%5d " +
+          f"+${(j.start - t0) / 1e3}%7.3f s ${dur}%7.3f s " +
+          f"stages=${j.stages}%2d ${j.site}")
+      }
+      // idle = the stretches between the first job's start and the
+      // last job's end during which no job ran
+      var idle, lastEnd = 0L
+      byStart.foreach { j =>
+        if (lastEnd > 0 && j.start > lastEnd) idle += j.start - lastEnd
+        lastEnd = math.max(lastEnd, math.max(j.end, j.start))
+      }
+      val sorted = taskMs.sorted
+      val maxTask = sorted.lastOption.getOrElse(0L)
+      val medTask = if (sorted.isEmpty) 0L else sorted(sorted.length / 2)
+      Seq(jobs.size, stages, taskMs.size, shuffleRead, shuffleWrite, spill,
+        maxTask, if (maxTask == 0L) 0.0 else maxTask.toDouble / math.max(medTask, 1L),
+        idle / 1e3)
+    }
+  }
+  private val ChainFields = Seq("jobs", "stages", "tasks",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+    "max_task_ms", "max_task_over_median", "idle_gap_s")
+
   /** 1-minute system load average (-1.0 where unsupported). */
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory
@@ -30,15 +102,8 @@ object Bench {
     val loadStart = loadAvg()
     val jvmsStart = javaProcs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.SharedCodegen._1, GraftSession.SharedCodegen._2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.harnessCpus
+    val spark = GraftSession.harness()
     // optional comma-separated query filter for focused iteration; the
     // driver leaves it unset so round benchmarks always cover everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -129,19 +194,29 @@ object Bench {
     // catalog growth and drift stop contaminating cross-round reads:
     // compare per-query exec medians against the pin; treat
     // build+plan as the catalog-size-proportional overhead line.
-    // Extra runs per query, so it's opt-in and writes its own
-    // artifact (bench_floor.json), never bench_out.json.
+    // After the three phases each row carries the face's job chain
+    // (JobChain: jobs, stages, tasks, shuffle/spill bytes, task tail,
+    // idle gaps), from a listener attached for this pass only; one
+    // line per job goes to stderr. Extra runs per query, so it's
+    // opt-in and writes its own artifact (bench_floor.json), never
+    // bench_out.json.
     if (sys.env.get("SPARK_GRAFT_BENCH_FLOOR").contains("1")) {
-      val floor = names.map { name =>
+      val sc = spark.sparkContext
+      val chain = new JobChain
+      sc.addSparkListener(chain)
+      val floor = try names.map { name =>
         val fn = queries(name)
         try graft.queries.Catalog.prestages.get(name)
           .foreach(_(spark, sfDir))
         catch { case _: Throwable => () }
         // floor measurements tolerate failures like the timed loop
-        // does (-1 sentinel per phase): one broken face must not
+        // does (-1 sentinel per field): one broken face must not
         // abort main before bench_out.json/bench_floor.json are
         // written — the timed artifact is the round's record
         try {
+          ListenerBus.drain(sc)
+          chain.reset()
+          val w0 = System.currentTimeMillis()
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           val t1 = System.nanoTime()
@@ -149,17 +224,21 @@ object Bench {
           val t2 = System.nanoTime()
           force(df)
           val t3 = System.nanoTime()
-          name -> ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+          ListenerBus.drain(sc)
+          name -> (Seq((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9) ++
+            chain.record(name, w0))
         } catch { case t: Throwable =>
           System.err.println(s"[bench] floor($name) failed: $t")
-          name -> ((-1.0, -1.0, -1.0))
+          name -> Seq.fill(3 + ChainFields.size)(-1)
         }
-      }.toMap
-      val fl = floor.map { case (k, (b, p, e)) =>
-        s"\"" + k + s"\":[$b,$p,$e]"
+      } finally sc.removeSparkListener(chain)
+      val fl = floor.map { case (k, row) =>
+        s"\"" + k + "\":" + row.mkString("[", ",", "]")
       }.mkString("{", ",", "}")
+      val fields = (Seq("build", "plan", "exec") ++ ChainFields)
+        .map("\"" + _ + "\"").mkString("[", ",", "]")
       val floorLine =
-        s"""{"metric":"floor","phases":["build","plan","exec"],"per_query":$fl,"sf":"$sfDir"}"""
+        s"""{"metric":"floor","phases":$fields,"per_query":$fl,"sf":"$sfDir"}"""
       println(floorLine)
       // same guard as bench_out.json below: a FILTERED floor run
       // must not clobber the full-record artifact

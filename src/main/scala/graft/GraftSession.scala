@@ -75,9 +75,24 @@ object GraftSession {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** [[builder]] with RocksDB streaming state — the cluster-scale
-    * default for long-running stateful pipelines.
+  /** The one session of every measurement and dump main: Bench,
+    * Verify, and the test-tree Explain, Probe and ScaleProbe. Local
+    * mode on [[harnessCpus]] cores with the shuffle width pinned to
+    * them, UTC, no UI, [[SharedCodegen]], WARN logging. A number
+    * taken by any of them is taken under the benchmark's confs.
     */
-  def streamingBuilder(parallelism: Int): SparkSession.Builder =
-    builder(parallelism).config(RocksDbStateStore._1, RocksDbStateStore._2)
+  def harness(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$harnessCpus]")
+      .config("spark.sql.shuffle.partitions", harnessCpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(SharedCodegen._1, SharedCodegen._2)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Cores of the [[harness]] session: SPARK_GRAFT_CPUS, default 4. */
+  def harnessCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 }

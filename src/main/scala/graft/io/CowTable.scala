@@ -498,15 +498,19 @@ object CowTable {
       changes: DataFrame, idCol: String, partCol: String): Unit = {
     // change batches are bounded by contract: ONE task audits and
     // writes the batch, and on one partition the audit's groupBy
-    // needs no shuffle — one single-stage job
-    val batch = changes.coalesce(1)
-    audit(batch, idCol, partCol)
-    require(!changes.columns.contains("cseq"),
-      "'cseq' is the changelog's reserved stamp column")
+    // needs no shuffle — one single-stage job. Persisted, so the
+    // audit and the stage write share one run of the batch's source
+    // (a takedown filtered from a corpus scan would scan it twice)
+    val batch = changes.coalesce(1).persist()
     val fs = fsOf(spark, path)
     val stage = new Path(logDir(path),
       ".stage_" + java.util.UUID.randomUUID().toString)
-    batch.write.mode("overwrite").parquet(stage.toString)
+    try {
+      audit(batch, idCol, partCol)
+      require(!changes.columns.contains("cseq"),
+        "'cseq' is the changelog's reserved stamp column")
+      batch.write.mode("overwrite").parquet(stage.toString)
+    } finally batch.unpersist()
     // CAS install: CLAIM the stamp with an atomic exclusive file
     // create, then rename the stage into the claimed slot. The claim
     // is load-bearing — "rename onto an existing dir fails" is NOT a

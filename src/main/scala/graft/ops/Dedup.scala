@@ -331,7 +331,6 @@ object Dedup {
     * side computes the full distance and applies the same ≤ k cut —
     * identical surviving pairs and values, no doubles anywhere.
     * Candidate generation is the caller's choice (see
-    * [[editDistanceLengthBandPairs]] for the complete blocking and
     * [[editDistanceLshPairs]] for the signature-based 100 TB path).
     */
   def editDistanceVerify(cand: DataFrame, docs: DataFrame, idCol: String,
@@ -344,41 +343,6 @@ object Dedup {
       .withColumn("dist", levenshtein(col("_edv_ti"), col("_edv_tj"), k))
       .filter(col("dist") >= 0)
       .select(col("i"), col("j"), col("dist").cast("long").as("dist"))
-  }
-
-  /** COMPLETE edit-distance blocking: lev(x, y) ≤ k forces
-    * |len(x) − len(y)| ≤ k, so banding lengths at width k+1 puts every
-    * qualifying pair in the same or adjacent band — probe side emits
-    * bands {b, b+1}, index side emits {b}, and no qualifying pair is
-    * missed. This is the exact-complete counterpart of the LSH
-    * composition below: zero false negatives by construction, but
-    * candidate volume is ruled by the length histogram (a corpus
-    * whose lengths pile into one band degenerates toward all-pairs —
-    * at 100 TB compose a content-signature generator instead).
-    * Measured (PERF.md round-8, `Probe editdist`): 20k same-length
-    * docs → 199,990,000 band candidates (exactly n(n−1)/2) where LSH
-    * admits 1,999 on the same corpus; and on a 1M-doc corpus the LSH
-    * path's candidates track near-dup density (~100k), verified at
-    * ~330 µs/pair.
-    */
-  def editDistanceLengthBandPairs(docs: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    require(k >= 0, "edit-distance bound k must be non-negative")
-    val w = k + 1
-    val t = docs.select(col(idCol).as("doc_id"),
-      length(col(textCol)).as("_len"))
-      .withColumn("_b", floor(col("_len") / w))
-    val probe = t.select(col("doc_id").as("pi"), col("_len").as("_li"),
-      explode(array(col("_b"), col("_b") + 1)).as("_b"))
-    val index = t.select(col("doc_id").as("pj"), col("_len").as("_lj"),
-      col("_b"))
-    val cand = probe.join(index, Seq("_b"))
-      .filter(col("pi") =!= col("pj") &&
-        abs(col("_li") - col("_lj")) <= k)
-      .select(least(col("pi"), col("pj")).as("i"),
-        greatest(col("pi"), col("pj")).as("j"))
-      .distinct()
-    editDistanceVerify(cand, docs, idCol, textCol, k)
   }
 
   /** Edit-distance near-dup pairs over MinHash-LSH candidates: pairs

@@ -129,6 +129,52 @@ class CowSpec extends AnyFunSuite {
     assert(readAll(t) == want)
   }
 
+  test("appendChanges runs its batch's source scan once: the audit and the stage write share it") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val t = freshTable()
+    // the q_cow_tombstone takedown shape: filtered from a corpus scan
+    val takedown = docs.filter(col("doc_id") % 37 === 0)
+      .select(col("lang"), col("doc_id"), lit("delete").as("op"))
+    val docRows = docs.count()
+    // every documents scan node that ran, a cached relation's included;
+    // a node run twice shows twice its rows in its own metric
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cacheBuilder.cachedPlan)
+      case f: FileSourceScanExec
+          if f.relation.location.inputFiles.exists(_.contains("documents")) =>
+        Seq(f)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = seen.synchronized {
+        scans(qe.executedPlan).foreach(seen.add); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      CowTable.appendChanges(spark, t, takedown, "doc_id", "lang")
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val rowsScanned = seen.synchronized {
+      seen.asScala.toSeq.map(_.metrics("numOutputRows").value).sum
+    }
+    assert(rowsScanned == docRows,
+      s"the batch's source was scanned ${rowsScanned.toDouble / docRows} times")
+    assert(CowTable.readMor(spark, t, "doc_id", "lang").count() ==
+      docs.filter(col("doc_id") % 37 =!= 0).count())
+  }
+
   test("all-or-nothing visibility: merge composed under EpochLayout.publish") {
     // the CowTable doc's claim, pinned: per-partition swaps give
     // old-or-new PER PARTITION; wrapping the merged build in an epoch

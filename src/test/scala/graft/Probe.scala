@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Bars, Overlap}
 
@@ -29,15 +29,7 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     // 16 ticks share each ms (exercises the tie-break), value is a
     // deterministic hash, event_id stays inside the TiePack bound
@@ -2238,18 +2230,20 @@ object Probe {
       // touched, not table size.
       val nRows = 4000000L
       val parts = 32
-      def freshTable(): String = {
-        val t = java.nio.file.Files
-          .createTempDirectory("cow_scale").toString + "/t"
-        val df = spark.range(nRows).select(col("id").as("doc_id"),
-          pmod(hash(col("id")), lit(parts)).cast("int").as("p"),
-          sha2(col("id").cast("string"), 256).as("payload"))
-        graft.io.Bucketing.writePartitioned(df, t, Seq("p"),
-          Seq("doc_id"))
-        t
+      // each table is ~0.5 GB on disk: deleted when its block ends
+      def withFreshTable[A](body: String => A): A = {
+        val dir = java.nio.file.Files.createTempDirectory("cow_scale")
+        try {
+          val t = dir.toString + "/t"
+          val df = spark.range(nRows).select(col("id").as("doc_id"),
+            pmod(hash(col("id")), lit(parts)).cast("int").as("p"),
+            sha2(col("id").cast("string"), 256).as("payload"))
+          graft.io.Bucketing.writePartitioned(df, t, Seq("p"),
+            Seq("doc_id"))
+          body(t)
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
       }
-      def run(k: Int): (Double, Long) = {
-        val t = freshTable()
+      def run(k: Int): (Double, Long) = withFreshTable { t =>
         // ids whose hash partition falls in [0, k): the batch touches
         // exactly k of the 32 partitions
         val ch = spark.range(20000).select(col("id").as("doc_id"))
@@ -2274,50 +2268,51 @@ object Probe {
       // MOR vs COW: the same 1000-delete batch as a delete-only
       // changelog append (no partition rewritten) vs the 32-partition
       // merge above, and the read tax the log charges until compaction
-      val t = freshTable()
-      val ch = spark.range(20000).select(col("id").as("doc_id"))
-        .withColumn("p",
-          pmod(hash(col("doc_id")), lit(parts)).cast("int"))
-        .limit(1000).select(col("p"), col("doc_id"),
-          lit("delete").as("op"))
-      ch.count() // plan warm
       def readSec(f: => Long): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
-      val basePre = readSec {
-        spark.read.option("basePath", t).parquet(t)
-          .agg(count(lit(1)), sum(length(col("payload")))).head()
-          .getLong(0)
+      val basePre = withFreshTable { t =>
+        val ch = spark.range(20000).select(col("id").as("doc_id"))
+          .withColumn("p",
+            pmod(hash(col("doc_id")), lit(parts)).cast("int"))
+          .limit(1000).select(col("p"), col("doc_id"),
+            lit("delete").as("op"))
+        ch.count() // plan warm
+        val basePre = readSec {
+          spark.read.option("basePath", t).parquet(t)
+            .agg(count(lit(1)), sum(length(col("payload")))).head()
+            .getLong(0)
+        }
+        val tDel0 = System.nanoTime()
+        graft.io.CowTable.appendChanges(spark, t, ch, "doc_id", "p")
+        val morDelete = (System.nanoTime() - tDel0) / 1e9
+        def morReadSec(): Double = readSec {
+          graft.io.CowTable.readMor(spark, t, "doc_id", "p")
+            .agg(count(lit(1)), sum(length(col("payload")))).head()
+            .getLong(0)
+        }
+        morReadSec() // warm the anti-join codegen
+        val morRead = morReadSec()
+        val tC0 = System.nanoTime()
+        graft.io.CowTable.compactChangelog(spark, t, "doc_id", "p")
+        val compactSec = (System.nanoTime() - tC0) / 1e9
+        val basePost = readSec {
+          graft.io.CowTable.readMor(spark, t, "doc_id", "p")
+            .agg(count(lit(1)), sum(length(col("payload")))).head()
+            .getLong(0)
+        }
+        println(s"""{"probe":"cow_tombstone","rows":$nRows,""" +
+          s""""sec_mor_delete":$morDelete,"sec_cow_delete_32parts":$s32,""" +
+          s""""sec_read_clean":$basePre,"sec_read_tombstoned":$morRead,""" +
+          s""""sec_compact":$compactSec,"sec_read_compacted":$basePost}""")
+        basePre
       }
-      val tDel0 = System.nanoTime()
-      graft.io.CowTable.appendChanges(spark, t, ch, "doc_id", "p")
-      val morDelete = (System.nanoTime() - tDel0) / 1e9
-      def morReadSec(): Double = readSec {
-        graft.io.CowTable.readMor(spark, t, "doc_id", "p")
-          .agg(count(lit(1)), sum(length(col("payload")))).head()
-          .getLong(0)
-      }
-      morReadSec() // warm the anti-join codegen
-      val morRead = morReadSec()
-      val tC0 = System.nanoTime()
-      graft.io.CowTable.compactChangelog(spark, t, "doc_id", "p")
-      val compactSec = (System.nanoTime() - tC0) / 1e9
-      val basePost = readSec {
-        graft.io.CowTable.readMor(spark, t, "doc_id", "p")
-          .agg(count(lit(1)), sum(length(col("payload")))).head()
-          .getLong(0)
-      }
-      println(s"""{"probe":"cow_tombstone","rows":$nRows,""" +
-        s""""sec_mor_delete":$morDelete,"sec_cow_delete_32parts":$s32,""" +
-        s""""sec_read_clean":$basePre,"sec_read_tombstoned":$morRead,""" +
-        s""""sec_compact":$compactSec,"sec_read_compacted":$basePost}""")
 
       // changelog MOR read tax as the log grows: how does readMor
       // scale with outstanding batches before compaction? 1, 8, 32
       // appended 1000-change batches (mixed upsert/delete) against
       // the same 4M-row table.
-      def morTax(batches: Int): (Double, Double) = {
-        val tm = freshTable()
+      def morTax(batches: Int): (Double, Double) = withFreshTable { tm =>
         for (b <- 0 until batches) {
           val ch = spark.range(20000)
             .select((col("id") + lit(b * 100000L)).as("doc_id"))

@@ -22,6 +22,10 @@ list cannot go stale.
 
 Usage: python3 tools/deadcode.py            # report + exit 1 on findings
 
+References are counted in code only: `//` and `/* */` comments
+(scaladoc included) are blanked before counting, so a `[[name]]`
+mention keeps nothing alive; string literals stay as they are.
+
 The check is textual (word-boundary grep), which is the right weight
 for a catalog gate: a def whose NAME appears nowhere else in the tree
 is unreachable from the query/spec surface regardless of types.
@@ -58,20 +62,74 @@ TEST_ONLY_API = {
     "ForgetStore.readAnnCorpusAt": "library API: time travel to a retained epoch",
     "ForgetStore.knnAt": "library API: time travel to a retained epoch",
     "Registry.connectionCount": "library API: per-client connection count",
+    "Dedup.exactStreaming":
+        "library API: watermark-bounded exact dedup for unbounded feeds",
+    "NgramLm.scoreBackoff":
+        "library API: stupid-backoff trigram scoring of a corpus",
+    "Retrieval.mergePositionalIndex":
+        "library API: incremental merge of two positional indexes",
+    "Retrieval.bm25TopK": "library API: one-shot buildIndex + bm25Query",
+    "Similarity.dotHof":
+        "reference: the HOF dot product the native graft_dot is pinned to",
+    "TextOps.shingleSetComposed":
+        "reference: TrainingSpec compares the fused shingle kernel to it",
+    "AnnLayout.appendIvf": "library API: append to a label-partitioned layout",
+    "AnnLayout.appendTrainedPq":
+        "library API: append under a frozen IVF-PQ codebook",
+    "AnnLayout.appendTrained":
+        "library API: append under a frozen trained IVF codebook",
+    "AnnLayout.appendTrainedQ8":
+        "library API: append under a frozen quantized IVF codebook",
+    "AnnLayout.layoutStats":
+        "library API: per-partition rows/bytes, the crowding view",
+    "AnnLayout.auditTrained":
+        "library API: the periodic retrain-gate audit of a layout",
+    "Bucketing.writeBucketed": "library API: Spark-native bucketed write",
+    "Bucketing.writeZOrdered": "library API: two-dimension Z-order layout",
+    "EpochLayout.maintainTrained":
+        "library API: epoch-published append with the retrain gate",
+    "ForgetStore.readCorpus": "library API: corpus at the current snapshot",
+    "ForgetStore.knn": "library API: IVF top-k at the current snapshot",
+    "ForgetStore.readAnnCorpus":
+        "library API: ANN members at the current snapshot",
+    "LatestStream.keepLastStateful":
+        "library API: stateful keep-last with TTL and state migration",
+    "Pipeline.replayQuarantine":
+        "library API: re-append quarantined batches after a sink outage",
+    "Pipeline.rebuildLatest":
+        "library API: rebuild the latest table from the append log",
+    "WsServer.tlsServerSocket": "library API: TLS listener for wss:// serving",
 }
 
 DEF_RE = re.compile(r"^\s*def\s+([A-Za-z_][A-Za-z0-9_]*)")
 PRIVATE_RE = re.compile(r"^\s*private")
 
+# one token at a time, leftmost first: a string or char literal (kept)
+# or a comment (blanked); a `//` inside a string is never a comment.
+# Block comments are taken unnested, and a quote nested inside an
+# interpolation splice splits that string in two, which only misreads
+# a comment marker placed inside the splice itself.
+TOKEN_RE = re.compile(r'"""[\s\S]*?"""+|"(?:\\.|[^"\\\n])*"'
+                      r"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/")
+
+
+def strip_comments(src):
+    """`src` with every comment's characters blanked (newlines kept, so
+    line numbers hold); string and char literals unchanged."""
+    return TOKEN_RE.sub(
+        lambda m: re.sub(r"[^\n]", " ", m.group())
+        if m.group()[0] == "/" else m.group(), src)
+
+
 def scala_files(dirs):
-    out = {}  # relpath -> lines
+    out = {}  # relpath -> lines, comments blanked
     for d in dirs:
         for root, _, files in os.walk(os.path.join(ROOT, d)):
             for fn in sorted(files):
                 if fn.endswith(".scala"):
                     path = os.path.relpath(os.path.join(root, fn), ROOT)
                     with open(os.path.join(ROOT, path)) as f:
-                        out[path] = f.read().split("\n")
+                        out[path] = strip_comments(f.read()).split("\n")
     return out
 
 def public_defs():
@@ -82,7 +140,8 @@ def public_defs():
                 continue
             path = os.path.join(d, fn)
             with open(os.path.join(ROOT, path)) as f:
-                for i, line in enumerate(f, 1):
+                code = strip_comments(f.read()).split("\n")
+                for i, line in enumerate(code, 1):
                     m = DEF_RE.match(line)
                     if m and not PRIVATE_RE.match(line):
                         name = m.group(1)

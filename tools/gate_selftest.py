@@ -6,7 +6,9 @@ artifacts against a synthetic pin/watchlist in a temp dir
 Covers the round-16 rules the real bench can only exercise by
 accident: the drift cap, the >2x drift outright refusal, bimodal
 demotion, the two-strike watchlist refusal, its floor-decomposition
-exoneration ("floor moved") and the build-arm counterexample
+exoneration ("floor moved"), also from floor rows that carry Bench's
+job-chain fields after [build, plan, exec], and the build-arm
+counterexample
 ("build moved" must NOT exonerate), and --record-watch bookkeeping.
 """
 import json
@@ -124,6 +126,18 @@ def main():
                          floor_pin=fp, floor_cand=fc)
         ok &= check("second strike exonerated by floor", rc == 0
                     and "floor moved" in out, out)
+
+        # 7b. the same with the floor record's full rows: Bench appends
+        # the job-chain fields (jobs, stages, tasks, shuffle/spill
+        # bytes, task tail, idle gap) after [build, plan, exec]; the
+        # exoneration still reads the first three by position
+        chain = [40, 60, 300, 5_000_000, 5_000_000, 1_000_000, 900, 12.0,
+                 3.5]
+        fcx = {n: [0.2, 0.01, 0.8] + chain for n in FACES}
+        rc, out, _ = run(tmp, t, spread=sp, watch={"q5": 1},
+                         floor_pin=fp, floor_cand=fcx)
+        ok &= check("second strike exonerated by a full floor row",
+                    rc == 0 and "floor moved" in out, out)
 
         # 8. second strike with exec 3x in the floor: refuses as
         # "exec moved"
