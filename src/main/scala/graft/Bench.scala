@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.ListenerBus
 object Bench {
   private final case class Job(id: Int, start: Long, stages: Int,
@@ -14,18 +15,31 @@ object Bench {
   private final class JobChain extends SparkListener {
     private val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
     private val taskMs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // SQL execution id -> its description (the face-code callsite of
+    // the action): AQE runs a query's stage jobs from Spark's own
+    // threads, so their result stage names no face code; a job outside
+    // any SQL execution is named by its job description instead
+    private val sqlDesc = scala.collection.mutable.Map.empty[Long, String]
     private var stages, shuffleRead, shuffleWrite, spill = 0L
 
     def reset(): Unit = synchronized {
-      jobs.clear(); taskMs.clear()
+      jobs.clear(); taskMs.clear(); sqlDesc.clear()
       stages = 0L; shuffleRead = 0L; shuffleWrite = 0L; spill = 0L
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        sqlDesc(s.executionId) = s.description.replaceAll("\\s+", " ")
+      }
+      case _ => ()
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      def prop(k: String) =
+        Option(e.properties).flatMap(p => Option(p.getProperty(k)))
       // the result stage is named after the action's callsite
       val site = (e.stageInfos.sortBy(_.stageId).lastOption.map(_.name) ++
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .map("sql " + _)).mkString(" | ")
+        prop("spark.sql.execution.id")
+          .map(id => "sql " + id + sqlDesc.get(id.toLong).fold("")(" " + _))
+          .orElse(prop("spark.job.description"))).mkString(" | ")
       jobs += Job(e.jobId, e.time, e.stageInfos.size, site)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -222,7 +236,10 @@ object Bench {
           val t1 = System.nanoTime()
           df.queryExecution.executedPlan // force planning
           val t2 = System.nanoTime()
-          force(df)
+          // names the exec phase's jobs (no SQL execution: AQE runs
+          // the returned plan's stage jobs from its own threads)
+          sc.setJobDescription("exec")
+          try force(df) finally sc.setJobDescription(null)
           val t3 = System.nanoTime()
           ListenerBus.drain(sc)
           name -> (Seq((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9) ++

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.column.statistics.BinaryStatistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * the rewrite cost must be proportional to the PARTITIONS TOUCHED,
   * never the corpus.
   *
-  * No table format is assumed (same design stance as [[AnnLayout]]'s
-  * maintenance paths): the table is plain parquet under
+  * No table format is assumed (same design stance as the
+  * [[AnnLayout]] layouts): the table is plain parquet under
   * `path/<partCol>=<v>/`, and the unit of atomicity is one partition
   * directory, swapped by [[DirSwap.swap]] (hidden `.old_<dir>`
   * backups, [[DirSwap.repairPartitions]] on the next writer's entry).
@@ -360,24 +360,6 @@ object CowTable {
   //    union of ALL batches' footer schemas ([[readLog]]) instead of
   //    trusting one sampled footer.
 
-  /** Total committed parquet bytes under a side directory (recursive;
-    * staging and hidden names excluded) — the cheap, exact signal for
-    * the broadcast decision below.
-    */
-  private def dirParquetBytes(spark: SparkSession, dir: String): Long = {
-    val fs = fsOf(spark, dir)
-    def walk(p: Path): Long =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).map { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".") || n.startsWith("_")) 0L
-        else if (st.isDirectory) walk(st.getPath)
-        else if (n.endsWith(".parquet")) st.getLen
-        else 0L
-      }.sum
-    walk(new Path(dir))
-  }
-
   /** Broadcast-hint the deferred-change side ONLY while it is safely
     * under `spark.sql.autoBroadcastJoinThreshold` (halved for
     * parquet-compression headroom — on-disk bytes under-estimate
@@ -399,57 +381,70 @@ object CowTable {
   private def logDir(path: String) = s"$path/.changelog"
   private val SeqDirRe = "cseq=([0-9]+)".r
 
-  /** Committed batch stamps in the changelog, from one directory
-    * listing — a batch is committed iff its `cseq=<N>` directory
-    * exists with at least one parquet file (a crashed writer's
-    * `.stage_*` dirs and a dead flat-append's `_temporary` carcass
-    * both fail the pattern and are ignored).
+  /** Committed batches in the changelog with their parquet files, in
+    * stamp order, from one directory listing — a batch is committed
+    * iff its `cseq=<N>` directory exists with at least one parquet
+    * file (a crashed writer's `.stage_*` dirs and a dead
+    * flat-append's `_temporary` carcass both fail the pattern and are
+    * ignored).
     */
-  private def logSeqs(spark: SparkSession, path: String): Seq[Long] = {
+  private def logBatches(spark: SparkSession, path: String)
+      : Seq[(Long, Seq[FileStatus])] = {
     val dir = new Path(logDir(path))
     val fs = fsOf(spark, path)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.flatMap { st =>
       st.getPath.getName match {
-        case SeqDirRe(n) if st.isDirectory &&
-            fs.listStatus(st.getPath).exists(f => f.isFile &&
-              f.getPath.getName.endsWith(".parquet")) => Some(n.toLong)
+        case SeqDirRe(n) if st.isDirectory =>
+          val files = fs.listStatus(st.getPath).toSeq.filter(f =>
+            f.isFile && f.getPath.getName.endsWith(".parquet"))
+          if (files.isEmpty) None else Some(n.toLong -> files)
         case _ => None
       }
-    }.sorted
+    }.sortBy(_._1)
   }
 
-  /** Parquet footers of the committed batches, read on the driver —
-    * one open per batch file, no Spark job; outstanding batches are
-    * few by the compaction policy (see [[readMor]]).
+  private def logSeqs(spark: SparkSession, path: String): Seq[Long] =
+    logBatches(spark, path).map(_._1)
+
+  /** The committed batch stamps, their files' total bytes (the
+    * cheap, exact signal for [[maybeBroadcast]]) and parquet footers.
     */
-  private def logFooters(spark: SparkSession, path: String)
-      : Seq[ParquetMetadata] = {
+  private final case class Log(seqs: Seq[Long], bytes: Long,
+      footers: Seq[ParquetMetadata])
+
+  /** [[Log]] from one [[logBatches]] listing; footers are read on the
+    * driver — one open per batch file, no Spark job; outstanding
+    * batches are few by the compaction policy (see [[readMor]]).
+    */
+  private def logFooters(spark: SparkSession, path: String): Log = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, path)
-    logSeqs(spark, path)
-      .flatMap(n => fs.listStatus(new Path(s"${logDir(path)}/cseq=$n")))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try r.getFooter finally r.close()
-      }
+    val batches = logBatches(spark, path)
+    val files = batches.flatMap(_._2)
+    Log(batches.map(_._1), files.map(_.getLen).sum, files.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter finally r.close()
+    })
   }
 
   /** The changelog as one DataFrame with its `_seq` stamp column —
     * at the union of the batches' schemas (delete-only batches may
     * omit payload columns; they read back as nulls). Every batch is
     * written by [[appendChanges]] through Spark, which records the
-    * batch's schema in each footer, so the union comes from `footers`
-    * without the Spark job schema inference would run.
+    * batch's schema in each footer, so the union comes from the
+    * footers without the Spark job schema inference would run. The
+    * read names exactly the `cseq=<N>` directories the footers came
+    * from (with the log root as `basePath`, so `cseq` is still the
+    * partition column): schema, upsert flag and rows come from one
+    * listing, and the dot-named log root itself is never a read path.
     */
   private[graft] def readLog(spark: SparkSession, path: String)
       : DataFrame =
     readLog(spark, path, logFooters(spark, path))
 
   private def readLog(spark: SparkSession, path: String,
-      footers: Seq[ParquetMetadata]): DataFrame = {
-    val schema = footers.map { f =>
+      log: Log): DataFrame = {
+    val schema = log.footers.map { f =>
       val json = f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
       require(json != null, s"changelog batch under ${logDir(path)} " +
         "carries no Spark schema; only appendChanges writes the log")
@@ -459,7 +454,8 @@ object CowTable {
         if (a.fieldNames.contains(f.name)) a else a.add(f)
       }
     }.add("cseq", LongType)
-    spark.read.schema(schema).parquet(logDir(path))
+    spark.read.schema(schema).option("basePath", logDir(path))
+      .parquet(log.seqs.map(n => s"${logDir(path)}/cseq=$n"): _*)
       .withColumnRenamed("cseq", "_seq")
   }
 
@@ -631,17 +627,16 @@ object CowTable {
   def readMor(spark: SparkSession, path: String, idCol: String,
       partCol: String): DataFrame = {
     val base = spark.read.option("basePath", path).parquet(path)
-    val footers = logFooters(spark, path)
-    if (footers.isEmpty) return base
-    val log = readLog(spark, path, footers)
+    val log = logFooters(spark, path)
+    if (log.seqs.isEmpty) return base
+    val changes = readLog(spark, path, log)
     val kept = base.join(
-      maybeBroadcast(log.select(col(partCol), col(idCol)),
-        dirParquetBytes(spark, logDir(path))),
+      maybeBroadcast(changes.select(col(partCol), col(idCol)), log.bytes),
       Seq(partCol, idCol), "left_anti")
-    if (!logHasUpserts(footers)) return kept
+    if (!logHasUpserts(log.footers)) return kept
     // the log is bounded by the compaction policy below: ONE task
     // resolves it, with no shuffle stage
-    val ups = resolvedLog(log.coalesce(1), idCol, partCol)
+    val ups = resolvedLog(changes.coalesce(1), idCol, partCol)
       .filter(col("op") === "upsert")
     // a batch may omit payload columns (the takedown shape); missing
     // base columns null-fill at the base schema's types
@@ -662,14 +657,15 @@ object CowTable {
   def compactChangelog(spark: SparkSession, path: String,
       idCol: String, partCol: String): MergeStats = {
     val fs = fsOf(spark, path)
-    if (logSeqs(spark, path).isEmpty) {
+    val log = logFooters(spark, path)
+    if (log.seqs.isEmpty) {
       // stage carcasses / dead flat-append _temporary dirs are garbage
       if (fs.exists(new Path(logDir(path))))
         fs.delete(new Path(logDir(path)), true)
       return MergeStats(0, 0L, 0L)
     }
     val stats = merge(spark, path,
-      resolvedLog(readLog(spark, path), idCol, partCol).drop("_seq"),
+      resolvedLog(readLog(spark, path, log), idCol, partCol).drop("_seq"),
       idCol, partCol)
     fs.delete(new Path(logDir(path)), true)
     stats

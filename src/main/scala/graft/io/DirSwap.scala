@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one commit protocol for a directory replaced as a whole: the
-  * latest-tick table, the ANN layout's `reps`/`pq` codebooks, the
-  * dedup first-occurrence index, and each Hive partition a
-  * [[CowTable.merge]] or [[AnnLayout.compactIvfPartitions]] rewrites.
+  * latest-tick table and the dedup first-occurrence index, and each
+  * Hive partition a [[CowTable.merge]] rewrites. (ANN layouts are
+  * write-once and never swap: see [[AnnLayout]].)
   *
   * [[swap]] installs a fully written `stage` with two renames
   * (target → backup, stage → target) and then deletes the backup. A
@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Partition swaps stage under a shared root whose per-partition
   * directories carry no marker, so [[repairPartitions]] only restores
   * or drops each hidden `.old_<part>` backup (a visible
-  * `cluster=5.old` would be parsed as partition value "5.old").
+  * `lang=en.old` would be parsed as partition value "en.old").
   *
   * Every rename's result is checked: a failed rename throws instead of
   * leaving a layout that silently points at nothing. Single writer

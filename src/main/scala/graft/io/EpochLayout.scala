@@ -2,9 +2,6 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.ops.Similarity
 
 /** Epoch-directory publication for paired at-rest artifacts. A
   * retrain replaces the corpus AND its reps codebook together; two
@@ -40,15 +37,12 @@ import graft.ops.Similarity
   * format (Iceberg/Delta snapshot expiry) charges for the same
   * guarantee.
   *
-  * Contracts carried over unchanged from [[AnnLayout]]: single
-  * writer; a reader's query lifetime must be shorter than `retain`
-  * publish intervals (else GC can delete the epoch under it — the
-  * standard snapshot-expiry contract); APPENDS mutate the current
-  * epoch in place (they never touch `reps`, so there is no pair to
-  * keep consistent — readers see old-or-new rows of one consistent
-  * codebook, exactly as [[AnnLayout.appendTrained]] documents).
-  * Retrains — the only operation that changes the pair — publish a
-  * NEW epoch.
+  * Contracts: single writer; a reader's query lifetime must be
+  * shorter than `retain` publish intervals (else GC can delete the
+  * epoch under it — the standard snapshot-expiry contract). This
+  * object never modifies an epoch after its marker: [[AnnLayout]]
+  * layouts are write-once, so a new corpus or a retrained codebook
+  * is a new build published as a NEW epoch.
   *
   * Reference scope note: the reference engine
   * (market-data-ingestor-go) has no at-rest index at all; this is
@@ -156,65 +150,4 @@ object EpochLayout {
       k: Int, nprobe: Int): DataFrame =
     AnnLayout.knnIvf(spark, currentOrFail(spark, root), queries, k,
       nprobe)
-
-  /** The measured retrain policy, wired into the intake loop —
-    * the production entry point: call per epoch, log the returned
-    * stats, and the codebook keeps itself fit without a second corpus
-    * pass (the gate inputs ride the append's own assignment).
-    *  - the batch APPENDS into the CURRENT epoch in place (via
-    *    [[AnnLayout.appendTrainedWithStats]] — reps untouched, so no
-    *    pair consistency is at stake);
-    *  - WARN when the batch's assignment-cosine p50 falls under
-    *    `warnCosP50` (default 0.7 — drift is visible but recall is
-    *    still intact; plan a retrain);
-    *  - RETRAIN when the batch's top-cell share exceeds
-    *    `retrainShareFactor / k` (default 3/k — the measured knee
-    *    where crowding starts inflating probed bytes; PERF.md
-    *    round-11 "frozen-codebook drift"). k is read from the current
-    *    epoch's reps, so the threshold always matches the codebook
-    *    actually installed.
-    * The retrain is a full [[AnnLayout.trainIvf]] rebuild over the
-    * UNIONED corpus (which already includes this batch — the append
-    * lands first, so no rows are in flight during the rebuild),
-    * written into the next epoch directory and published with the
-    * marker create: invisible until complete, so there are no repair
-    * cases. `kppSeeds` seeds the rebuild with k-means‖
-    * ([[Similarity.kmeansParInit]], 3 bounded corpus passes extra):
-    * the retrain fires exactly when the corpus CROWDS, the regime
-    * where first-k-ids seeds most likely all land in the crowded
-    * region (PERF.md round-12 kpp_seeding).
-    */
-  def maintainTrained(newVecs: DataFrame, root: String, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      clusterCol: String = "label",
-      warnCosP50: Double = 0.7, retrainShareFactor: Double = 3.0,
-      maxRecordsPerFile: Long = 5000000L,
-      compactWhenFilesOver: Int = 0, compactFiles: Int = 1,
-      kppSeeds: Boolean = false, retain: Int = 1)
-      : AnnLayout.MaintainResult = {
-    val spark = newVecs.sparkSession
-    val cur = currentOrFail(spark, root)
-    val stats = AnnLayout.appendTrainedWithStats(newVecs, cur, idCol,
-      vecCol, clusterCol, maxRecordsPerFile, compactWhenFilesOver,
-      compactFiles)
-    val k = spark.read.parquet(s"$cur/reps").count()
-    require(k > 0, s"empty reps table at $cur")
-    val warned = stats.assignCosP50 < warnCosP50
-    val retrain = stats.topCellShare > retrainShareFactor / k.toDouble
-    if (retrain) {
-      val base = spark.read.parquet(s"$cur/corpus")
-        .drop(clusterCol)
-        .select(col(idCol), col(vecCol))
-      val seeds = if (kppSeeds)
-        Similarity.kmeansParInit(base, k.toInt, idCol = idCol,
-          vecCol = vecCol).select(col("cluster"), col("cv"))
-      else null
-      publish(spark, root, retain) { dir =>
-        AnnLayout.trainIvf(base, dir, k.toInt, iters, idCol, vecCol,
-          clusterCol, maxRecordsPerFile, seeds)
-        ()
-      }
-    }
-    AnnLayout.MaintainResult(stats, warned, retrained = retrain)
-  }
 }

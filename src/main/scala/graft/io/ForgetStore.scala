@@ -1037,11 +1037,11 @@ object ForgetStore {
     * [[Retrieval.mergePositionalIndex]] shard-and-sum contract —
     * every statistic is a sum over docs), so serving after ingest
     * hash-equals serving over init(old ∪ new); the ann tier follows
-    * the FROZEN-QUANTIZER rule instead ([[AnnLayout.appendTrained]]'s
-    * contract: new members assign to the existing codebook — adding
-    * members changes cell occupancy, never the quantizer, so reps
-    * carry forward verbatim and knn parity holds against the same
-    * codebook, not against a retrain).
+    * the FROZEN-QUANTIZER rule instead (new members assign to the
+    * existing codebook, as [[AnnLayout.deleteTrained]] removes them
+    * from it — adding members changes cell occupancy, never the
+    * quantizer, so reps carry forward verbatim and knn parity holds
+    * against the same codebook, not against a retrain).
     *
     * Cost shape: the batch is bounded by contract (broadcast-sized,
     * like the takedown batch), so the id-collision probe is one

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Frozen-artifact store for trained models and their derived
   * config: train ONCE per (corpus, parameters), persist the result
-  * as an at-rest parquet artifact with the same stage+atomic-swap
-  * discipline the BM25/ANN layouts use, and have every serving face
+  * as an at-rest parquet artifact built in a stage directory and
+  * published with one atomic move, and have every serving face
   * READ the artifact instead of re-running training.
   *
   * Why this exists: the catalog deliberately ships several serving
@@ -42,11 +42,9 @@ object FrozenStore {
   }
 
   /** A DataFrame-shaped artifact (weight tables, LM ratio tables):
-    * first call builds and publishes it through [[frozenPath]] (an
-    * overwrite-mode write, so a crashed build's stage is simply
-    * rewritten on retry); every call returns a reader over the
-    * published parquet, so consumers exercise the true
-    * read-the-artifact path.
+    * first call builds and publishes it through [[frozenPath]];
+    * every call returns a reader over the published parquet, so
+    * consumers exercise the true read-the-artifact path.
     */
   def frozenDf(spark: SparkSession, key: String)
       (build: => DataFrame): DataFrame =
@@ -71,12 +69,19 @@ object FrozenStore {
     * published path. Serving faces probe the at-rest layout exactly
     * as a 100 TB deployment would — trained once, queried forever —
     * instead of re-training a throwaway temp copy per call.
+    *
+    * A build that throws midway leaves its partial output in the
+    * stage and publishes nothing; the next call under the same key
+    * deletes that stage before building again, because builders
+    * write once (an [[AnnLayout]] builder refuses a target that
+    * already holds a layout).
     */
   def frozenPath(key: String)(build: String => Unit): String =
     dfPaths.getOrElseUpdate("path|" + key, this.synchronized {
       val fin = root.resolve(safeName("path|" + key))
       if (!java.nio.file.Files.exists(fin)) {
         val stage = root.resolve(safeName("path|" + key) + ".stage")
+        org.apache.hadoop.fs.FileUtil.fullyDelete(stage.toFile)
         build(stage.toString)
         java.nio.file.Files.move(stage, fin,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)

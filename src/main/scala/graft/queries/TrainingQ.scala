@@ -3871,8 +3871,8 @@ object TrainingQ {
     * trigger on the batch's queries only. No state store anywhere:
     * the index is at-rest data, the trigger work is proportional to
     * arriving queries × probed fraction, which is what makes this
-    * the 100 TB online-serving shape (layout maintenance runs
-    * separately via appendTrained/EpochLayout.maintainTrained, safe under
+    * the 100 TB online-serving shape (a new corpus or codebook is a
+    * new build published beside this one, never a mutation under
     * readers). foreachBatch is the documented Spark route for
     * per-batch top-k against static data; AvailableNow drains the
     * backlog in bounded triggers. Same oracle as q_ann_ivf_trained —

@@ -333,6 +333,66 @@ class CowSpec extends AnyFunSuite {
     }
   }
 
+  /** What the `DataSource` logger emits (at WARN and above) while
+    * `body` runs, beside `body`'s result.
+    */
+  private def dataSourceWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("datasource-warnings", null, null,
+        true, Array.empty[Property]) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val level = logger.getLevel
+    logger.addAppender(app)
+    logger.setLevel(Level.WARN)
+    try {
+      val out = body
+      (out, lines.asScala.toSeq)
+    } finally {
+      logger.setLevel(level)
+      logger.removeAppender(app)
+      app.stop()
+    }
+  }
+
+  test("changelog reads name only committed batch dirs: no 'All paths were ignored' warning, same rows") {
+    val t = freshTable()
+    CowTable.appendChanges(spark, t,
+      docs.filter(col("doc_id") % 37 === 0)
+        .select(col("lang"), col("doc_id"), lit("delete").as("op")),
+      "doc_id", "lang")
+    val v2 = docs
+      .filter(col("doc_id") % 41 === 3 && col("doc_id") % 37 =!= 0)
+      .withColumn("text", concat(lit("v2 "), col("text")))
+      .select(cols.map(col): _*)
+    CowTable.appendChanges(spark, t, v2.withColumn("op", lit("upsert")),
+      "doc_id", "lang")
+    val want = docs
+      .filter(col("doc_id") % 37 =!= 0 && col("doc_id") % 41 =!= 3)
+      .select(cols.map(col): _*).unionByName(v2)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val (mor, warnings) = dataSourceWarnings {
+      val rows = CowTable.readMor(spark, t, "doc_id", "lang")
+        .select(cols.map(col): _*).orderBy("doc_id")
+        .collect().map(_.toSeq).toSeq
+      CowTable.compactChangelog(spark, t, "doc_id", "lang")
+      rows
+    }
+    assert(!warnings.exists(_.contains("All paths were ignored")),
+      warnings.mkString("\n"))
+    assert(mor == want && readAll(t) == want)
+  }
+
   test("changelog schema boundary: minimal-schema delete-only batch between full-schema batches") {
     // the takedown shape (doc_id, lang, op — no payload columns) as a
     // CHANGELOG batch, appended next to full-schema batches: the log

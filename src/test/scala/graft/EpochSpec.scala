@@ -9,7 +9,7 @@ import graft.io.{AnnLayout, EpochLayout}
 
 /** Pins for the epoch-directory publication protocol
   * ([[graft.io.EpochLayout]]): query identity with the flat layout,
-  * append equivalence, the marker-create publish (a reader NEVER
+  * retrains as new epochs, the marker-create publish (a reader NEVER
   * resolves an unmarked epoch, so the flat layout's two-rename
   * cross-artifact window structurally cannot occur), crashed-build
   * invisibility + writer-entry GC, and the snapshot-retention
@@ -50,61 +50,31 @@ class EpochSpec extends AnyFunSuite {
       s"unexpected epoch contents: $names")
   }
 
-  test("append maintains the current epoch in place; identical to flat appendTrained") {
-    val root = Files.createTempDirectory("epoch_append").toString
-    val flat = Files.createTempDirectory("epoch_append_flat").toString
-    val a = emb.filter(col("vec_id") % 3 === 0)
-    val b = emb.filter(col("vec_id") % 3 === 1)
-    EpochLayout.trainIvf(a, root, k = 4, iters = 2)
-    AnnLayout.trainIvf(a, flat, k = 4, iters = 2)
-    val r = EpochLayout.maintainTrained(b, root, iters = 2)
-    AnnLayout.appendTrained(b, flat)
-    assert(!r.retrained, s"in-distribution append retrained: ${r.stats}")
-    // still epoch 1 — appends publish nothing
-    assert(EpochLayout.current(spark, root).exists(_.endsWith("/e1")))
-    assert(ans(EpochLayout.currentOrFail(spark, root)) == ans(flat))
-  }
-
   test("retrain publishes a NEW epoch; previous epoch retained for in-flight readers") {
     val root = Files.createTempDirectory("epoch_retrain").toString
     val k = 4
-    EpochLayout.trainIvf(emb.filter(col("vec_id") % 6 === 0), root,
+    EpochLayout.trainIvf(emb.filter(col("vec_id") % 3 === 0), root,
       k = k, iters = 2)
-    def drifted(r: Int) = emb.filter(col("vec_id") % 6 === r)
-      .withColumn("embedding",
-        transform(col("embedding"), x => x * 0.05f + 10.0f))
-    // in-distribution epochs never fire the gate (same knee as the
-    // flat-layout intake-loop pin)
-    for (r <- 1 to 3) {
-      val res = EpochLayout.maintainTrained(
-        emb.filter(col("vec_id") % 6 === r), root, iters = 2)
-      assert(!res.retrained, s"batch $r fired: ${res.stats}")
-    }
     val e1 = EpochLayout.currentOrFail(spark, root)
     assert(e1.endsWith("/e1"))
     // a reader "in flight" on e1 across the retrain: its pinned dir
     // must survive the publish (retain = 1)
     val pinnedBefore = ans(e1, nprobe = k)
-    val res4 = EpochLayout.maintainTrained(drifted(4), root, iters = 2)
-    assert(res4.retrained, s"drifted batch did not fire: ${res4.stats}")
+    // the retrain over a grown corpus is a new build, published as e2
+    val grown = emb.filter(col("vec_id") % 3 =!= 2)
+    EpochLayout.trainIvf(grown, root, k = k, iters = 2)
     val e2 = EpochLayout.currentOrFail(spark, root)
     assert(e2.endsWith("/e2"), s"retrain did not publish e2: $e2")
     assert(ans(e1, nprobe = k) == pinnedBefore,
       "retained epoch changed under the in-flight reader")
-    // the published pair answers exactly like a from-scratch build
-    // over the same corpus (appends 0-3 + drifted 4 — all already in
-    // e1's corpus when the rebuild ran, 4 landing via its append)
-    val union = emb.filter(col("vec_id") % 6 <= 3).unionByName(drifted(4))
+    // the published pair answers exactly like a flat build over the
+    // same corpus
     val ref = Files.createTempDirectory("epoch_retrain_ref").toString
-    AnnLayout.trainIvf(union, ref, k = k, iters = 2)
+    AnnLayout.trainIvf(grown, ref, k = k, iters = 2)
     assert(ans(e2, nprobe = k) == ans(ref, nprobe = k)
       && ans(e2, nprobe = k).nonEmpty)
     // a second retrain GCs e1 (newest retain+1 = 2 epochs kept: e2, e3)
-    val res5 = EpochLayout.maintainTrained(
-      drifted(5).withColumn("embedding",
-        transform(col("embedding"), x => x * 0.05f - 20.0f)), root,
-      iters = 2)
-    assert(res5.retrained, s"second drift did not fire: ${res5.stats}")
+    EpochLayout.trainIvf(emb, root, k = k, iters = 2)
     val left = new java.io.File(s"$root/epochs").listFiles()
       .map(_.getName).toSet
     assert(left == Set("e2", "e3"), s"GC kept the wrong epochs: $left")

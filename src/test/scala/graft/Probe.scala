@@ -1091,100 +1091,6 @@ object Probe {
         s""""scan_frac_nprobe16":${16.0 / nClusters}}""")
     }
 
-    if (enabled("ann_drift")) {
-      // Frozen-codebook drift: appendTrained assigns new batches to a
-      // codebook trained on distribution A and never retrains. How
-      // fast does recall decay as appended batches DRIFT from A, and
-      // does a cheap ONLINE statistic (the per-batch assignment
-      // cosine assignNearest already computes) track the decay well
-      // enough to gate a retrain? Batches interpolate cluster centers
-      // from distribution A to an unrelated distribution B
-      // (shift s = 0 → 1); per append we record recall@10 of the
-      // frozen layout for queries FROM THE BATCH vs brute-force truth
-      // over the union corpus, plus the batch's median/p05 assignment
-      // cosine. A final retrain on the drifted corpus measures the
-      // recall a triggered rebuild would recover.
-      val dims = 32
-      val nClusters = 64
-      val k = 10
-      val n0 = 50000L
-      val nBatch = 10000L
-      def mkVecs(n: Long, idOffset: Long, shift: Double): DataFrame =
-        spark.range(n).select((col("id") + idOffset).as("vec_id"),
-          transform(sequence(lit(1), lit(dims)), i => {
-            val c = pmod(col("id"), lit(nClusters))
-            val centerA = (pmod(hash(c * dims + i), lit(1000)) / 500.0) - 1.0
-            val centerB =
-              (pmod(hash((c + 1000) * dims + i + 31), lit(1000)) / 500.0) - 1.0
-            val noise = ((pmod(hash((col("id") + idOffset) * dims + i),
-              lit(1000)) / 500.0) - 1.0) * 0.2
-            (centerA * (1.0 - shift) + centerB * shift + noise).cast("float")
-          }).as("embedding"))
-      val root = java.nio.file.Files.createTempDirectory("ann_drift").toString
-      val base = mkVecs(n0, 0L, 0.0).localCheckpoint()
-      graft.io.AnnLayout.trainIvf(base, root, nClusters, iters = 3)
-      val cents = spark.read.parquet(s"$root/reps")
-        .select(col("label").as("cluster"), col("rep_vec").as("cv"))
-        .localCheckpoint()
-      var corpus = base
-      def recallOf(layoutRoot: String, queries: DataFrame,
-          truth: Map[Long, Set[Long]], nprobe: Int): Double = {
-        val got = graft.io.AnnLayout
-          .knnIvf(spark, layoutRoot, queries, k, nprobe)
-          .select(col("query_id"), col("neighbor_id")).collect()
-          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        truth.map { case (q, t) =>
-          got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0)
-        }.sum / truth.size
-      }
-      val steps = Seq(0.0, 0.25, 0.5, 0.75, 1.0).zipWithIndex.map {
-        case (s, bi) =>
-          val batch = mkVecs(nBatch, 1000000L * (bi + 1), s).localCheckpoint()
-          // online drift statistic BEFORE the append — what a live
-          // pipeline would gate on
-          val assigned = graft.ops.Similarity.assignNearest(batch, cents)
-            .select(col("cluster"), col("cosine")).collect()
-          val cos = assigned.map(_.getDouble(1)).sorted
-          val p50 = cos(cos.length / 2)
-          val p05 = cos(cos.length / 20)
-          // occupancy: drift's real cost is CROWDING — drifted data
-          // piling into few frozen cells makes probed partitions huge
-          // (scan cost), even while recall holds
-          val occ = assigned.groupBy(_.getLong(0)).view.mapValues(_.length)
-          val topShare = occ.values.max.toDouble / assigned.length
-          val cellsUsed = occ.size
-          graft.io.AnnLayout.appendTrained(batch, root)
-          corpus = corpus.unionByName(batch).localCheckpoint()
-          val queries = batch.filter(col("vec_id") % lit(nBatch / 25) === 0)
-          val truth = graft.ops.Similarity.knnBruteForce(queries, corpus, k)
-            .select(col("query_id"), col("neighbor_id")).collect()
-            .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet)
-            .toMap
-          val r4 = recallOf(root, queries, truth, 4)
-          val r16 = recallOf(root, queries, truth, 16)
-          (s, p50, p05, topShare, cellsUsed, r4, r16, truth, queries)
-      }
-      // retrain on the full drifted corpus: the recall a triggered
-      // rebuild recovers for the LAST (most drifted) batch's queries
-      val root2 = java.nio.file.Files
-        .createTempDirectory("ann_drift_retrain").toString
-      graft.io.AnnLayout.trainIvf(corpus, root2, nClusters, iters = 3)
-      val (_, _, _, _, _, _, _, lastTruth, lastQueries) = steps.last
-      val retrained4 = recallOf(root2, lastQueries, lastTruth, 4)
-      val retrained16 = recallOf(root2, lastQueries, lastTruth, 16)
-      val stepJson = steps.map {
-        case (s, p50, p05, topShare, cellsUsed, r4, r16, _, _) =>
-          s"""{"shift":$s,"assign_cos_p50":$p50,"assign_cos_p05":$p05,""" +
-            s""""top_cell_share":$topShare,"cells_used":$cellsUsed,""" +
-            s""""recall_nprobe4":$r4,"recall_nprobe16":$r16}"""
-      }.mkString("[", ",", "]")
-      println(s"""{"probe":"ann_drift","base_vectors":$n0,""" +
-        s""""batch_vectors":$nBatch,"clusters":$nClusters,"k":$k,""" +
-        s""""steps":$stepJson,""" +
-        s""""retrained_recall_nprobe4":$retrained4,""" +
-        s""""retrained_recall_nprobe16":$retrained16}""")
-    }
-
     if (enabled("knn_graph_recall")) {
       // Edge recall of the cluster-bucketed kNN graph vs brute-force
       // truth, single- vs multi-probe: a single-probe graph cannot
@@ -1791,53 +1697,6 @@ object Probe {
         s""""trigram_count_sec":$tTrain,"trigram_occurrences":$nTri,""" +
         s""""train_and_score_sec":$tScore,"scored_docs":${mass.getLong(1)},""" +
         s""""score_tokens_per_sec":${toks / tScore}}""")
-    }
-
-    if (enabled("footer_audit")) {
-      // At-rest crowding audit cost: parquet-footer row counts
-      // (layoutRowStats — driver listing + one footer fetch per file)
-      // vs the corpus-scan alternative (groupBy(label).count over the
-      // layout) on a 1M×32d trained IVF layout with multi-file
-      // partitions. The audit's cost scales with FILE COUNT; the
-      // scan's with corpus bytes — the gap is what makes a per-layout
-      // periodic audit free at 100 TB.
-      val dims = 32
-      val nClusters = 64
-      val n = 1000000L
-      def mkVecs(lo: Long, hi: Long): DataFrame =
-        spark.range(lo, hi).select(col("id").as("vec_id"),
-          transform(sequence(lit(1), lit(dims)), i => {
-            val c = pmod(col("id"), lit(nClusters))
-            val center = (pmod(hash(c * dims + i), lit(1000)) / 500.0) - 1.0
-            val noise =
-              ((pmod(hash(col("id") * dims + i), lit(1000)) / 500.0) - 1.0) * 0.2
-            (center + noise).cast("float")
-          }).as("embedding"))
-      val root = java.nio.file.Files
-        .createTempDirectory("footer_audit").toString
-      graft.io.AnnLayout.trainIvf(mkVecs(0L, n / 2), root, nClusters,
-        iters = 2)
-      (0 until 4).foreach { b =>
-        graft.io.AnnLayout.appendTrained(
-          mkVecs(n / 2 + b * n / 8, n / 2 + (b + 1) * n / 8), root)
-      }
-      val t0 = System.nanoTime()
-      val stats = graft.io.AnnLayout.layoutRowStats(spark, root)
-      val tFooter = (System.nanoTime() - t0) / 1e9
-      val files = stats.map(_._2).sum
-      val rowsF = stats.map(_._4).sum
-      val t1 = System.nanoTime()
-      val rowsS = spark.read.parquet(s"$root/corpus")
-        .groupBy("label").count().agg(sum("count")).head().getLong(0)
-      val tScan = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val audit = graft.io.AnnLayout.auditTrained(spark, root)
-      val tAudit = (System.nanoTime() - t2) / 1e9
-      require(rowsF == rowsS, s"footer rows $rowsF != scan rows $rowsS")
-      println(s"""{"probe":"footer_audit","vectors":$n,"files":$files,""" +
-        s""""cells":${stats.length},"footer_stats_sec":$tFooter,""" +
-        s""""scan_count_sec":$tScan,"audit_sec":$tAudit,""" +
-        s""""top_cell_share":${audit.topCellShare}}""")
     }
 
     if (enabled("bm25_index")) {

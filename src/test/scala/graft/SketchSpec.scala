@@ -373,8 +373,8 @@ class SketchSpec extends AnyFunSuite {
     // Spark orders NaN ABOVE every numeric (NaN > 0 is TRUE, NaN =!= Inf
     // is TRUE) — the exact semantics that let a NaN row slip a naive
     // domain filter, land in the (null,null) bucket, and inflate n.
-    // Reachable in production via a zero-norm vector's cosine in
-    // appendTrainedWithStats. Only the five clean rows may count.
+    // Reachable from any sketched double column (a zero-norm vector's
+    // cosine is NaN). Only the five clean rows may count.
     val clean = Seq(1.0, 2.0, 4.0, 8.0, 16.0)
     val dirty = Seq(Double.NaN, Double.PositiveInfinity,
       Double.NegativeInfinity, 0.0, -3.0)

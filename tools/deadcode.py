@@ -7,12 +7,22 @@ Aggregator plumbing), so a missing textual reference proves nothing.
 `def apply`/`def unapply` are skipped for the same reason: Scala calls
 them through `Name(...)` and pattern matches, never by name.
 
+A def nested in the body of another def or of a member val (a local
+helper, e.g. a connection handler's `reject`) is not API and is not
+scanned. A body is the def's line plus every following line indented
+deeper than it (and its closing `}`/`)` line); lines inside a
+multi-line string literal never end a body.
+
 Pass 1 (orphans): every public def must be referenced from somewhere
-other than its own definition — a query, a spec, another operator,
-Probe, a main, or the benchmark harness.
+other than its own body — a query, a spec, another operator, Probe, a
+main, or the benchmark harness. A def that names itself (recursion, an
+error message) is not kept alive by that.
 
 Pass 2 (test-only API): a public def referenced only from src/test is
-program code that the program never runs. It must be listed in
+program code that the program never runs. A reference inside the body
+of a def already found test-only is not program use either, so the
+pass repeats until the test-only set stops growing: a helper that only
+test-only API calls is test-only too. Each must be listed in
 TEST_ONLY_API below with a one-line reason (library API kept for
 callers outside the tree, or the reference a spec compares against);
 otherwise it is dead code that a spec keeps alive. References from
@@ -32,6 +42,8 @@ is unreachable from the query/spec surface regardless of types.
 Scala-side false negatives (same-named defs in two objects) err toward
 passing, never toward deleting live code.
 """
+import bisect
+import collections
 import os
 import re
 import sys
@@ -73,21 +85,8 @@ TEST_ONLY_API = {
         "reference: the HOF dot product the native graft_dot is pinned to",
     "TextOps.shingleSetComposed":
         "reference: TrainingSpec compares the fused shingle kernel to it",
-    "AnnLayout.appendIvf": "library API: append to a label-partitioned layout",
-    "AnnLayout.appendTrainedPq":
-        "library API: append under a frozen IVF-PQ codebook",
-    "AnnLayout.appendTrained":
-        "library API: append under a frozen trained IVF codebook",
-    "AnnLayout.appendTrainedQ8":
-        "library API: append under a frozen quantized IVF codebook",
-    "AnnLayout.layoutStats":
-        "library API: per-partition rows/bytes, the crowding view",
-    "AnnLayout.auditTrained":
-        "library API: the periodic retrain-gate audit of a layout",
     "Bucketing.writeBucketed": "library API: Spark-native bucketed write",
     "Bucketing.writeZOrdered": "library API: two-dimension Z-order layout",
-    "EpochLayout.maintainTrained":
-        "library API: epoch-published append with the retrain gate",
     "ForgetStore.readCorpus": "library API: corpus at the current snapshot",
     "ForgetStore.knn": "library API: IVF top-k at the current snapshot",
     "ForgetStore.readAnnCorpus":
@@ -99,10 +98,30 @@ TEST_ONLY_API = {
     "Pipeline.rebuildLatest":
         "library API: rebuild the latest table from the append log",
     "WsServer.tlsServerSocket": "library API: TLS listener for wss:// serving",
+    "Dedup.connectedComponents":
+        "library API: min-label CC, connectedComponentsAuto's forest path",
+    "Dedup.estimateDistinctNodes":
+        "library API: the KMV node count connectedComponentsAuto picks by",
+    "Dedup.streamAgainstHistory":
+        "library API: Bloom-fronted stream dedup against a history",
+    "Skew.saltedJoin": "library API: salted join of a hot key to a dim table",
+    "Bloom.mightContainSubquery":
+        "library API: Bloom probe whose sketch is a scalar subquery",
+    "Bloom.antiJoinSubquery":
+        "library API: Bloom-split anti join on the subquery sketch",
+    "Bucketing.writeZOrderedN": "library API: Z-order over 2-8 dimensions",
+    "LatestStream.updateLatest":
+        "library API: keepLastStateful's state update, for TestGroupState",
 }
 
 DEF_RE = re.compile(r"^\s*def\s+([A-Za-z_][A-Za-z0-9_]*)")
 PRIVATE_RE = re.compile(r"^\s*private")
+# any def or member val, modifiers included: the bodies that nest
+BODY_RE = re.compile(r"^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+|"
+                     r"override\s+|final\s+|implicit\s+|lazy\s+|"
+                     r"@\w+\s+)*(?:def|val|var)\s")
+FRAMEWORK_NAMES = {"zero", "reduce", "merge", "finish", "bufferEncoder",
+                   "outputEncoder", "main", "apply", "unapply"}
 
 # one token at a time, leftmost first: a string or char literal (kept)
 # or a comment (blanked); a `//` inside a string is never a comment.
@@ -121,6 +140,45 @@ def strip_comments(src):
         if m.group()[0] == "/" else m.group(), src)
 
 
+def in_string_lines(src):
+    """1-based numbers of the lines that begin inside a string literal."""
+    starts = [0] + [i + 1 for i, c in enumerate(src) if c == "\n"]
+    inside = set()
+    for m in TOKEN_RE.finditer(src):
+        if m.group()[0] == '"':
+            first = bisect.bisect_right(starts, m.start()) + 1
+            last = bisect.bisect_left(starts, m.end())
+            inside.update(range(first, last + 1))
+    return inside
+
+
+def indent(line):
+    return len(line) - len(line.lstrip(" "))
+
+
+def body_end(lines, skip, i):
+    """Last line (1-based) of the body of the def/val on line `i`."""
+    ind, end = indent(lines[i - 1]), i
+    for j in range(i + 1, len(lines) + 1):
+        line = lines[j - 1]
+        if j in skip or not line.strip():
+            continue
+        if indent(line) > ind:
+            end = j
+            continue
+        if indent(line) == ind and line.lstrip()[:1] in ("}", ")"):
+            end = j
+        break
+    return end
+
+
+def read_scala(path):
+    """(lines with comments blanked, lines that begin inside a string)."""
+    with open(os.path.join(ROOT, path)) as f:
+        code = strip_comments(f.read())
+    return code.split("\n"), in_string_lines(code)
+
+
 def scala_files(dirs):
     out = {}  # relpath -> lines, comments blanked
     for d in dirs:
@@ -128,68 +186,84 @@ def scala_files(dirs):
             for fn in sorted(files):
                 if fn.endswith(".scala"):
                     path = os.path.relpath(os.path.join(root, fn), ROOT)
-                    with open(os.path.join(ROOT, path)) as f:
-                        out[path] = strip_comments(f.read()).split("\n")
+                    out[path] = read_scala(path)[0]
     return out
 
+
 def public_defs():
-    out = []  # (file, line_no, name)
+    out = []  # (file, first line, last body line, name)
     for d in SCAN_DIRS:
         for fn in sorted(os.listdir(os.path.join(ROOT, d))):
             if not fn.endswith(".scala"):
                 continue
             path = os.path.join(d, fn)
-            with open(os.path.join(ROOT, path)) as f:
-                code = strip_comments(f.read()).split("\n")
-                for i, line in enumerate(code, 1):
-                    m = DEF_RE.match(line)
-                    if m and not PRIVATE_RE.match(line):
-                        name = m.group(1)
-                        # Aggregator/Encoder plumbing is framework-called
-                        if name in ("zero", "reduce", "merge", "finish",
-                                    "bufferEncoder", "outputEncoder",
-                                    "main", "apply", "unapply"):
-                            continue
-                        out.append((path, i, name))
+            code, skip = read_scala(path)
+            enclosing_end = 0  # last line of the open member body
+            for i, line in enumerate(code, 1):
+                if i in skip or i <= enclosing_end or not BODY_RE.match(line):
+                    continue
+                end = body_end(code, skip, i)
+                enclosing_end = end
+                m = DEF_RE.match(line)
+                # Aggregator/Encoder plumbing is framework-called
+                if (m and not PRIVATE_RE.match(line)
+                        and m.group(1) not in FRAMEWORK_NAMES):
+                    out.append((path, i, end, m.group(1)))
     return out
 
-def count_refs(files, name, def_path, def_line):
-    pat = re.compile(r"\b" + re.escape(name) + r"\b")
-    n = 0
+
+def word_index(files):
+    """name -> [(path, line, occurrences)] over every word of `files`."""
+    index = collections.defaultdict(list)
     for path, lines in files.items():
         for i, line in enumerate(lines, 1):
-            if path == def_path and i == def_line:
-                continue  # the definition itself
-            n += len(pat.findall(line))
-    return n
+            for w, n in collections.Counter(re.findall(r"\w+", line)).items():
+                index[w].append((path, i, n))
+    return index
+
+
+def count_refs(index, name, excluded):
+    """References to `name` outside the `excluded` (path, first, last)
+    line spans."""
+    return sum(n for path, i, n in index.get(name, ())
+               if not any(p == path and a <= i <= b for p, a, b in excluded))
+
 
 def main():
-    program, tests = scala_files(PROGRAM_DIRS), scala_files(TEST_DIRS)
-    orphans, test_only = [], []
+    program = word_index(scala_files(PROGRAM_DIRS))
+    tests = word_index(scala_files(TEST_DIRS))
     defs = public_defs()
-    for path, line, name in defs:
-        in_program = count_refs(program, name, path, line)
-        in_tests = count_refs(tests, name, path, line)
-        key = f"{os.path.basename(path)[:-len('.scala')]}.{name}"
-        if in_program + in_tests == 0:
-            orphans.append((path, line, key))
-        elif in_program == 0:
-            test_only.append((path, line, key))
-    unlisted = [t for t in test_only if t[2] not in TEST_ONLY_API]
-    stale = sorted(set(TEST_ONLY_API) - {t[2] for t in test_only})
+    key = {d: f"{os.path.basename(d[0])[:-len('.scala')]}.{d[3]}"
+           for d in defs}
+    orphans = [d for d in defs
+               if count_refs(program, d[3], [d[:3]])
+               + count_refs(tests, d[3], [d[:3]]) == 0]
+    # fixpoint: a reference from a test-only body is not program use
+    test_only = set()
+    while True:
+        dead = [d[:3] for d in test_only]
+        found = {d for d in defs if d not in orphans
+                 and count_refs(program, d[3], [d[:3]] + dead) == 0}
+        if found == test_only:
+            break
+        test_only = found
+    test_only = sorted(test_only)
+    unlisted = [d for d in test_only if key[d] not in TEST_ONLY_API]
+    stale = sorted(set(TEST_ONLY_API) - {key[d] for d in test_only})
     print(f"scanned {len(defs)} public defs in {len(SCAN_DIRS)} main-tree "
           f"dirs; "
           f"{len(test_only)} test-only, {len(TEST_ONLY_API)} listed")
     if orphans:
         print(f"ORPHANS ({len(orphans)}): public defs with no reference "
-              "outside their definition line:")
-        for path, line, key in orphans:
-            print(f"  {path}:{line}  {key}")
+              "outside their own body:")
+        for d in orphans:
+            print(f"  {d[0]}:{d[1]}  {key[d]}")
     if unlisted:
         print(f"TEST-ONLY ({len(unlisted)}): public defs referenced only "
-              "from src/test and not in TEST_ONLY_API:")
-        for path, line, key in unlisted:
-            print(f"  {path}:{line}  {key}")
+              "from src/test (or from test-only bodies) and not in "
+              "TEST_ONLY_API:")
+        for d in unlisted:
+            print(f"  {d[0]}:{d[1]}  {key[d]}")
     if stale:
         print(f"STALE ({len(stale)}): TEST_ONLY_API entries that are not "
               "test-only public defs: " + ", ".join(stale))
