@@ -148,7 +148,7 @@ object AnnLayout {
 
   def fetchByIds(spark: SparkSession, path: String, ids: Seq[Long],
       idCol: String = "vec_id", maxIds: Int = 16384): DataFrame =
-    spark.read.parquet(path)
+    ParquetSchema.read(spark, path)
       .filter(idPredicate(idCol, ids, maxIds))
 
   /** IVF top-k against a [[writeIvf]] layout — result-identical to
@@ -181,9 +181,9 @@ object AnnLayout {
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame =
-    knnIvfOn(spark.read.parquet(s"$path/reps"), queries,
+    knnIvfOn(ParquetSchema.read(spark, s"$path/reps"), queries,
       k, nprobe, idCol, vecCol, clusterCol,
-      pc => spark.read.parquet(s"$path/corpus")
+      pc => ParquetSchema.read(spark, s"$path/corpus")
         .filter(col(clusterCol).isin(pc: _*)))
 
   /** The probe + exact-rerank core of [[knnIvf]], decoupled from the
@@ -281,7 +281,7 @@ object AnnLayout {
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
-    val reps = spark.read.parquet(s"$path/reps")
+    val reps = ParquetSchema.read(spark, s"$path/reps")
       .select(col(clusterCol).as("cluster"), col("rep_codes"),
         col("rep_scale"))
     val q = Similarity.q8CodesScaled(queries, idCol, vecCol,
@@ -297,7 +297,7 @@ object AnnLayout {
       .select("query_id", "qa", "sq", "cluster")
     val probedClusters = probed.select("cluster").distinct()
       .collect().map(_.get(0)).toIndexedSeq
-    val members = spark.read.parquet(s"$path/corpus")
+    val members = ParquetSchema.read(spark, s"$path/corpus")
       .filter(col(clusterCol).isin(probedClusters: _*))
       .select(col(clusterCol).as("cluster"), col(idCol).as("neighbor_id"),
         col("codes"), col("scale"))
@@ -471,7 +471,7 @@ object AnnLayout {
     * layout's `pq` artifact — codebook-sized read.
     */
   def readPqModel(spark: SparkSession, path: String): graft.ops.Pq.PqModel = {
-    val rows = spark.read.parquet(s"$path/pq")
+    val rows = ParquetSchema.read(spark, s"$path/pq")
       .orderBy("s", "code").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toIndexedSeq))
     val m = rows.map(_._1).max + 1
@@ -486,7 +486,7 @@ object AnnLayout {
     * layouts lack the column and read as raw).
     */
   def readPqResidualFlag(spark: SparkSession, path: String): Boolean = {
-    val df = spark.read.parquet(s"$path/pq")
+    val df = ParquetSchema.read(spark, s"$path/pq")
     df.columns.contains("residual") &&
       df.select("residual").head().getBoolean(0)
   }
@@ -504,7 +504,7 @@ object AnnLayout {
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
     val model = readPqModel(spark, path)
-    val reps = spark.read.parquet(s"$path/reps")
+    val reps = ParquetSchema.read(spark, s"$path/reps")
       .select(col(clusterCol).as("cluster"),
         Similarity.asDouble(col("rep_vec")).as("rv"))
       .withColumn("rn", Similarity.norm2(col("rv")))
@@ -522,7 +522,7 @@ object AnnLayout {
       .collect().map(_.get(0)).toIndexedSeq
     val isResidual = readPqResidualFlag(spark, path)
     val decoded = graft.ops.Pq.decodeExpr(col("codes"), model)
-    val membersRaw = spark.read.parquet(s"$path/corpus")
+    val membersRaw = ParquetSchema.read(spark, s"$path/corpus")
       .filter(col(clusterCol).isin(probedClusters: _*))
       .select(col(clusterCol).as("cluster"), col(idCol).as("neighbor_id"),
         col("codes"))
@@ -533,7 +533,7 @@ object AnnLayout {
         membersRaw.select(col("cluster"), col("neighbor_id"),
           decoded.as("cv"))
       else membersRaw
-        .join(broadcast(spark.read.parquet(s"$path/reps")
+        .join(broadcast(ParquetSchema.read(spark, s"$path/reps")
           .select(col(clusterCol).as("cluster"),
             Similarity.asDouble(col("rep_vec")).as("_cc"))),
           Seq("cluster"))
@@ -587,7 +587,7 @@ object AnnLayout {
     */
   def prunedCorpusScan(spark: SparkSession, path: String,
       clusterCol: String, clusters: Seq[Any]): DataFrame =
-    spark.read.parquet(s"$path/corpus")
+    ParquetSchema.read(spark, s"$path/corpus")
       .filter(col(clusterCol).isin(clusters: _*))
 }
 

@@ -2,12 +2,10 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.column.statistics.BinaryStatistics
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Copy-on-write MERGE (upsert + delete) for a Hive-partitioned
   * parquet table — the maintenance operation a 100 TB training
@@ -206,8 +204,8 @@ object CowTable {
       return MergeStats(0, 0L, 0L)
     val fs = fsOf(spark, path)
     // a partition emptied by a previous delete-all is present but
-    // holds no parquet files — reading it would defeat schema
-    // inference, and it contributes no rows anyway
+    // holds no parquet files: it contributes no rows, and it has no
+    // footer to take the table's schema from
     val liveDirs = touched.map(v => s"$path/$partCol=$v")
       .filter { d =>
         val p = new Path(d)
@@ -217,7 +215,8 @@ object CowTable {
     // partition-pruned live read: only touched directories
     val live =
       if (liveDirs.isEmpty) null
-      else spark.read.option("basePath", path).parquet(liveDirs: _*)
+      else spark.read.schema(ParquetSchema.of(spark, liveDirs: _*))
+        .option("basePath", path).parquet(liveDirs: _*)
     val tableCols =
       if (live != null) live.columns.toSeq
       else changes.columns.filterNot(_ == "op").toSeq
@@ -418,25 +417,20 @@ object CowTable {
     * batches are few by the compaction policy (see [[readMor]]).
     */
   private def logFooters(spark: SparkSession, path: String): Log = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val batches = logBatches(spark, path)
     val files = batches.flatMap(_._2)
-    Log(batches.map(_._1), files.map(_.getLen).sum, files.map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try r.getFooter finally r.close()
-    })
+    Log(batches.map(_._1), files.map(_.getLen).sum,
+      files.map(ParquetSchema.footer(spark, _)))
   }
 
   /** The changelog as one DataFrame with its `_seq` stamp column —
     * at the union of the batches' schemas (delete-only batches may
-    * omit payload columns; they read back as nulls). Every batch is
-    * written by [[appendChanges]] through Spark, which records the
-    * batch's schema in each footer, so the union comes from the
-    * footers without the Spark job schema inference would run. The
-    * read names exactly the `cseq=<N>` directories the footers came
-    * from (with the log root as `basePath`, so `cseq` is still the
-    * partition column): schema, upsert flag and rows come from one
-    * listing, and the dot-named log root itself is never a read path.
+    * omit payload columns; they read back as nulls), each taken from
+    * its footer by [[ParquetSchema.ofFooter]]. The read names exactly
+    * the `cseq=<N>` directories the footers came from (with the log
+    * root as `basePath`, so `cseq` is still the partition column):
+    * schema, upsert flag and rows come from one listing, and the
+    * dot-named log root itself is never a read path.
     */
   private[graft] def readLog(spark: SparkSession, path: String)
       : DataFrame =
@@ -444,25 +438,16 @@ object CowTable {
 
   private def readLog(spark: SparkSession, path: String,
       log: Log): DataFrame = {
-    val schema = log.footers.map { f =>
-      val json = f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      require(json != null, s"changelog batch under ${logDir(path)} " +
-        "carries no Spark schema; only appendChanges writes the log")
-      DataType.fromJson(json).asInstanceOf[StructType]
-    }.foldLeft(new StructType()) { (acc, batch) =>
-      batch.fields.foldLeft(acc) { (a, f) =>
-        if (a.fieldNames.contains(f.name)) a else a.add(f)
-      }
-    }.add("cseq", LongType)
+    val schema = log.footers.map(ParquetSchema.ofFooter(spark, _))
+      .foldLeft(new StructType()) { (acc, batch) =>
+        batch.fields.foldLeft(acc) { (a, f) =>
+          if (a.fieldNames.contains(f.name)) a else a.add(f)
+        }
+      }.add("cseq", LongType)
     spark.read.schema(schema).option("basePath", logDir(path))
       .parquet(log.seqs.map(n => s"${logDir(path)}/cseq=$n"): _*)
       .withColumnRenamed("cseq", "_seq")
   }
-
-  /** Footer key under which Spark's parquet writer records the
-    * written rows' schema (as DataType JSON).
-    */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Can the log hold an upsert? Answered from its batches' footers'
     * `op` statistics ([[logFooters]]), no Spark job: the audit admits
@@ -626,7 +611,7 @@ object CowTable {
     */
   def readMor(spark: SparkSession, path: String, idCol: String,
       partCol: String): DataFrame = {
-    val base = spark.read.option("basePath", path).parquet(path)
+    val base = ParquetSchema.read(spark, path)
     val log = logFooters(spark, path)
     if (log.seqs.isEmpty) return base
     val changes = readLog(spark, path, log)

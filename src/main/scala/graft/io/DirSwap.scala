@@ -64,7 +64,7 @@ object DirSwap {
     * was never written). Mutation-free, so safe beside a live writer.
     */
   def read(spark: SparkSession, d: Dirs): DataFrame =
-    spark.read.parquet(resolve(fsOf(spark, d.target), d).toString)
+    ParquetSchema.read(spark, resolve(fsOf(spark, d.target), d).toString)
 
   /** Finish or undo a crashed [[swap]] (rules in the object doc).
     * Writers call this on entry, before reading the target.

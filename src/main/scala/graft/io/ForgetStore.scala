@@ -180,94 +180,18 @@ object ForgetStore {
     * under DIFFERENT blob generations: group by parent (one
     * `basePath` per generation — how the stripped partition column
     * comes back), one union leg per generation. Leg count is bounded
-    * by retained-forget count, not by partition count.
-    *
-    * `schema`: the INDEX tiers' schemas are fixed by construction
-    * (this module writes every blob), and passing them skips the
-    * parquet footer-inference job Spark otherwise runs per read —
-    * the mutation faces' job chains were full of those ~25 ms blank
-    * jobs (round-17 JobProfile). Caller-schema tiers (corpus, ann)
-    * keep inference.
+    * by retained-forget count, not by partition count. Each leg takes
+    * its schema from one footer ([[ParquetSchema]]), so building the
+    * read runs no Spark job.
     */
-  private def readPartDirs(spark: SparkSession, dirs: Seq[String],
-      schema: org.apache.spark.sql.types.StructType = null)
+  private def readPartDirs(spark: SparkSession, dirs: Seq[String])
       : DataFrame =
     dirs.groupBy(d => new Path(d).getParent.toString).toSeq.sortBy(_._1)
       .map { case (base, ds) =>
-        val r = spark.read.option("basePath", base)
-        if (schema != null) r.schema(schema).parquet(ds.sorted: _*)
-        else readInferCached(spark, base, ds.sorted)
+        val sorted = ds.sorted
+        spark.read.schema(ParquetSchema.of(spark, sorted: _*))
+          .option("basePath", base).parquet(sorted: _*)
       }.reduce(_.unionByName(_))
-
-  /** Inferred-schema cache for the CALLER-schema tiers (corpus, ann —
-    * their at-rest schemas are caller-defined, so no static
-    * `StructType` can replace inference the way the fixed index tiers'
-    * did in round 17). Key = the blob GENERATION directory, which is
-    * immutable by construction: a generation is written once under
-    * `blobs/<artifact>/g<epoch>` and never modified (mutations write
-    * NEW generations; GC only deletes whole unreferenced ones). The
-    * first read of a generation pays Spark's footer-inference job and
-    * caches exactly what inference returned — so behavior is
-    * byte-identical to inference, minus the repeat ~25 ms driver jobs
-    * that round-17 profiling showed filling the mutator and serve
-    * chains (a single q_ingest_snapshot run re-inferred the same
-    * corpus generation at entry, at the collision probe, and at the
-    * serve tail). In-JVM metadata only — nothing persists across
-    * processes, and the cached object is a schema, not data.
-    * [[gcBlobs]] evicts a generation's keys when it deletes the
-    * generation, so the cache is bounded by the retained generations.
-    */
-  private val inferredSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  /** The cached generation keys, for specs. */
-  private[graft] def cachedSchemaKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    inferredSchemas.keySet.asScala.toSet
-  }
-
-  private def readInferCached(spark: SparkSession, base: String,
-      ds: Seq[String]): DataFrame = {
-    val r = spark.read.option("basePath", base)
-    val cached = inferredSchemas.get(base)
-    if (cached != null) r.schema(cached).parquet(ds: _*)
-    else {
-      val df = r.parquet(ds: _*)
-      inferredSchemas.put(base, df.schema)
-      df
-    }
-  }
-
-  /** [[readInferCached]] for a single non-partitioned blob dir (the
-    * ann/reps codebook — also an immutable generation).
-    */
-  private def readDirCached(spark: SparkSession, dir: String): DataFrame = {
-    val cached = inferredSchemas.get(dir)
-    if (cached != null) spark.read.schema(cached).parquet(dir)
-    else {
-      val df = spark.read.parquet(dir)
-      inferredSchemas.put(dir, df.schema)
-      df
-    }
-  }
-
-  // fixed at-rest schemas of the index tiers (see [[readPartDirs]]);
-  // matching the written types exactly is pinned by every spec that
-  // reads a store back (a mismatch fails the read loudly)
-  import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
-  private val PostingsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("term", StringType),
-    StructField("tf", LongType), StructField("bucket", IntegerType)))
-  private val DlSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("dl", LongType),
-    StructField("bucket", IntegerType)))
-  private val PosSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("term", StringType),
-    StructField("tf", LongType),
-    StructField("pos", ArrayType(IntegerType)),
-    StructField("bucket", IntegerType)))
-  private val DfSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType)))
 
   private def entriesUnder(m: Map[String, String], prefix: String)
       : Seq[(String, String)] =
@@ -342,7 +266,7 @@ object ForgetStore {
   private def scalarsOf(spark: SparkSession, m: Map[String, String])
       : (Long, Long) =
     storeScalars(m).getOrElse {
-      val meta = spark.read.parquet(m("bm25/meta")).head()
+      val meta = ParquetSchema.read(spark, m("bm25/meta")).head()
       (meta.getAs[Long]("n_docs"), meta.getAs[Long]("total_len"))
     }
 
@@ -410,12 +334,11 @@ object ForgetStore {
   private def bm25IndexOf(spark: SparkSession, m: Map[String, String])
       : (Retrieval.Bm25Index, Long) = {
     val postings = readPartDirs(spark,
-        entriesUnder(m, "bm25/postings/").map(_._2), PostingsSchema)
+        entriesUnder(m, "bm25/postings/").map(_._2))
       .select("doc_id", "term", "tf")
-    val dl = readPartDirs(spark, entriesUnder(m, "bm25/dl/").map(_._2),
-        DlSchema)
+    val dl = readPartDirs(spark, entriesUnder(m, "bm25/dl/").map(_._2))
       .select("doc_id", "dl")
-    val dfT = spark.read.schema(DfSchema).parquet(m("bm25/df"))
+    val dfT = ParquetSchema.read(spark, m("bm25/df"))
     val (nDocs, totalLen) = scalarsOf(spark, m)
     (Retrieval.Bm25Index(postings, dfT, dl, nDocs,
       Math.floorDiv(totalLen, math.max(nDocs, 1L))), totalLen)
@@ -435,10 +358,9 @@ object ForgetStore {
   private def positionalIndexOf(spark: SparkSession,
       m: Map[String, String]): Retrieval.PositionalIndex = {
     val postings = readPartDirs(spark,
-        entriesUnder(m, "pos/postings/").map(_._2), PosSchema)
+        entriesUnder(m, "pos/postings/").map(_._2))
       .select("doc_id", "term", "tf", "pos")
-    val dl = readPartDirs(spark, entriesUnder(m, "bm25/dl/").map(_._2),
-        DlSchema)
+    val dl = readPartDirs(spark, entriesUnder(m, "bm25/dl/").map(_._2))
       .select("doc_id", "dl")
     val (nDocs, totalLen) = scalarsOf(spark, m)
     Retrieval.PositionalIndex(postings, dl, nDocs,
@@ -455,8 +377,8 @@ object ForgetStore {
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
     val m = currentManifest(spark, root)._2
-    AnnLayout.knnIvfOn(readDirCached(spark, m("ann/reps")), queries, k,
-      nprobe, idCol, vecCol, clusterCol,
+    AnnLayout.knnIvfOn(ParquetSchema.read(spark, m("ann/reps")), queries,
+      k, nprobe, idCol, vecCol, clusterCol,
       pc => readAnnCorpusOf(spark, m)
         .filter(col(clusterCol).isin(pc: _*)))
   }
@@ -526,8 +448,8 @@ object ForgetStore {
       idCol: String = "vec_id", vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
     val m = manifestAt(spark, root, asOf)
-    AnnLayout.knnIvfOn(readDirCached(spark, m("ann/reps")), queries, k,
-      nprobe, idCol, vecCol, clusterCol,
+    AnnLayout.knnIvfOn(ParquetSchema.read(spark, m("ann/reps")), queries,
+      k, nprobe, idCol, vecCol, clusterCol,
       pc => readAnnCorpusOf(spark, m)
         .filter(col(clusterCol).isin(pc: _*)))
   }
@@ -559,15 +481,7 @@ object ForgetStore {
     fs.listStatus(blobs).filter(_.isDirectory).foreach { art =>
       fs.listStatus(art.getPath).filter(_.isDirectory).foreach { gen =>
         val rel = s"blobs/${art.getPath.getName}/${gen.getPath.getName}"
-        if (!referenced.contains(rel)) {
-          fs.delete(gen.getPath, true)
-          val g = gen.getPath.toString
-          inferredSchemas.keySet.removeIf { k =>
-            val q = new Path(k).makeQualified(fs.getUri,
-              fs.getWorkingDirectory).toString
-            q == g || q.startsWith(g + "/")
-          }
-        }
+        if (!referenced.contains(rel)) fs.delete(gen.getPath, true)
       }
     }
   }
@@ -618,9 +532,7 @@ object ForgetStore {
         s"$posGen/postings/$d"
     }
     val bmGen = "blobs/bm25/g1"
-    val posBack = spark.read
-      .option("basePath", s"$root/$posGen/postings")
-      .parquet(s"$root/$posGen/postings")
+    val posBack = ParquetSchema.read(spark, s"$root/$posGen/postings")
       .select("doc_id", "term", "tf", "bucket")
     Bucketing.writePartitioned(posBack,
       s"$root/$bmGen/postings", Seq("bucket"), Seq("doc_id", "term"))
@@ -637,7 +549,7 @@ object ForgetStore {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$root/$bmGen/df")
     entries("bm25/df") = s"$bmGen/df"
-    val dlBack = spark.read.parquet(s"$root/$bmGen/dl")
+    val dlBack = ParquetSchema.read(spark, s"$root/$bmGen/dl")
       .agg(count(lit(1)).as("n"),
         coalesce(sum("dl"), lit(0L)).as("l")).head()
     writeMeta(spark, s"$root/$bmGen/meta", dlBack.getLong(0),
@@ -666,7 +578,7 @@ object ForgetStore {
     val counts = docs
       .select(col(partCol).cast("string").as("_p"),
         lit("corpus/").as("_art"))
-      .unionByName(spark.read.parquet(s"$root/$annGen/corpus")
+      .unionByName(ParquetSchema.read(spark, s"$root/$annGen/corpus")
         .select(col(clusterCol).cast("string").as("_p"),
           lit("ann/corpus/").as("_art")))
       .groupBy("_art", "_p").agg(count(lit(1)).as("_n"))
@@ -759,7 +671,7 @@ object ForgetStore {
           col(clusterCol).cast("string").as("_p"),
           lit("ann").as("_art"), lit(0L).as("_dl"))) ++
       (if (dlDirs.nonEmpty)
-        Seq(readPartDirs(spark, dlDirs, DlSchema)
+        Seq(readPartDirs(spark, dlDirs)
           .filter(AnnLayout.idPredicate("doc_id", ids))
           .select(col("doc_id").cast("long").as("_id"),
             lit(null).cast("string").as("_p"), lit("dl").as("_art"),
@@ -818,12 +730,12 @@ object ForgetStore {
         val bmGen = gen.format("bm25")
         val postTouched = readPartDirs(spark,
           touchedBkts.flatMap(b => groupDirs(m, s"bm25/postings/$b"))
-            .toIndexedSeq, PostingsSchema)
+            .toIndexedSeq)
         // per-term df decrement from the removed docs' postings
         val dfDec = postTouched
           .filter(AnnLayout.idPredicate("doc_id", ids))
           .groupBy("term").agg(count(lit(1)).as("_gone"))
-        spark.read.schema(DfSchema).parquet(m("bm25/df"))
+        ParquetSchema.read(spark, m("bm25/df"))
           .join(dfDec, Seq("term"), "left_outer")
           .select(col("term"),
             (col("df") - coalesce(col("_gone"), lit(0L))).as("df"))
@@ -876,8 +788,7 @@ object ForgetStore {
       else {
         val posGen = gen.format("pos")
         readPartDirs(spark, touchedBkts
-            .flatMap(b => groupDirs(m, s"pos/postings/$b")).toIndexedSeq,
-          PosSchema)
+            .flatMap(b => groupDirs(m, s"pos/postings/$b")).toIndexedSeq)
           .join(broadcast(idsDf.withColumnRenamed(docIdCol, "doc_id")),
             Seq("doc_id"), "left_anti")
           .repartition(col("bucket"))
@@ -1131,9 +1042,8 @@ object ForgetStore {
 
     // -- id-collision probe, both partitioned artifacts in one fused
     // pushed point-read (the forget probe with REFUSE semantics).
-    // The two reads are HOISTED and reused below (tableCols/annCols):
-    // each readCorpusOf call pays a schema-inference pass, and the
-    // ingest needed two of each before (round 17).
+    // The two reads are reused below for their columns
+    // (tableCols/annCols).
     val corpusOld = readCorpusOf(spark, m)
     val annOld = readAnnCorpusOf(spark, m)
     val collide = (if (newIds.nonEmpty)
@@ -1235,7 +1145,7 @@ object ForgetStore {
         val oldPostDirs = touchedBkts.flatMap(b =>
           groupDirs(m, s"bm25/postings/$b"))
         if (oldPostDirs.nonEmpty)
-          readPartDirs(spark, oldPostDirs, PostingsSchema)
+          readPartDirs(spark, oldPostDirs)
             .select("doc_id", "term", "tf")
             .unionByName(fragPost)
         else fragPost
@@ -1248,7 +1158,7 @@ object ForgetStore {
         val oldDlDirs = touchedBkts.flatMap(b =>
           groupDirs(m, s"bm25/dl/$b"))
         if (oldDlDirs.nonEmpty)
-          readPartDirs(spark, oldDlDirs, DlSchema).select("doc_id", "dl")
+          readPartDirs(spark, oldDlDirs).select("doc_id", "dl")
             .unionByName(fragDl)
         else fragDl
       }).withColumn("bucket", bkt)
@@ -1256,7 +1166,7 @@ object ForgetStore {
         .sortWithinPartitions(col("bucket"), col("doc_id"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$root/$bmGen/dl")
-      spark.read.schema(DfSchema).parquet(m("bm25/df"))
+      ParquetSchema.read(spark, m("bm25/df"))
         .withColumnRenamed("df", "dfa")
         .join(fragDf.withColumnRenamed("df", "dfb"), Seq("term"),
           "full_outer")
@@ -1293,7 +1203,7 @@ object ForgetStore {
           val oldPosDirs = touchedBkts.flatMap(b =>
             groupDirs(m, s"pos/postings/$b"))
           if (oldPosDirs.nonEmpty)
-            readPartDirs(spark, oldPosDirs, PosSchema)
+            readPartDirs(spark, oldPosDirs)
               .select("doc_id", "term", "tf", "pos")
               .unionByName(posFragSel)
           else posFragSel
@@ -1320,7 +1230,7 @@ object ForgetStore {
     val annStage: () => () => Unit = () =>
       if (annAdded == 0) () => ()
       else {
-        val reps = readDirCached(spark, m("ann/reps"))
+        val reps = ParquetSchema.read(spark, m("ann/reps"))
         val asg = graft.ops.Similarity.assignNearest(newEmb, reps,
             vecIdCol, vecCol, clusterCol = clusterCol,
             centVecCol = "rep_vec")
@@ -1431,14 +1341,13 @@ object ForgetStore {
     // rationale — no failpoints here at all); manifest mutation stays
     // sequential via the appliers.
     def fold(prefix: String, art: String, sub: String, pc: String,
-        sortCols: Seq[String], counted: Boolean,
-        schema: StructType = null): () => () => Int = () => {
+        sortCols: Seq[String], counted: Boolean): () => () => Int = () => {
       val bases = fragBases.filter(_.startsWith(prefix))
       if (bases.isEmpty) () => 0
       else {
         val dirs = bases.flatMap(b => groupDirs(m, b)).toIndexedSeq
         val out = s"${gen.format(art)}$sub"
-        readPartDirs(spark, dirs, schema)
+        readPartDirs(spark, dirs)
           .repartition(col(pc))
           .sortWithinPartitions((pc +: sortCols).map(col): _*)
           .write.mode("overwrite").partitionBy(pc)
@@ -1467,11 +1376,11 @@ object ForgetStore {
       fold("corpus/", "corpus", "", partCol, Seq(docIdCol),
         counted = true),
       fold("bm25/postings/", "bm25", "/postings", "bucket",
-        Seq("doc_id", "term"), counted = false, PostingsSchema),
+        Seq("doc_id", "term"), counted = false),
       fold("bm25/dl/", "bm25", "/dl", "bucket", Seq("doc_id"),
-        counted = false, DlSchema),
+        counted = false),
       fold("pos/postings/", "pos", "/postings", "bucket",
-        Seq("doc_id", "term"), counted = false, PosSchema),
+        Seq("doc_id", "term"), counted = false),
       fold("ann/corpus/", "ann", "/corpus", clusterCol,
         Seq(vecIdCol), counted = true))
     val counts = {
@@ -1530,14 +1439,13 @@ object ForgetStore {
     // Spark work, sequential manifest mutation (the [[runStages]]
     // shape; no failpoints in this op)
     def rewrite(prefix: String, art: String, sub: String,
-        cols: Seq[String], sortCols: Seq[String],
-        schema: StructType = null): () => () => Unit =
+        cols: Seq[String], sortCols: Seq[String]): () => () => Unit =
       () => {
         val old = entriesUnder(m, prefix)
         if (old.isEmpty) () => ()
         else {
           val out = s"${gen.format(art)}$sub"
-          readPartDirs(spark, old.map(_._2), schema)
+          readPartDirs(spark, old.map(_._2))
             .select(cols.map(col): _*)
             .withColumn("bucket", bkt)
             .repartition(col("bucket"))
@@ -1555,13 +1463,11 @@ object ForgetStore {
       }
     runStages(parallel = true, NoFailpoint, Seq(
       "bm25/postings" -> rewrite("bm25/postings/", "bm25", "/postings",
-        Seq("doc_id", "term", "tf"), Seq("doc_id", "term"),
-        PostingsSchema),
+        Seq("doc_id", "term", "tf"), Seq("doc_id", "term")),
       "bm25/dl" -> rewrite("bm25/dl/", "bm25", "/dl",
-        Seq("doc_id", "dl"), Seq("doc_id"), DlSchema),
+        Seq("doc_id", "dl"), Seq("doc_id")),
       "pos/postings" -> rewrite("pos/postings/", "pos", "/postings",
-        Seq("doc_id", "term", "tf", "pos"), Seq("doc_id", "term"),
-        PosSchema)))
+        Seq("doc_id", "term", "tf", "pos"), Seq("doc_id", "term"))))
     entries("conf/buckets") = newBuckets.toString
     EpochLayout.publish(spark, root, retain) { dir =>
       // corpus/ann counts ride through untouched; bm25/pos entries
@@ -1576,7 +1482,7 @@ object ForgetStore {
       docIdCol: String): DataFrame =
     readPartDirs(spark,
         touchedBkts.flatMap(b => groupDirs(m, s"bm25/dl/$b"))
-          .toIndexedSeq, DlSchema)
+          .toIndexedSeq)
       .join(broadcast(idsDf.withColumnRenamed(docIdCol, "doc_id")),
         Seq("doc_id"), "left_anti")
 
@@ -1669,20 +1575,17 @@ object ForgetStore {
     // postings and dl carry different schemas, so they are separate
     // read legs (the id projection happens before the tagged union)
     val legs = Seq(
-      ("corpus", touchedKeys.filter(_.startsWith("corpus/")), docIdCol,
-        null: StructType),
+      ("corpus", touchedKeys.filter(_.startsWith("corpus/")), docIdCol),
       ("bm25", touchedKeys.filter(_.startsWith("bm25/postings/")),
-        "doc_id", PostingsSchema),
-      ("bm25", touchedKeys.filter(_.startsWith("bm25/dl/")), "doc_id",
-        DlSchema),
+        "doc_id"),
+      ("bm25", touchedKeys.filter(_.startsWith("bm25/dl/")), "doc_id"),
       ("pos", touchedKeys.filter(_.startsWith("pos/postings/")),
-        "doc_id", PosSchema),
-      ("ann", touchedKeys.filter(_.startsWith("ann/")), vecIdCol,
-        null: StructType))
-      .map { case (art, ks, c, sch) => (art, ks.flatMap(m.get), c, sch) }
+        "doc_id"),
+      ("ann", touchedKeys.filter(_.startsWith("ann/")), vecIdCol))
+      .map { case (art, ks, c) => (art, ks.flatMap(m.get), c) }
       .filter(_._2.nonEmpty)
-      .map { case (art, dirs, c, sch) =>
-        readPartDirs(spark, dirs, sch)
+      .map { case (art, dirs, c) =>
+        readPartDirs(spark, dirs)
           .filter(AnnLayout.idPredicate(c, ids))
           .select(col(c).cast("long").as("_fid"), lit(art).as("_art"))
       }

@@ -48,7 +48,7 @@ object FrozenStore {
     */
   def frozenDf(spark: SparkSession, key: String)
       (build: => DataFrame): DataFrame =
-    spark.read.parquet(
+    ParquetSchema.read(spark,
       frozenPath(key)(dir => build.write.mode("overwrite").parquet(dir)))
 
   /** A driver-sized derived value (a sketch cut, a threshold pair, a

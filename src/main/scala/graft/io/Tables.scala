@@ -26,7 +26,7 @@ object Tables {
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    withNanosAsLong(spark).read.parquet(s"$sfDir/$name.parquet")
+    ParquetSchema.read(withNanosAsLong(spark), s"$sfDir/$name.parquet")
 
   /** Epoch-millis expression for a `ts` column, dispatched on the type
     * it actually LOADED as — the physical parquet type of the events

@@ -206,6 +206,11 @@ object RelationalQ {
     * (ts_ms, event_id) is total. The average is sum/count in double
     * (Spark's avg(decimal) and DuckDB's avg(decimal) return different
     * types — the explicit quotient is engine-portable).
+    *
+    * Bound of the cumulative form below: the running `sum` of a
+    * `decimal(20,6)` is `decimal(30,6)`, which holds 24 integer
+    * digits; each addend is below 1e14, so the sum can overflow only
+    * past 1e10 rows in one `user_id` partition.
     */
   val qMovingAvg = Q(
     "q_moving_avg",
@@ -1169,6 +1174,11 @@ object RelationalQ {
     * engines (a ROWS frame would be nondeterministic under ts ties).
     * Scale shape: one shuffle on user_id, then a per-partition sort +
     * sliding frame scan — the same plan a 1000-executor run wants.
+    *
+    * Bound of the cumulative form below: the running `sum` of a
+    * `decimal(20,6)` is `decimal(30,6)`, which holds 24 integer
+    * digits; each addend is below 1e14, so the sum can overflow only
+    * past 1e10 rows in one `user_id` partition.
     */
   val qRunningRange = Q(
     "q_running_range",

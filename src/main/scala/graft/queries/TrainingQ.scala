@@ -333,6 +333,11 @@ object TrainingQ {
     * signatures, band join and the ≤ k cut exactly (full DuckDB
     * levenshtein vs Spark's banded threshold DP — same surviving
     * values).
+    *
+    * Bound: candidate volume is quadratic in duplicate-cluster size —
+    * c docs sharing a band key yield c(c−1)/2 pairs, each an
+    * edit-distance DP. The sf0.1 floor record shows the imbalance: one
+    * task of 1,202 ms, 25.6× the median (`plans/r19/bench_floor_sf0.1.json`).
     */
   val qDedupEditdist = Q(
     "q_dedup_editdist",

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
 import org.apache.hadoop.fs.Path
-import graft.io.DirSwap
+import graft.io.{DirSwap, ParquetSchema}
 import graft.ops.{Ingest, Latest}
 
 /** The §3.1 ingest hot path as one Structured Streaming query:
@@ -150,7 +150,7 @@ object Pipeline {
     val fs = new Path(latestDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base =
       if (withCurrent && fs.exists(new Path(d.target)))
-        spark.read.parquet(d.target).unionByName(rows)
+        ParquetSchema.read(spark, d.target).unionByName(rows)
       else rows
     Latest.keepLastPerKey(base, keyCols, orderCols)
       .write.mode("overwrite").parquet(d.stage)
@@ -193,7 +193,7 @@ object Pipeline {
       .flatMap { p =>
         val id = p.getName.stripPrefix("batch=").toLong
         try {
-          appendBatch(spark.read.parquet(p.toString), sink, id)
+          appendBatch(ParquetSchema.read(spark, p.toString), sink, id)
           fs.delete(p, true)
           Some(id)
         } catch { case e: Exception =>
@@ -225,7 +225,7 @@ object Pipeline {
     // partition discovery surfaces the batch=<id> layout as a `batch`
     // column the row schema never had — the range filter prunes on it,
     // then it is dropped before the union
-    val appendedRaw = spark.read.parquet(appendDir)
+    val appendedRaw = ParquetSchema.read(spark, appendDir)
     val appended = fromBatch
       .fold(appendedRaw)(b => appendedRaw.filter(col("batch") >= b))
       .drop("batch")
