@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `GraftExtensions` registered (native `graft_dot` SQL function +
   *    the HOF→native dot-product rewrite rule);
-  *  - AQE on (runtime coalescing + skew-join split — the default skew
-  *    answer, see Skew.saltedJoin for the explicit fallback);
+  *  - AQE on (runtime coalescing + skew-join split — the one skew
+  *    mechanism; lower `skewedPartitionThresholdInBytes` when a hot
+  *    partition sits under the 256 MB default);
   *  - runtime bloom-filter injection pinned on (Catalyst's automatic
   *    half of the Bloom story: a selective filter on one shuffle-join
   *    side gets a sketch prefilter injected on the other;

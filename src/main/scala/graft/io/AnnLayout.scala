@@ -585,7 +585,7 @@ object AnnLayout {
     * so tests can assert on `inputFiles` (only probed `cluster=<id>/`
     * directories appear).
     */
-  def prunedCorpusScan(spark: SparkSession, path: String,
+  private[graft] def prunedCorpusScan(spark: SparkSession, path: String,
       clusterCol: String, clusters: Seq[Any]): DataFrame =
     ParquetSchema.read(spark, s"$path/corpus")
       .filter(col(clusterCol).isin(clusters: _*))

@@ -3,35 +3,18 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftright}
 
-/** Bucketed table layout — the at-rest half of the shuffle story: a
-  * table written bucketed+sorted by its join/aggregation key is
-  * already hash-partitioned on disk, so every subsequent join or
-  * aggregation on that key runs WITHOUT an exchange (and, with sorted
-  * buckets, without a sort). At 100 TB this converts the recurring
-  * fact⋈fact shuffle — the single most expensive operation in the
-  * pipeline — into a one-time cost paid at write.
-  *
-  * Spark-native bucketing (no Hive needed): bucket count must match
-  * across co-located tables; readers get `SortMergeJoin` over two
-  * bucketed scans with no Exchange (asserted in SkewCcSpec).
+/** At-rest layouts: Hive-style partitioned writes, and the Morton
+  * (Z-order) keys that faces sort by to cluster rows close in more
+  * than one dimension.
   */
 object Bucketing {
 
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      keyCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .saveAsTable(table)
-
   /** Hive-style partitioned layout — the at-rest half of PREDICATE
-    * pruning (as [[writeBucketed]] is of the shuffle): a tick history
-    * laid out `partition_col=value/` lets any reader with an equality
-    * or range predicate on the partition column skip whole directories
-    * before a single byte is read (`PartitionFilters` in the scan
-    * node), which at a 100 TB history is the difference between
-    * scanning a day and scanning a decade.
+    * pruning: a tick history laid out `partition_col=value/` lets any
+    * reader with an equality or range predicate on the partition
+    * column skip whole directories before a single byte is read
+    * (`PartitionFilters` in the scan node), which at a 100 TB history
+    * is the difference between scanning a day and scanning a decade.
     *
     * The `repartition(partitionCols)` before the write is the
     * small-files guard: without it every input partition writes one
@@ -130,31 +113,4 @@ object Bucketing {
     } yield s"(((CAST($d AS BIGINT) >> $j) & 1) << ${j * k + i})"
     terms.mkString("(", " | ", ")")
   }
-
-  /** Z-ordered file layout — multi-dimensional pruning where
-    * [[writePartitioned]] is one-dimensional: range-partitioning and
-    * sorting by the interleaved key gives every file a tight bounding
-    * BOX in (a, b) space, so a selective predicate on EITHER
-    * dimension (or both) skips most files via parquet min/max stats.
-    * The trade against a plain sort on `a`: a-only predicates touch a
-    * few more files (√-factor), but b-only predicates go from
-    * touching every file to touching a √-fraction — the right layout
-    * when a 100 TB table serves predicates on more than one column
-    * (LayoutSpec measures both sides of the trade).
-    */
-  def writeZOrdered(df: DataFrame, path: String, dimA: Column,
-      dimB: Column, numFiles: Int,
-      maxRecordsPerFile: Long = 5000000L): Unit =
-    writeZOrderedN(df, path, Seq(dimA, dimB), numFiles, maxRecordsPerFile)
-
-  /** [[writeZOrdered]] over 2–8 dimensions via [[zValueN]]. */
-  def writeZOrderedN(df: DataFrame, path: String, dims: Seq[Column],
-      numFiles: Int, maxRecordsPerFile: Long = 5000000L): Unit =
-    df.withColumn("_zkey", zValueN(dims))
-      .repartitionByRange(numFiles, col("_zkey"))
-      .sortWithinPartitions("_zkey")
-      .drop("_zkey")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
 }

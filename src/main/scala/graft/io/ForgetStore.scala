@@ -317,7 +317,7 @@ object ForgetStore {
   // ---- readers (all resolve ONE epoch — consistent by construction) --
 
   /** The document corpus at the current snapshot. */
-  def readCorpus(spark: SparkSession, root: String): DataFrame =
+  private[graft] def readCorpus(spark: SparkSession, root: String): DataFrame =
     readCorpusOf(spark, currentManifest(spark, root)._2)
 
   private def readCorpusOf(spark: SparkSession,
@@ -372,7 +372,7 @@ object ForgetStore {
     * clusters → partition-dir filter, same pruning discipline as the
     * flat layout).
     */
-  def knn(spark: SparkSession, root: String, queries: DataFrame,
+  private[graft] def knn(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "label"): DataFrame = {
@@ -384,7 +384,7 @@ object ForgetStore {
   }
 
   /** The ANN member table at the current snapshot. */
-  def readAnnCorpus(spark: SparkSession, root: String): DataFrame =
+  private[graft] def readAnnCorpus(spark: SparkSession, root: String): DataFrame =
     readAnnCorpusOf(spark, currentManifest(spark, root)._2)
 
   private def readAnnCorpusOf(spark: SparkSession,
@@ -419,40 +419,10 @@ object ForgetStore {
     }
   }
 
-  /** [[readCorpus]] as of a retained epoch. */
-  def readCorpusAt(spark: SparkSession, root: String,
-      asOf: Long): DataFrame =
-    readCorpusOf(spark, manifestAt(spark, root, asOf))
-
   /** [[bm25Index]] as of a retained epoch. */
   def bm25IndexAt(spark: SparkSession, root: String,
       asOf: Long): (Retrieval.Bm25Index, Long) =
     bm25IndexOf(spark, manifestAt(spark, root, asOf))
-
-  /** [[positionalIndex]] as of a retained epoch. */
-  def positionalIndexAt(spark: SparkSession, root: String,
-      asOf: Long): Retrieval.PositionalIndex =
-    positionalIndexOf(spark, manifestAt(spark, root, asOf))
-
-  /** [[readAnnCorpus]] as of a retained epoch. */
-  def readAnnCorpusAt(spark: SparkSession, root: String,
-      asOf: Long): DataFrame =
-    readAnnCorpusOf(spark, manifestAt(spark, root, asOf))
-
-  /** [[knn]] as of a retained epoch — reps and cluster dirs resolve
-    * from the same historical manifest, so the probe prunes against
-    * the codebook that epoch actually served.
-    */
-  def knnAt(spark: SparkSession, root: String, asOf: Long,
-      queries: DataFrame, k: Int, nprobe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      clusterCol: String = "label"): DataFrame = {
-    val m = manifestAt(spark, root, asOf)
-    AnnLayout.knnIvfOn(ParquetSchema.read(spark, m("ann/reps")), queries,
-      k, nprobe, idCol, vecCol, clusterCol,
-      pc => readAnnCorpusOf(spark, m)
-        .filter(col(clusterCol).isin(pc: _*)))
-  }
 
   // ---- blob generation GC -------------------------------------------
 
@@ -944,9 +914,9 @@ object ForgetStore {
     * corpus (or an embedding id already in the ann tier) REFUSES
     * before any write; an upsert is the documented forget + ingest
     * pair. The merged index tiers are VALUE-IDENTICAL to a fresh
-    * build on the union corpus (the [[Retrieval.mergeIndex]] /
-    * [[Retrieval.mergePositionalIndex]] shard-and-sum contract —
-    * every statistic is a sum over docs), so serving after ingest
+    * build on the union corpus (the [[Retrieval.mergeIndex]]
+    * shard-and-sum contract, applied to both tiers — every statistic
+    * is a sum over docs), so serving after ingest
     * hash-equals serving over init(old ∪ new); the ann tier follows
     * the FROZEN-QUANTIZER rule instead (new members assign to the
     * existing codebook, as [[AnnLayout.deleteTrained]] removes them

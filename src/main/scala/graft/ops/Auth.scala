@@ -41,12 +41,4 @@ object Auth {
     facts.select(hashKey(col(presentedKeyCol)).as("key_hash"),
         col(tsCol).as("last_used_at"))
       .groupBy("key_hash").agg(max(col("last_used_at")).as("last_used_at"))
-
-  /** S6/F3 — per-client config lookup; a missing row means identity
-    * transform downstream (null config columns), hence left-outer.
-    */
-  def configLookup(facts: DataFrame, configs: DataFrame,
-      factClientCol: String, configClientCol: String = "client_id"): DataFrame =
-    facts.join(broadcast(configs),
-      facts(factClientCol) === configs(configClientCol), "left")
 }

@@ -61,54 +61,6 @@ object Bloom {
       ColumnBridge.column(BloomFilterMightContain(
         Literal(bytes), ColumnBridge.expression(xxhash64(key)))))
 
-  /** Probe whose sketch is built INSIDE the plan as an uncorrelated
-    * scalar subquery — the mechanism Catalyst's own InjectRuntimeFilter
-    * emits. Differences from [[build]] + [[mightContain]]: the build
-    * aggregation runs when the query runs (nothing executes at
-    * composition time), and the sketch bytes reach executors as the
-    * subquery's result instead of a plan-embedded literal — lifting
-    * the tens-of-MB literal ceiling to exclusion lists of hundreds of
-    * millions of keys. Batch-only: Spark rejects subqueries in
-    * streaming plans, so the streaming path keeps the literal form.
-    */
-  def mightContainSubquery(exclusions: DataFrame, exKey: Column,
-      probeKey: Column, expectedItems: Long, fpp: Double = 0.01): Column = {
-    val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    val agg = new BloomFilterAggregate(
-      ColumnBridge.expression(xxhash64(exKey)),
-      Literal(expectedItems), Literal(numBits)).toAggregateExpression()
-    val subPlan = exclusions.select(ColumnBridge.column(agg).as("bf"))
-      .queryExecution.analyzed
-    ColumnBridge.column(BloomFilterMightContain(
-      org.apache.spark.sql.catalyst.expressions.ScalarSubquery(subPlan),
-      ColumnBridge.expression(xxhash64(probeKey))))
-  }
-
-  /** [[antiJoin]] in the subquery formulation: same exact semantics
-    * and split (provably-unmatched rows bypass; candidates pay the
-    * exact join), but the sketch is a subquery result, so the
-    * exclusion side may hold hundreds of millions of keys. The two
-    * probe sites share one build — Catalyst's ReuseSubquery collapses
-    * identical subquery plans to a single execution. An EMPTY
-    * exclusion side yields a null sketch and a null probe;
-    * `coalesce(probe, false)` maps that to "nothing matches", which
-    * routes every row down the bypass branch — the correct anti join
-    * against an empty set.
-    */
-  def antiJoinSubquery(big: DataFrame, bigKey: Column, small: DataFrame,
-      smallKey: Column, expectedItems: Long,
-      fpp: Double = 0.01): DataFrame = {
-    require(!big.columns.contains("_bloom_key"),
-      "antiJoinSubquery reserves the internal column name _bloom_key; " +
-        "rename or drop it on the big side first")
-    val probe = coalesce(
-      mightContainSubquery(small, smallKey, bigKey, expectedItems, fpp),
-      lit(false))
-    val keys = small.select(smallKey.as("_bloom_key")).distinct()
-    big.filter(!probe).unionByName(
-      big.filter(probe).join(keys, bigKey === col("_bloom_key"), "left_anti"))
-  }
-
   /** Bitwise union of two sketches — incremental exclusion-list
     * maintenance: yesterday's sketch ∪ today's delta without
     * re-aggregating the full history. Both sides MUST have been built

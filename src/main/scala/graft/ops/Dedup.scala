@@ -37,73 +37,6 @@ object Dedup {
     exact(docs.withColumn(textCol, TextOps.canonicalize(col(textCol))),
       idCol, textCol)
 
-  /** Streaming exact dedup: suppress records whose key columns were
-    * already seen, with state BOUNDED by the event-time watermark —
-    * a duplicate arriving within `delay` of the first occurrence is
-    * dropped; key state older than the watermark is evicted, so state
-    * is O(keys per watermark window), not O(all keys ever). This is
-    * the unbounded-feed face of [[exact]]: an infinite dedup needs a
-    * horizon, and the watermark is it.
-    */
-  def exactStreaming(docs: DataFrame, keyCols: Seq[String],
-      eventTimeCol: String, delay: String): DataFrame =
-    docs.withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
-  /** Streaming dedup against a STATIC history corpus — the third
-    * dedup horizon, complementing [[exact]] (one batch) and
-    * [[exactStreaming]] (within-stream, watermark-bounded): drop
-    * stream records whose key already exists in an at-rest history
-    * too large to hold as streaming state and too large to broadcast.
-    *
-    * Shape: the history's keys fold once, at query build, into a
-    * [[Bloom]] sketch (~1.2 MB per 1M keys at 1 % fpp). Stream rows
-    * the sketch proves UNSEEN pass straight through map-side — at a
-    * mature pipeline that is almost every record — and only the
-    * might-contain slice (true re-ingests + ~fpp) pays the
-    * stream-static anti join against the history table, where
-    * parquet bloom/stats pruning meets a tiny probe side. Exact by
-    * the no-false-negative argument: a sketch false positive is
-    * cleared by the join; a true historical dup is dropped by it.
-    * Compose with [[exactStreaming]] upstream for duplicates WITHIN
-    * the stream. Sketch-size ceiling (plan-embedded literal) is
-    * tens of MB ≈ tens of millions of history keys; beyond that,
-    * shard the history by key range into per-shard sketches
-    * ([[Bloom.union]] maintains them incrementally as history grows).
-    *
-    * STALENESS CONTRACT — the history must be STATIC for the life of
-    * the query: the sketch folds ONCE at query build, so a key
-    * appended to the history table afterwards probes false, bypasses
-    * the exact anti join, and its duplicate is ADMITTED. (The exact
-    * anti-join branch alone stays correct for grown histories — the
-    * stream-static join re-reads the table per micro-batch — but the
-    * fast path in front of it does not.) To pick up history growth,
-    * restart the query (checkpointed offsets make that cheap; the
-    * sketch rebuilds at start), or maintain the sketch with
-    * [[Bloom.union]] over per-epoch deltas on a rebuild schedule. A
-    * streaming `history` is rejected outright — it would silently
-    * freeze at build-time contents.
-    */
-  def streamAgainstHistory(stream: DataFrame, keyCols: Seq[String],
-      history: DataFrame, expectedKeys: Long,
-      fpp: Double = 0.01): DataFrame = {
-    require(!history.isStreaming,
-      "streamAgainstHistory requires a BATCH history DataFrame: the " +
-        "Bloom sketch folds once at query build (static-history contract)")
-    import org.apache.spark.sql.functions.struct
-    def key(cols: Seq[String]) =
-      if (cols.sizeIs == 1) col(cols.head) else struct(cols.map(col): _*)
-    val historyKeys = history.select(keyCols.map(col): _*)
-    Bloom.build(historyKeys, key(keyCols), expectedKeys, fpp) match {
-      case None => stream // empty history: everything is new
-      case bloom =>
-        val probe = Bloom.mightContain(bloom, key(keyCols))
-        stream.filter(!probe).unionByName(
-          stream.filter(probe)
-            .join(historyKeys.dropDuplicates(keyCols), keyCols, "left_anti"))
-    }
-  }
-
   /** Apply step of exact dedup: every document tagged with its
     * group's representative and a keep/drop verdict — the actual
     * output a pipeline writes (the corpus keeps rows with
@@ -446,7 +379,7 @@ object Dedup {
     * executable specification the fused kernel is equivalence-tested
     * against (TrainingSpec).
     */
-  def withMinhashSignatureUnfused(docs: DataFrame, idCol: String,
+  private[graft] def withMinhashSignatureUnfused(docs: DataFrame, idCol: String,
       textCol: String, numHashes: Int): DataFrame = {
     require(numHashes <= 128, "two-hash family bounded to j <= 127 (overflow proof)")
     val sh = docs.select(col(idCol).as("doc_id"),
@@ -527,92 +460,12 @@ object Dedup {
     withMinhashSignature(docs, idCol, textCol, bands * rowsPerBand)
       .select(col("doc_id"), explode(bandKeyArray(bands, rowsPerBand)).as("bk"))
 
-  /** Plan-cut helper for the iterative CC loops: `localCheckpoint` by
-    * default (executor-local blocks, no extra I/O), or a RELIABLE
-    * `checkpoint()` to the SparkContext checkpoint directory when
-    * `reliable` — executor loss mid-loop then recovers from the
-    * checkpoint files instead of killing the query, the right trade on
-    * a long-running cluster job (set a durable checkpoint dir — HDFS /
-    * object store — via `sparkContext.setCheckpointDir`; a local temp
-    * dir is defaulted only so single-node runs work out of the box).
-    * Reliable checkpoints cost roughly one extra compute of the cut
-    * plan per round (the checkpoint write is its own job).
-    */
-  private def cut(df: DataFrame, reliable: Boolean, eager: Boolean): DataFrame =
-    if (!reliable) df.localCheckpoint(eager)
-    else {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString)
-      df.checkpoint(eager)
-    }
-
-  /** Connected components over a near-dup pair graph (i, j): every
-    * node labeled with the min doc id of its component — turning
-    * pairwise near-dup hits into dedup CLUSTERS with one canonical
-    * representative each.
-    *
-    * Min-label propagation to fixpoint: per iteration one join +
-    * partial-agg min per node, ONE Spark job — the LAZY localCheckpoint
-    * truncates the plan immediately (labels appears twice per round, so
-    * without the cut the logical plan doubles every iteration) while
-    * the convergence count's full scan doubles as its materialization;
-    * an eager checkpoint would pay a second job per round.
-    * Iterations = component diameter (near-dup clusters are shallow).
-    * For billion-edge graphs swap the iteration body for the
-    * Large-Star/Small-Star variant (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — same driver loop,
-    * fewer rounds on high-diameter graphs. `reliable = true` swaps the
-    * per-round plan cuts from executor-local checkpoints to reliable
-    * ones (see [[cut]]) so executor loss mid-loop cannot kill a
-    * cluster-scale job.
-    */
-  def connectedComponents(pairs: DataFrame, iCol: String = "i",
-      jCol: String = "j", maxIter: Int = 25,
-      reliable: Boolean = false): DataFrame = {
-    val edges = pairs.select(col(iCol).as("a"), col(jCol).as("b"))
-      .unionByName(pairs.select(col(jCol).as("a"), col(iCol).as("b")))
-      .distinct().persist()
-    // seed with min(self, direct neighbors): the same single init job a
-    // plain node-list distinct would cost, but it IS iteration one —
-    // shallow near-dup graphs converge a full round earlier. The cut is
-    // LAZY: round 1's convergence count materializes seed and round-1
-    // labels in one job instead of two
-    var labels = cut(edges.groupBy("a")
-      .agg(least(col("a"), min(col("b"))).as("label")), reliable, eager = false)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("a").as("b"), col("label").as("nl")), Seq("b"))
-        .groupBy("a").agg(min(col("nl")).as("nbr_min"))
-      // carry the previous label through so convergence needs no extra
-      // join — the changed-count's full scan is the one job per round,
-      // and it materializes the lazy checkpoint as a side effect
-      val next = cut(labels.join(nbrMin, Seq("a"), "left")
-        .select(col("a"), col("label").as("_old"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")),
-        reliable, eager = false)
-      done = next.filter(col("label") =!= col("_old")).count() == 0
-      labels = next.drop("_old")
-      iter += 1
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations " +
-          "(component diameter exceeds maxIter); labels would be partially " +
-          "propagated — raise maxIter or use a star-contraction variant")
-    edges.unpersist()
-    labels.select(col("a").as("doc_id"), col("label").as("rep_id"))
-  }
-
   /** Connected components by alternating star contraction (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14):
     * converges in O(log n) rounds on ANY component diameter, where
-    * [[connectedComponents]]' min-label propagation needs O(diameter)
-    * rounds — the scale path for long near-dup chains / billion-edge
-    * graphs. Each round is two shuffle phases over the edge list:
+    * min-label propagation needs O(diameter) rounds — the scale path
+    * for long near-dup chains / billion-edge graphs. Each round is two
+    * shuffle phases over the edge list:
     *
     *   large-star: every node links its LARGER neighbors to its
     *     neighborhood minimum (incl. itself) — long tails collapse;
@@ -620,13 +473,14 @@ object Dedup {
     *     (and itself) to the minimum of that set — stars flatten.
     *
     * Edges stay canonically (child > parent) throughout and converge
-    * to stars rooted at each component's min node. Same output
-    * contract as [[connectedComponents]]: (doc_id, rep_id) for every
-    * node that appears in a pair.
+    * to stars rooted at each component's min node. Output: (doc_id,
+    * rep_id) with rep_id = min id of the component, one row per node
+    * that appears in a pair. Each round's edge list is cut with a
+    * `localCheckpoint` (executor-local blocks, no extra I/O), so the
+    * plan stays one round deep.
     */
   def connectedComponentsStar(pairs: DataFrame, iCol: String = "i",
-      jCol: String = "j", maxIter: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+      jCol: String = "j", maxIter: Int = 20): DataFrame = {
     val nodes = pairs.select(col(iCol).as("n"))
       .unionByName(pairs.select(col(jCol).as("n"))).distinct().persist()
     def sym(e: DataFrame): DataFrame =
@@ -648,14 +502,14 @@ object Dedup {
         .unionByName(m.select(col("a"), col("m").as("b")))
         .filter(col("a") =!= col("b")).distinct()
     }
-    var cur = cut(pairs
+    var cur = pairs
       .select(greatest(col(iCol), col(jCol)).as("a"),
         least(col(iCol), col(jCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct(), reliable, eager = true)
+      .filter(col("a") =!= col("b")).distinct().localCheckpoint(eager = true)
     var iter = 0
     var done = cur.isEmpty
     while (!done && iter < maxIter) {
-      val next = cut(smallStar(largeStar(cur)), reliable, eager = false)
+      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
       // ONE job per round: both edge lists are distinct, so the sets are
       // equal iff their symmetric difference is empty — a +1/-1 tally
       // whose scan also materializes next's lazy checkpoint
@@ -721,9 +575,10 @@ object Dedup {
     * node counts use [[connectedComponentsStar]], whose state lives in
     * shuffles.
     *
-    * Same output contract as [[connectedComponents]]: (doc_id, rep_id)
-    * with rep_id = min id of the component, one row per node appearing
-    * in a pair. Ids must be integral (cast to long internally).
+    * Same output contract as [[connectedComponentsStar]]: (doc_id,
+    * rep_id) with rep_id = min id of the component, one row per node
+    * appearing in a pair. Ids must be integral (cast to long
+    * internally).
     */
   def connectedComponentsForest(pairs: DataFrame, iCol: String = "i",
       jCol: String = "j", fanIn: Int = 32): DataFrame = {
@@ -744,59 +599,6 @@ object Dedup {
     // already IS (node, min-id component root) — no final pass needed
     level.toDF("doc_id", "rep_id")
   }
-
-  /** KMV estimate of the DISTINCT NODE count of a pair graph — the
-    * quantity that decides forest vs star CC — in one map-side pass:
-    * both endpoint columns hash into the shared 60-bit domain, the
-    * k-minimum-values sketch partial-aggregates per partition (≤ k
-    * longs cross the exchange), and the estimate reads off the k-th
-    * minimum. Exact below k; ~1/√k relative error above it (k = 1024
-    * ⇒ ~3 %), which is far finer than the order-of-magnitude decision
-    * it feeds.
-    */
-  def estimateDistinctNodes(pairs: DataFrame, iCol: String = "i",
-      jCol: String = "j", k: Int = 1024): Double = {
-    import graft.functions.Sketches
-    val h = Sketches.md5Hash60("ccn|", _: Column)
-    // ONE scan of the pairs lineage: both endpoint hashes explode from
-    // the same row (a union of two selects would re-execute the full
-    // upstream candidate generator once per endpoint column)
-    pairs.select(explode(array(
-        h(col(iCol).cast("string")), h(col(jCol).cast("string")))).as("h"))
-      .agg(Sketches.kmvMins(col("h"), k).as("mins"))
-      .select(Sketches.kmvEstimate(col("mins"), k, Sketches.Domain60))
-      .head().getDouble(0)
-  }
-
-  /** Connected components with the forest/star choice made FROM THE
-    * DATA: [[estimateDistinctNodes]] sizes the graph's node set in one
-    * map-side sketch pass, and the labeling runs as
-    * [[connectedComponentsForest]] (one shuffle-free job; serial
-    * union-find funnel over the distinct nodes) while the estimate
-    * fits `nodeLimit`, else as [[connectedComponentsStar]] (O(log n)
-    * fully-parallel shuffle rounds). This is AQE-style planning at the
-    * operator level — a fixed-size statistic chooses the physical
-    * strategy, so a pipeline can call ONE entry point for both the
-    * post-LSH near-dup graph (small node set, forest wins — measured
-    * 2-4× in Probe cc_forest_vs_star*) and an unbounded-graph
-    * labeling job.
-    *
-    * `nodeLimit` defaults to the probe-pinned region where the funnel
-    * task is measured safe AND winning (PERF.md round-7): forest is
-    * ~1.5× ahead at 7M and 15M distinct nodes, loses its lead at
-    * ~28M (star 196 s vs forest 204 s at 48 GiB heap), and OOMs the
-    * funnel task outright at that size under the default 8 GiB
-    * executor heap — so 16M is the largest point that is both faster
-    * and memory-safe in the shipped configuration. The KMV error
-    * (measured 0.2-2 %) is noise against that boundary.
-    */
-  def connectedComponentsAuto(pairs: DataFrame, iCol: String = "i",
-      jCol: String = "j", fanIn: Int = 32,
-      nodeLimit: Long = 16000000L): DataFrame =
-    if (estimateDistinctNodes(pairs, iCol, jCol) <= nodeLimit.toDouble)
-      connectedComponentsForest(pairs, iCol, jCol, fanIn)
-    else
-      connectedComponentsStar(pairs, iCol, jCol)
 
   /** `bits`-wide simhash bit-string per doc (doc_id, simhash) — the
     * signature shared by the exact-bucket and Hamming-distance dedup
@@ -1386,7 +1188,7 @@ object Dedup {
 
   /** Representative selection over near-dup clusters — the FineWeb
     * keep-best step: given the `(doc_id, rep_id)` cluster table from a
-    * [[connectedComponents]] variant (which lists only documents that
+    * connected-components variant (which lists only documents that
     * are IN some cluster), tag every document with its cluster, its
     * cluster's size, and whether it is the cluster's best row under
     * the caller's quality order (made total by a unique-id tiebreak).

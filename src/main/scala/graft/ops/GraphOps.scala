@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph algorithms over edge tables — the layer above
-  * [[Dedup.connectedComponents]]'s cluster discovery: once a corpus
+  * [[Dedup.connectedComponentsForest]]'s cluster discovery: once a corpus
   * has a similarity graph ([[Similarity.knnGraph]] /
   * [[Similarity.knnGraphMultiProbe]] edges), centrality turns it
   * into SELECTION signal — rank documents by how linked-to they are

@@ -381,11 +381,10 @@ object Multimodal {
     * pass: a NEW image is dropped iff some AT-REST corpus image sits
     * within `maxHamming` bits of its perceptual hash. Corpus-vs-
     * corpus dedup is [[imageNearDups]]'s offline job; this is the
-    * [[graft.ops.Dedup.streamAgainstHistory]] /
-    * semDedupIncremental division of labor with Hamming band keys
-    * playing the posting role: the corpus is touched map-only (band
-    * explode) plus one keyed join, pair count bounded by band-bucket
-    * occupancy, never |new|·|corpus|. Returns
+    * [[graft.ops.Similarity.semDedupIncremental]] division of labor
+    * with Hamming band keys playing the posting role: the corpus is
+    * touched map-only (band explode) plus one keyed join, pair count
+    * bounded by band-bucket occupancy, never |new|·|corpus|. Returns
     * (idCol, n_matches, keep) for the NEW side only.
     */
   def imageNearDupsIncremental(newHashes: DataFrame, corpusHashes: DataFrame,
@@ -430,18 +429,17 @@ object Multimodal {
         (coalesce(col("n_matches"), lit(0L)) === 0L).as("keep"))
   }
 
-  /** STREAMING face of [[imageNearDupsIncremental]] — the
-    * [[graft.ops.Dedup.streamAgainstHistory]] division of labor for
-    * media: a live stream of new image hashes is verdict-ed per
-    * micro-batch against the AT-REST corpus band postings
-    * ([[imageBandPostings]] — build once, persist; the static
-    * corpus-epoch contract, same as streamAgainstHistory's), and the
-    * per-trigger (id, n_matches, keep) rows APPEND to `outDir` — a
-    * foreachBatch log whose per-trigger emission is bounded by the
-    * batch's own row count, never corpus-sized (each verdict row is
-    * final on emission: it depends only on the batch row and the
-    * static postings, so no upsert/compaction is ever needed, unlike
-    * the first-occurrence index log). Candidate pairs per trigger are
+  /** STREAMING face of [[imageNearDupsIncremental]] — the per-ingest
+    * delta pass for media: a live stream of new image hashes is
+    * verdict-ed per micro-batch against the AT-REST corpus band
+    * postings ([[imageBandPostings]] — build once, persist; the static
+    * corpus-epoch contract), and the per-trigger (id, n_matches, keep)
+    * rows APPEND to `outDir` — a foreachBatch log whose per-trigger
+    * emission is bounded by the batch's own row count, never
+    * corpus-sized (each verdict row is final on emission: it depends
+    * only on the batch row and the static postings, so no
+    * upsert/compaction is ever needed, unlike the first-occurrence
+    * index log). Candidate pairs per trigger are
     * bounded by band-bucket occupancy — the postings join discipline,
     * never |batch|·|corpus|. StreamingSpec pins trigger-cadence
     * invariance (1-file vs all-at-once triggers, identical verdicts);

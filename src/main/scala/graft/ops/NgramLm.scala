@@ -194,17 +194,4 @@ object NgramLm {
       .agg(count(lit(1)).as("n_tokens"), sum("contrib").as("sb_mass"))
       .withColumn("sb_score",
         col("sb_mass").cast("double") / col("n_tokens").cast("double"))
-
-  /** Score `docs` under the stupid-backoff trigram model trained on
-    * `train` (default: self-scored, the in-corpus outlier-filter
-    * setup; a held-out reference corpus is the CCNet setup). Returns
-    * (idCol, n_tokens, sb_mass, sb_score); docs with no tokens are
-    * absent (the [[TextOps.lmScore]] convention).
-    */
-  def scoreBackoff(docs: DataFrame, idCol: String, textCol: String,
-      train: DataFrame = null, scaleBits: Int = DefaultScaleBits): DataFrame = {
-    val (h3, h2, h1) = backoffTables(
-      Option(train).getOrElse(docs), idCol, textCol, scaleBits)
-    rollupScore(positionContribs(docs, idCol, textCol, h3, h2, h1), idCol)
-  }
 }

@@ -195,24 +195,6 @@ object Retrieval {
     PositionalIndex(posting, dl, nDocs, Math.floorDiv(st.getLong(1), nDocs))
   }
 
-  /** EXACT positional-index merge — [[mergeIndex]] for the positional
-    * tier: shards with disjoint doc ids union postings and dl
-    * VERBATIM (positions are doc-local offsets, so merging never
-    * rewrites a list — cheaper than the flat tier, which at least
-    * sums df), and the scalars add. merge(build(A), build(B)) ==
-    * build(A∪B) table for table and query for query (RetrievalSpec).
-    * Returns the merged index plus its total length (what the next
-    * merge needs, as in [[mergeIndex]]).
-    */
-  def mergePositionalIndex(a: PositionalIndex, aLen: Long,
-      b: PositionalIndex, bLen: Long): (PositionalIndex, Long) = {
-    val n = a.nDocs + b.nDocs
-    val len = aLen + bLen
-    (PositionalIndex(a.postings.unionByName(b.postings),
-      a.dl.unionByName(b.dl), n,
-      Math.floorDiv(len, math.max(n, 1L))), len)
-  }
-
   /** EXACT PHRASE retrieval over a [[PositionalIndex]] — top-`k`
     * docs containing each query's tokens as a CONSECUTIVE run, ranked
     * by the engine's integer BM25 with the phrase as one virtual
@@ -378,14 +360,6 @@ object Retrieval {
       .filter(col("rank") <= k)
       .select("query_id", "rank", "doc_id", "tf", "score")
   }
-
-  /** One-shot convenience: [[buildIndex]] + [[bm25Query]]. */
-  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
-      docIdCol: String = "doc_id", textCol: String = "text",
-      queryIdCol: String = "query_id", scaleBits: Int = 20,
-      excludeSelf: Boolean = false): DataFrame =
-    bm25Query(buildIndex(docs, docIdCol, textCol), queries, k,
-      queryIdCol, textCol, scaleBits, excludeSelf)
 
   /** EXACT index merge — the incremental-maintenance path a growing
     * corpus needs (the [[NgramLm.mergeCounts]] shard-and-sum

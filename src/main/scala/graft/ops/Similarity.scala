@@ -35,7 +35,7 @@ object Similarity {
   /** Reference HOF formulation (CodegenFallback; kept for equivalence
     * tests and as documentation of the numeric contract).
     */
-  def dotHof(a: Column, b: Column): Column =
+  private[graft] def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm2(v: Column): Column = dot(v, v)
@@ -354,7 +354,7 @@ object Similarity {
     * ([[semDedup]] is exactly this graph collapsed to a keep/drop
     * verdict; keeping the ranked edges lets one corpus pass serve
     * multiple downstream thresholds and graph algorithms — feed the
-    * edges to [[Dedup.connectedComponents]] for cluster discovery).
+    * edges to [[Dedup.connectedComponentsForest]] for cluster discovery).
     *
     * Scale shape: assignment is the broadcast argmax
     * ([[assignNearest]]); candidate edges come from the equality
@@ -947,9 +947,9 @@ object Similarity {
     * |new|·|corpus| — and the corpus is touched map-only plus one
     * keyed join. There is NO corpus self-join: corpus-vs-corpus dedup
     * is [[semDedup]]'s offline job; this is the per-ingest delta pass
-    * — the same division of labor as [[Dedup.streamAgainstHistory]]
-    * vs [[Dedup.exact]], with cluster postings playing the band-key
-    * role. Returns (vec_id, cluster, keep) for the NEW side only.
+    * — [[Dedup.lshBandKeys]]' incremental shape, with cluster
+    * postings playing the band-key role. Returns (vec_id, cluster,
+    * keep) for the NEW side only.
     */
   def semDedupIncremental(newBatch: DataFrame, corpus: DataFrame,
       centroidTable: DataFrame, threshold: Double,

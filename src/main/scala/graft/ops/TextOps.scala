@@ -51,7 +51,7 @@ object TextOps {
   /** The composed built-in formulation of [[shingleSet]] — kept as the
     * executable specification the fused kernel is tested against.
     */
-  def shingleSetComposed(text: Column): Column =
+  private[graft] def shingleSetComposed(text: Column): Column =
     array_distinct(shingles(tokens(text), 3))
 
   /** Positional k-gram list straight from text — the fused form of

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{ParquetSchema, Tables}
 import graft.ops.{Bloom, TextOps}
 
 /** Crawl-plane curation — the family [[TrainingQ.qUrlNorm]]'s
@@ -312,7 +312,7 @@ object CrawlQ {
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val boiler = spark.read.parquet(indexDir)
+      val boiler = ParquetSchema.read(spark, indexDir)
         .groupBy("_sb_site", "_sb_h")
         .agg(sum(col("_sb_nd")).as("_sb_nd"))
         .filter(col("_sb_nd") >= 3)

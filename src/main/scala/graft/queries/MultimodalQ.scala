@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{ParquetSchema, Tables}
 import graft.ops.Multimodal
 
 /** Multimodal metadata extraction exercised through the real typed
@@ -329,7 +329,7 @@ object MultimodalQ {
         idCol = "doc_id", hashCol = "ahash", bands = 4, maxHamming = 3)
       q.awaitTermination()
       postings.unpersist()
-      spark.read.parquet(s"$work/out").orderBy("doc_id")
+      ParquetSchema.read(spark, s"$work/out").orderBy("doc_id")
     },
     Some(MediaDedupIncrOracle)
   )

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{ParquetSchema, Tables}
 import graft.ops.{Dedup, NgramLm, Sample, TextOps}
 
 /** Pipeline-assembly stages of a training-data build — the steps
@@ -771,7 +771,7 @@ object PipelineQ {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("doc_id")
+      ParquetSchema.read(spark, s"$work/out").orderBy("doc_id")
     },
     Some(s"""WITH $clsBaseSql,
       $clsRoundsSql,
@@ -916,7 +916,7 @@ object PipelineQ {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("doc_id")
+      ParquetSchema.read(spark, s"$work/out").orderBy("doc_id")
     },
     Some(curriculumSketchOracle)
   )
@@ -1117,7 +1117,7 @@ object PipelineQ {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("doc_id")
+      ParquetSchema.read(spark, s"$work/out").orderBy("doc_id")
     },
     Some(s"""WITH $dsirBaseSql,
       $dsirScoreSql,
@@ -1139,7 +1139,7 @@ object PipelineQ {
     * map-side), the IN-ENGINE-TRAINED hashed classifier margin
     * ([[graft.ops.Classify.trainHashedLogistic]] →
     * [[graft.ops.Classify.scoreHashedLogistic]]), and stupid-backoff
-    * LM fluency ([[graft.ops.NgramLm.scoreBackoff]]). Decision: rules
+    * LM fluency ([[graft.ops.NgramLm.rollupScore]]). Decision: rules
     * must pass, then EITHER the learned model ranks the doc in its
     * top half OR the doc is fluent enough to rescue (sb_mass >
     * τ·n_tokens, exact long compare at the dyadic τ = 2^16). The
@@ -1290,9 +1290,9 @@ object PipelineQ {
         .trigger(Trigger.AvailableNow()).start()
       q1.awaitTermination()
       q2.awaitTermination()
-      val lm = NgramLm.rollupScore(spark.read.parquet(s"$work/lm"), "doc_id")
+      val lm = NgramLm.rollupScore(ParquetSchema.read(spark, s"$work/lm"), "doc_id")
         .select(col("doc_id"), col("n_tokens"), col("sb_mass"))
-      spark.read.parquet(s"$work/sig")
+      ParquetSchema.read(spark, s"$work/sig")
         .join(lm, Seq("doc_id"), "left")
         .select(col("doc_id"), col("gopher_pass"), col("z"),
           coalesce(col("sb_mass"), lit(0L)).as("sb_mass"),
@@ -1373,7 +1373,7 @@ object PipelineQ {
         Seq("doc_id"))
       graft.io.CowTable.merge(spark, t, cowChanges(docs), "doc_id",
         "lang")
-      spark.read.option("basePath", t).parquet(t)
+      ParquetSchema.read(spark, t)
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
         .orderBy("doc_id")
@@ -1426,7 +1426,7 @@ object PipelineQ {
         instantiateCowStream(spark, dir))
       val t = s"$work/docs"
       val chDir = s"$work/changes"
-      val sch = spark.read.parquet(chDir).schema
+      val sch = ParquetSchema.of(spark, chDir)
       val q = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(chDir)
         .writeStream
@@ -1438,7 +1438,7 @@ object PipelineQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.option("basePath", t).parquet(t)
+      ParquetSchema.read(spark, t)
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
         .orderBy("doc_id")
@@ -1614,7 +1614,7 @@ object PipelineQ {
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
         .map(col)
       val inDir = s"$work/in"
-      val sch = spark.read.parquet(inDir).schema
+      val sch = ParquetSchema.of(spark, inDir)
       val q = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
         .writeStream
@@ -1702,7 +1702,7 @@ object PipelineQ {
         .select(col("doc_id"), col("lang"), lit("delete").as("op"))
       val cs = graft.io.CowTable.merge(spark, t, delDocs, "doc_id",
         "lang")
-      val corpusLeft = spark.read.option("basePath", t).parquet(t)
+      val corpusLeft = ParquetSchema.read(spark, t)
       // lexical index
       val idx = Retrieval.buildIndex(docs)
       val (idx2, _) = Retrieval.removeFromIndex(idx,
@@ -1714,8 +1714,7 @@ object PipelineQ {
         .select(col("vec_id").cast("long")).collect().map(_.getLong(0))
       val annDeleted = graft.io.AnnLayout.deleteTrained(spark, ann,
         annIds.toIndexedSeq)
-      val annLeft = spark.read
-        .option("basePath", s"$ann/corpus").parquet(s"$ann/corpus")
+      val annLeft = ParquetSchema.read(spark, s"$ann/corpus")
       // audit rows — residuals recomputed from the mutated artifacts
       def row(artifact: String, removed: Long, remaining: Long,
           residual: Long) =
@@ -1972,7 +1971,7 @@ object PipelineQ {
         instantiateStreamIngest(spark, dir))
       val docs = Tables.documents(spark, dir)
       val emb = graft.io.Tables.embeddings(spark, dir)
-      val sch = spark.read.parquet(s"$root/arrivals").schema
+      val sch = ParquetSchema.of(spark, s"$root/arrivals")
       val q = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/arrivals")
         .writeStream
@@ -2068,7 +2067,7 @@ object PipelineQ {
         instantiateStreamIngestLog(spark, dir))
       val docs = Tables.documents(spark, dir)
       val emb = graft.io.Tables.embeddings(spark, dir)
-      val sch = spark.read.parquet(s"$root/arrivals").schema
+      val sch = ParquetSchema.of(spark, s"$root/arrivals")
       val q = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/arrivals")
         .writeStream

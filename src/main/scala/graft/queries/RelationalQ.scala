@@ -337,7 +337,7 @@ object RelationalQ {
   )
 
   /** Z-order (Morton) layout keys, oracle-checked bit-for-bit: the
-    * key [[graft.io.Bucketing.writeZOrdered]] clusters 100 TB tables
+    * key a layout write range-partitions and sorts 100 TB tables
     * by, computed here over (user_id, hour) so the engine's curve
     * math is pinned against DuckDB's independent bigint bit ops
     * (shared spread schedule, [[graft.io.Bucketing.zValueSql]]).

@@ -67,8 +67,8 @@ object StreamQ {
     * physical row won first-arrival (the oracle is plain DISTINCT).
     * Second batch/stream equivalence pin next to q_stream_latest.
     * State note: unbounded dedup state is right for a bounded replay;
-    * the production path for infinite feeds is
-    * Dedup.exactStreaming's watermark-bounded variant (StreamingSpec).
+    * an infinite feed bounds it with a watermark and Spark's own
+    * `dropDuplicatesWithinWatermark`.
     */
   val qStreamDedup = Q(
     "q_stream_dedup",

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{ParquetSchema, Tables}
 import graft.ops.{Bloom, Dedup, NgramLm, Overlap, Sample, Similarity, TextOps}
 
 /** Training-data pipeline operators (dedup / similarity / text
@@ -1516,7 +1516,7 @@ object TrainingQ {
     * search with the first 3 docs as queries (their distinct tokens
     * as term sets, self excluded): quantized-idf × exact-rational tf
     * saturation, every score an exact long (see
-    * [[graft.ops.Retrieval.bm25TopK]] for the derivation and the
+    * [[graft.ops.Retrieval.bm25Query]] for the derivation and the
     * overflow headroom bound). The oracle replays tokenize → postings
     * → df/dl/N/L → quantized avgdl → per-term integer scores → sum →
     * top-k in one chain; candidates come from the term-equality join
@@ -1754,7 +1754,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("query_id", "rank")
+      ParquetSchema.read(spark, s"$work/out").orderBy("query_id", "rank")
     },
     Some(HybridRrfOracle)
   )
@@ -1884,7 +1884,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("query_id", "rank")
+      ParquetSchema.read(spark, s"$work/out").orderBy("query_id", "rank")
     },
     qBm25Phrase.oracle
   )
@@ -1936,13 +1936,13 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val meta = spark.read.parquet(s"$work/meta")
+      val meta = ParquetSchema.read(spark, s"$work/meta")
         .agg(coalesce(sum("n"), lit(0L)),
           coalesce(sum("l"), lit(0L))).head()
       val n = meta.getLong(0)
       val pidx = Retrieval.PositionalIndex(
-        spark.read.parquet(s"$work/post"),
-        spark.read.parquet(s"$work/dl"),
+        ParquetSchema.read(spark, s"$work/post"),
+        ParquetSchema.read(spark, s"$work/dl"),
         n, Math.floorDiv(meta.getLong(1), math.max(n, 1L)))
       val phrases = docs.filter(col("doc_id") < 3)
         .select(col("doc_id").as("query_id"),
@@ -2135,11 +2135,11 @@ object TrainingQ {
         graft.io.FrozenStore.copyTree(cut, d)
       }
       val cur = graft.io.EpochLayout.currentOrFail(spark, root)
-      val meta = spark.read.parquet(s"$cur/meta").head()
+      val meta = ParquetSchema.read(spark, s"$cur/meta").head()
       val idx = Retrieval.Bm25Index(
-        spark.read.parquet(s"$cur/postings"),
-        spark.read.parquet(s"$cur/df"),
-        spark.read.parquet(s"$cur/dl"),
+        ParquetSchema.read(spark, s"$cur/postings"),
+        ParquetSchema.read(spark, s"$cur/df"),
+        ParquetSchema.read(spark, s"$cur/dl"),
         meta.getAs[Long]("n_docs"), meta.getAs[Long]("avgdl"))
       Retrieval.bm25Query(idx,
           docs.filter(col("doc_id") < 3)
@@ -2266,7 +2266,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("query_id", "rank")
+      ParquetSchema.read(spark, s"$work/out").orderBy("query_id", "rank")
     },
     Some(Bm25Oracle)
   )
@@ -3080,8 +3080,8 @@ object TrainingQ {
     * state at all: the corpus is at-rest, the codebook broadcasts —
     * which IS the production shape of a per-ingest dedup delta; when
     * the corpus itself must grow with accepted arrivals, that is a
-    * checkpointed upsert of the corpus table between triggers, the
-    * [[graft.ops.Dedup.streamAgainstHistory]] staleness contract.
+    * checkpointed upsert of the corpus table between triggers (a
+    * verdict sees the corpus as of its trigger, never later growth).
     */
   val qStreamSemDedup = Q(
     "q_stream_semdedup",
@@ -3104,7 +3104,7 @@ object TrainingQ {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("vec_id")
+      ParquetSchema.read(spark, s"$work/out").orderBy("vec_id")
     },
     Some(SemDedupIncrOracle)
   )
@@ -3410,7 +3410,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.parquet(out).orderBy("doc_id")
+      ParquetSchema.read(spark, out).orderBy("doc_id")
     },
     Some(BpeOracle.encodeSql(nMerges = 10))
   )
@@ -3910,7 +3910,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      spark.read.parquet(s"$work/out").orderBy("query_id", "rank")
+      ParquetSchema.read(spark, s"$work/out").orderBy("query_id", "rank")
     },
     Some(AnnIvfTrainedOracle)
   )
@@ -4266,7 +4266,8 @@ object TrainingQ {
   )
 
   /** Stupid-backoff trigram LM, SCORE face ([[graft.ops.NgramLm
-    * .scoreBackoff]]): the CCNet-fluency-filter upgrade of q_lm_score
+    * .positionContribs]] → [[graft.ops.NgramLm.rollupScore]]): the
+    * CCNet-fluency-filter upgrade of q_lm_score
     * — each position scores floor(2^20·c(ngram)/c(context)) at its
     * highest attested order with an exact ÷4-per-level backoff
     * penalty, so the whole train-then-score pipeline is long
@@ -4378,7 +4379,7 @@ object TrainingQ {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      NgramLm.rollupScore(spark.read.parquet(s"$work/out"), "doc_id")
+      NgramLm.rollupScore(ParquetSchema.read(spark, s"$work/out"), "doc_id")
         .orderBy("doc_id")
     },
     Some(LmBackoffOracle)

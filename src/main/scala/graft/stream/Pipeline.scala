@@ -33,20 +33,21 @@ object Pipeline {
 
   /** Retry a sink write `attempts` times with linear backoff, like the
     * reference's flushWithRetry (processor.go:85-119: 3 attempts,
-    * (i+1)s sleeps). `onFailure` runs once per failed attempt (the
-    * reference increments its error metric regardless of whether a
-    * retry will follow, processor.go:105-109). Exhaustion returns None
-    * — the CALLER decides the batch's fate (Pipeline.start quarantines
+    * (i+1)s sleeps). `onFailure` runs once per failed attempt, with its
+    * exception (the reference increments its error metric regardless
+    * of whether a retry will follow, processor.go:105-109); an
+    * exception it throws ends the retries. Exhaustion returns None —
+    * the CALLER decides the batch's fate (Pipeline.start quarantines
     * it; the reference drops it).
     */
   private[stream] def withRetry[T](attempts: Int, baseSleepMs: Long,
-      onFailure: () => Unit = () => ())(f: => T): Option[T] = {
+      onFailure: Exception => Unit = _ => ())(f: => T): Option[T] = {
     var i = 0
     while (i < attempts) {
       try return Some(f)
       catch {
         case e: Exception =>
-          onFailure()
+          onFailure(e)
           i += 1
           if (i < attempts) Thread.sleep(baseSleepMs * i)
           else System.err.println(s"[graft] sink write failed after $attempts attempts: ${e.getMessage}")
@@ -244,7 +245,9 @@ object Pipeline {
     * A failed latest-upsert needs no quarantine: the batch is already
     * durable in the append sink and the next successful upsert's argmax
     * re-reads only (previous latest ∪ batch), so state catches up from
-    * the appended data.
+    * the appended data. A write cut short by the query's own `stop()`
+    * is none of these: it is rethrown, uncounted and unretried, and the
+    * uncommitted batch replays when the query restarts.
     */
   def start(
       ticks: DataFrame,
@@ -263,10 +266,15 @@ object Pipeline {
       metrics: Option[Metrics] = None): StreamingQuery = {
     val sink = appendSink.getOrElse(ParquetSink(appendDir))
     val spark = ticks.sparkSession
-    val sinkFailed = () => metrics.foreach(_.errorsSink.increment())
+    val query = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
+    // stop() marks the query terminated, then cancels its jobs: a write
+    // failing after that is a clean shutdown, not a sink failure
+    val sinkFailed = (e: Exception) =>
+      if (query.get != null && !query.get.isActive) throw e
+      else metrics.foreach(_.errorsSink.increment())
     val validated = Ingest.validate(ticks, nameCol, tsCol, counted = metrics.isDefined)
     val enriched = Ingest.enrichDim(validated, dim, nameCol, "symbol", "exchange")
-    enriched.writeStream
+    val q = enriched.writeStream
       .queryName("graft-ingest")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -298,5 +306,7 @@ object Pipeline {
         } finally { persisted.unpersist(); () }
       }
       .start()
+    query.set(q)
+    q
   }
 }

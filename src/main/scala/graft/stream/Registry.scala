@@ -31,7 +31,4 @@ final class Registry {
   }
 
   def connected: Set[String] = clients.keySet().asScala.toSet
-
-  def connectionCount(clientId: String): Int =
-    Option(clients.get(clientId)).fold(0)(_.intValue)
 }

@@ -75,9 +75,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "graft_simhash_votes(str, bits) requires an integer literal bits")
       }))
     // graft_zorder(a, b): Morton interleave of two dimensions — the
-    // layout key behind graft.io.Bucketing.writeZOrdered, for SQL
-    // users. Expands to the same built-in bitwise tree as the Column
-    // form (shared spread schedule), so it stays codegen'd and
+    // layout key of graft.io.Bucketing.zValue, for SQL users. Expands
+    // to the same built-in bitwise tree as the Column form (shared
+    // spread schedule), so it stays codegen'd and
     // oracle-compatible with no new expression class.
     e.injectFunction((
       FunctionIdentifier("graft_zorder"),

@@ -82,36 +82,6 @@ class BloomSpec extends AnyFunSuite {
     assert(absent.filter(Bloom.mightContain(merged, col("k"))).count() < 500)
   }
 
-  test("subquery-built sketch probes identically, without a plan literal") {
-    val big = spark.range(20000).select(concat(lit("k"), col("id")).as("k"))
-    val small = spark.range(0, 8000, 2).select(concat(lit("k"), col("id")).as("bad"))
-    val viaLiteral = big.filter(
-      Bloom.mightContain(Bloom.build(small, col("bad"), 4000), col("k")))
-    val viaSub = big.filter(
-      Bloom.mightContainSubquery(small, col("bad"), col("k"), 4000))
-    // identical sizing + identical hashing ⇒ bit-identical sketch ⇒
-    // the same rows pass, false positives included
-    assert(viaSub.count() == viaLiteral.count())
-    assert(viaSub.exceptAll(viaLiteral).isEmpty)
-    // and the sketch travels as a subquery result, not a literal
-    val plan = viaSub.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("subquery"), plan)
-  }
-
-  test("antiJoinSubquery matches left_anti, including the empty-exclusion edge") {
-    val big = spark.range(0, 30000).select(
-      concat(lit("k"), col("id")).as("k"), (col("id") % 5).as("payload"))
-    val small = spark.range(0, 10000, 2).select(concat(lit("k"), col("id")).as("bad"))
-    val expected = big.join(small, col("k") === col("bad"), "left_anti")
-    val got = Bloom.antiJoinSubquery(big, col("k"), small, col("bad"), 5000)
-    assert(got.count() == expected.count())
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
-    // empty exclusions ⇒ null sketch ⇒ every row must still pass
-    val none = spark.range(0).select(concat(lit("k"), col("id")).as("bad"))
-    assert(Bloom.antiJoinSubquery(big, col("k"), none, col("bad"), 100)
-      .count() == 30000L)
-  }
-
   test("probe stays inside whole-stage codegen (no interpreted fallback)") {
     val bloom = Bloom.build(Seq("x").toDF("k"), col("k"), 100)
     // range (not a local relation) so the filter can't constant-fold away

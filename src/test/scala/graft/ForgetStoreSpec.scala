@@ -482,38 +482,33 @@ class ForgetStoreSpec extends AnyFunSuite {
     ForgetStore.forget(spark, root, ids1.toIndexedSeq) // e2, retain keeps e1
     assert(blobGens().exists(_.endsWith("/g2")))
     // TIME TRAVEL: the retained epoch 1 still serves the FULL
-    // pre-forget snapshot — corpus, bm25 and pos consistently (one
-    // manifest names them all), while current serves the survivors
-    assert(corpusRows(ForgetStore.readCorpusAt(spark, root, 1L)) ==
-      corpusRows(docs))
+    // pre-forget index, while current serves the survivors
+    def dlIds(asOf: Long): Set[Long] =
+      ForgetStore.bm25IndexAt(spark, root, asOf)._1.dl
+        .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSet
+    val allIds = docs.select(col("doc_id").cast("long")).collect()
+      .map(_.getLong(0)).toSet
     assert(ForgetStore.bm25IndexAt(spark, root, 1L)._1.nDocs ==
       docs.count())
-    assert(ForgetStore.positionalIndexAt(spark, root, 1L).postings
+    assert(dlIds(1L) == allIds)
+    assert(ForgetStore.bm25IndexAt(spark, root, 1L)._1.postings
       .filter(col("doc_id") % 37 === 0).count() > 0,
       "the old epoch must still surface the later-forgotten ids")
-    assert(ForgetStore.readAnnCorpusAt(spark, root, 1L).count() ==
-      emb.count())
-    // knnAt(1) serves the pre-forget members: a forgotten vector's
-    // own embedding (under a fresh query id — the reader excludes
-    // id-equal self matches) surfaces the forgotten member at
-    // cosine 1 from the old epoch, and cannot from current
+    // current knn cannot surface a forgotten member: its own embedding
+    // (under a fresh query id — the reader excludes id-equal self
+    // matches) finds no forgotten neighbor
     val fq = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 100)
       .withColumn("vec_id", -col("vec_id") - 1)
-    def hitsForgotten(df: org.apache.spark.sql.DataFrame) = df
-      .filter(col("neighbor_id") % 37 === 0).count()
-    assert(hitsForgotten(ForgetStore.knnAt(spark, root, 1L, fq,
-      k = 3, nprobe = 2)) > 0)
-    assert(hitsForgotten(ForgetStore.knn(spark, root, fq,
-      k = 3, nprobe = 2)) == 0)
+    assert(ForgetStore.knn(spark, root, fq, k = 3, nprobe = 2)
+      .filter(col("neighbor_id") % 37 === 0).count() == 0)
     ForgetStore.forget(spark, root, ids2.toIndexedSeq) // e3: e1 expires
     // the expired epoch refuses with the retained list; the retained
     // e2 still serves the between-forgets state
     val gone = intercept[RuntimeException] {
-      ForgetStore.readCorpusAt(spark, root, 1L)
+      ForgetStore.bm25IndexAt(spark, root, 1L)
     }
     assert(gone.getMessage.contains("retained complete epochs: 2, 3"))
-    assert(corpusRows(ForgetStore.readCorpusAt(spark, root, 2L)) ==
-      corpusRows(docs.filter(col("doc_id") % 37 =!= 0)))
+    assert(dlIds(2L) == allIds.filter(_ % 37 != 0))
     val epochs = EpochLayout.epochs(spark, root).map(_._1)
     assert(epochs == Seq(2L, 3L), s"epochs: $epochs")
     // g1 corpus/bm25/ann dirs still referenced by e2/e3's untouched

@@ -9,13 +9,24 @@ import scala.jdk.CollectionConverters._
 import graft.io.Bucketing
 
 /** Pins for the Z-order layout: the Morton key math itself, and the
-  * file-skipping behavior that is the operator's reason to exist —
+  * file-skipping behavior that is the key's reason to exist —
   * measured on a 256×256 grid written 16 ways both z-ordered and
   * linearly sorted, by counting the files a selective predicate
   * actually touches on each layout.
   */
 class LayoutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Range-partition and sort by the [[Bucketing.zValueN]] key: one
+    * tight bounding box per file.
+    */
+  private def writeZOrdered(df: org.apache.spark.sql.DataFrame,
+      path: String, dims: Seq[Column], numFiles: Int): Unit =
+    df.withColumn("_zkey", Bucketing.zValueN(dims))
+      .repartitionByRange(numFiles, col("_zkey"))
+      .sortWithinPartitions("_zkey")
+      .drop("_zkey")
+      .write.parquet(path)
 
   test("zValue interleaves bits (Morton order)") {
     // (a=3, b=1): spread(3)=0b101 on even lanes, spread(1)=0b1 shifted
@@ -65,8 +76,7 @@ class LayoutSpec extends AnyFunSuite {
       (col("id") / 32 % 32).cast("long").as("y"),
       (col("id") / 1024).cast("long").as("z"))
     val dir = Files.createTempDirectory("layout_z3").toString + "/t"
-    Bucketing.writeZOrderedN(cube, dir,
-      Seq(col("x"), col("y"), col("z")), numFiles = 8)
+    writeZOrdered(cube, dir, Seq(col("x"), col("y"), col("z")), numFiles = 8)
     def touched(pred: Column): Long =
       spark.read.parquet(dir).filter(pred)
         .select(input_file_name()).distinct().count()
@@ -84,7 +94,7 @@ class LayoutSpec extends AnyFunSuite {
       col("id").as("v"))
     val zDir = Files.createTempDirectory("layout_z").toString + "/t"
     val linDir = Files.createTempDirectory("layout_lin").toString + "/t"
-    Bucketing.writeZOrdered(grid, zDir, col("x"), col("y"), numFiles = 16)
+    writeZOrdered(grid, zDir, Seq(col("x"), col("y")), numFiles = 16)
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x", "y")
       .write.parquet(linDir)
 

@@ -52,6 +52,18 @@ class LmSpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** The face path: ratio tables trained on `train`, per-position
+    * contributions of `docs`, rolled up per doc — (doc_id, n_tokens,
+    * sb_mass, sb_score); docs with no tokens are absent.
+    */
+  private def score(docs: org.apache.spark.sql.DataFrame,
+      train: org.apache.spark.sql.DataFrame = null) = {
+    val (h3, h2, h1) = NgramLm.backoffTables(
+      Option(train).getOrElse(docs), "doc_id", "text")
+    NgramLm.rollupScore(
+      NgramLm.positionContribs(docs, "doc_id", "text", h3, h2, h1), "doc_id")
+  }
+
   private val corpus = Seq(
     (1L, "the cat sat on the mat"),
     (2L, "the cat sat on the hat"),
@@ -62,7 +74,7 @@ class LmSpec extends AnyFunSuite {
 
   test("scoreBackoff == plain-Scala replica on every doc (self-scored)") {
     val docs = corpus.toDF("doc_id", "text")
-    val got = NgramLm.scoreBackoff(docs, "doc_id", "text")
+    val got = score(docs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val want = replica(corpus, NgramLm.DefaultScaleBits)
     assert(got == want)
@@ -79,7 +91,7 @@ class LmSpec extends AnyFunSuite {
       (10L, "the cat sat on the mat"),
       (11L, "completely different sentence appears here today"))
       .toDF("doc_id", "text")
-    val sc = NgramLm.scoreBackoff(target, "doc_id", "text", train = ref)
+    val sc = score(target, train = ref)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(sc(10L) > sc(11L) * 5,
       s"reference-fluent doc should far outscore the novel doc: $sc")
@@ -90,7 +102,7 @@ class LmSpec extends AnyFunSuite {
     val train = corpus.take(5).toDF("doc_id", "text")
     val target = Seq((10L, "the cat sat"), (11L, "zz yy xx"))
       .toDF("doc_id", "text")
-    val got = NgramLm.scoreBackoff(target, "doc_id", "text", train = train)
+    val got = score(target, train = train)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got(10L) > 0L)
     assert(got(11L) == 0L, "fully-unseen tokens must score exactly 0")
@@ -114,7 +126,7 @@ class LmSpec extends AnyFunSuite {
   test("unigram table broadcasts; bigram/trigram probes are hash joins " +
       "(no sort on the corpus-sized probe side needed for correctness)") {
     val docs = corpus.toDF("doc_id", "text")
-    val plan = NgramLm.scoreBackoff(docs, "doc_id", "text")
+    val plan = score(docs)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"unigram table should broadcast:\n$plan")
@@ -135,7 +147,7 @@ class LmSpec extends AnyFunSuite {
         spark.read.parquet(s"$work/h2"),
         spark.read.parquet(s"$work/h1")), "doc_id")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val direct = NgramLm.scoreBackoff(docs, "doc_id", "text")
+    val direct = score(docs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(viaModel == direct && viaModel.nonEmpty)
   }
@@ -165,7 +177,7 @@ class LmSpec extends AnyFunSuite {
     val viaMerge = NgramLm.rollupScore(
       NgramLm.positionContribs(docs, "doc_id", "text", h3, h2, h1), "doc_id")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val whole = NgramLm.scoreBackoff(docs, "doc_id", "text")
+    val whole = score(docs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(viaMerge == whole && viaMerge.nonEmpty)
   }

@@ -103,16 +103,4 @@ class OpsSpec extends AnyFunSuite {
     val out = graft.ops.Ingest.sinkGuard(df).orderBy("name").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("a", "c"))
   }
-
-  test("configLookup left-joins configs; missing row means null config columns (S6/F3)") {
-    import spark.implicits._
-    val facts = Seq(("alpha", "sym1"), ("beta", "sym2")).toDF("cid", "symbol")
-    val configs = Seq(("alpha", "double")).toDF("client_id", "rule")
-    val out = graft.ops.Auth.configLookup(facts, configs, "cid")
-      .orderBy("cid").collect()
-    assert(out.length == 2)
-    assert(out(0).getString(out(0).fieldIndex("rule")) == "double")
-    assert(out(1).isNullAt(out(1).fieldIndex("rule")),
-      "missing config row must surface as null config columns (identity downstream)")
-  }
 }

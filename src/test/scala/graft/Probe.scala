@@ -193,9 +193,6 @@ object Probe {
       // Where does the single-task union-find funnel STOP winning?
       // Same supercritical shape (avg degree ~2.5) at growing node
       // counts — SPARK_GRAFT_CC_SIZES="edges:nodes,..." overrides.
-      // Also times the KMV node estimate that connectedComponentsAuto
-      // spends to make the choice, and reports its estimate so the
-      // auto threshold is pinned against measured truth.
       val sizes = sys.env.getOrElse("SPARK_GRAFT_CC_SIZES",
           "20000000:8000000,40000000:16000000")
         .split(",").map { s =>
@@ -207,16 +204,12 @@ object Probe {
           .filter(col("i") =!= col("j")).repartition(64)
           .persist()
         es.count()
-        val tK0 = System.nanoTime()
-        val est = graft.ops.Dedup.estimateDistinctNodes(es)
-        val tK = (System.nanoTime() - tK0) / 1e9
         val (tF, cF, nF) = ccStats(
           graft.ops.Dedup.connectedComponentsForest(es, fanIn = 32))
         val (tS, cS, nS) = ccStats(
           graft.ops.Dedup.connectedComponentsStar(es))
         es.unpersist()
         println(s"""{"probe":"cc_forest_limit","edges":$nE,"nodes":$nV,""" +
-          s""""kmv_est":${est.toLong},"kmv_sec":$tK,""" +
           s""""forest_sec":$tF,"star_sec":$tS,""" +
           s""""forest_components":$cF,"star_components":$cS,""" +
           s""""forest_labeled":$nF,"star_labeled":$nS}""")
@@ -1453,17 +1446,11 @@ object Probe {
     }
 
     if (enabled("para_skew_join")) {
-      // The r8 verdict ask: AQE skew-split vs Skew.saltedJoin measured
+      // AQE skew-split at its default and forced thresholds, measured
       // on the SAME boilerplate-skew corpus the para_skew probe uses —
       // the tag-back equality join (paras ⋈ first on _pd_h) where ONE
-      // 128-bit hash carries nDocs occurrences. The structural
-      // difference from the round-3 hot-key-join measurement (20M
-      // facts ⋈ 5k dim, where salting won 2×): here the build side is
-      // CORPUS-SIZED (one row per distinct paragraph), so saltedJoin's
-      // full-replication of `other` costs salts × |distinct paras|
-      // extra rows — the regime where salting's precondition (small
-      // dim) fails and AQE's split-only-the-straggler approach is the
-      // right tool. Both are measured rather than asserted.
+      // 128-bit hash carries nDocs occurrences, against a CORPUS-SIZED
+      // build side (one row per distinct paragraph).
       val nDocs = sys.env.get("SPARK_GRAFT_PARA_DOCS")
         .map(_.toLong).getOrElse(1000000L)
       def corpus: DataFrame = {
@@ -1494,16 +1481,14 @@ object Probe {
       def tagJoin = paras.join(first, Seq("_pd_h"))
       time(noBcast(tagJoin)) // warm
       val (tDefault, nJ) = time(noBcast(tagJoin))
-      val (tForced, _) = time(noBcast(withConf(
+      val (tForced, nF) = time(noBcast(withConf(
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16MB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16MB",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")(tagJoin)))
-      val (tSalted, nS) = time(noBcast(graft.ops.Skew.saltedJoin(
-        paras, first, "_pd_h", "_pd_id", salts = 8)))
-      require(nS == nJ, s"salted join changed the result: $nS vs $nJ")
+      require(nF == nJ, s"forced skew split changed the result: $nF vs $nJ")
       println(s"""{"probe":"para_skew_join","docs":$nDocs,""" +
         s""""joined_rows":$nJ,"aqe_default_sec":$tDefault,""" +
-        s""""aqe_forced_sec":$tForced,"salted8_sec":$tSalted}""")
+        s""""aqe_forced_sec":$tForced}""")
     }
 
     if (enabled("weighted_sample")) {
@@ -1689,7 +1674,9 @@ object Probe {
         .agg(sum(col("cnt"))).head().getLong(0)
       val tTrain = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val mass = NgramLm.scoreBackoff(docs, "doc_id", "text")
+      val (h3, h2, h1) = NgramLm.backoffTables(docs, "doc_id", "text")
+      val mass = NgramLm.rollupScore(NgramLm.positionContribs(
+          docs, "doc_id", "text", h3, h2, h1), "doc_id")
         .agg(sum(col("sb_mass")), count(lit(1))).head()
       val tScore = (System.nanoTime() - t1) / 1e9
       val toks = nDocs * 40
@@ -1702,9 +1689,10 @@ object Probe {
     if (enabled("bm25_index")) {
       // Inverted-index selectivity at volume: 500k docs × 20 tokens,
       // log-uniform (Zipf-like) term ids over a 50k vocab; 5 queries
-      // of 8 mid-frequency terms each. Measured: end-to-end bm25TopK
-      // wall, the candidate fraction the term-equality join admits
-      // (vs the |Q|·|C| a dense scorer would touch), and the same
+      // of 8 mid-frequency terms each. Measured: end-to-end
+      // buildIndex + bm25Query wall, the candidate fraction the
+      // term-equality join admits (vs the |Q|·|C| a dense scorer would
+      // touch), and the same
       // query with one corpus-wide stopword added — the skew case
       // (a stopword admits ~every doc; BM25's negative iq then ranks
       // it away, but the JOIN still pays for it — the measured
@@ -1733,7 +1721,8 @@ object Probe {
       val topkFrozen = Retrieval.bm25Query(idx, qdf, k = 10).count()
       val tFrozen = (System.nanoTime() - tQ0) / 1e9
       val t0 = System.nanoTime()
-      val topk = Retrieval.bm25TopK(docsP, qdf, k = 10).count()
+      val topk = Retrieval.bm25Query(Retrieval.buildIndex(docsP), qdf, k = 10)
+        .count()
       val tQ = (System.nanoTime() - t0) / 1e9
       // candidate fraction: pairs admitted by the term join
       val toks = docsP.select(col("doc_id"),

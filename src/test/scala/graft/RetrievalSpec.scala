@@ -61,7 +61,7 @@ class RetrievalSpec extends AnyFunSuite {
     val queries = Seq((0L, "alpha beta gamma the the"), (2L, "gamma delta epsilon the"))
     val want = replica(docs, queries, k = 4, scaleBits = 20, excludeSelf = true)
     def got(dd: org.apache.spark.sql.DataFrame) =
-      Retrieval.bm25TopK(dd,
+      Retrieval.bm25Query(Retrieval.buildIndex(dd),
           queries.toDF("query_id", "text"), k = 4, excludeSelf = true)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2)).toSeq
@@ -71,7 +71,7 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("inverted-index selectivity: docs sharing no query term are never candidates") {
-    val res = Retrieval.bm25TopK(docs.toDF("doc_id", "text"),
+    val res = Retrieval.bm25Query(Retrieval.buildIndex(docs.toDF("doc_id", "text")),
         Seq((100L, "iota kappa")).toDF("query_id", "text"), k = 8)
       .collect().map(_.getLong(2)).toSet
     assert(res == Set(6L), s"only doc 6 contains iota/kappa, got $res")
@@ -259,33 +259,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(got == Seq((2L, score(2, 5)), (4L, score(1, 4))))
   }
 
-  test("mergePositionalIndex(build(even), build(odd)) == build(all): scalars, postings, and phrase results") {
-    import org.apache.spark.sql.functions.col
-    val all = docs.toDF("doc_id", "text")
-    val even = all.filter(col("doc_id") % 2 === 0)
-    val odd = all.filter(col("doc_id") % 2 === 1)
-    def len(d: org.apache.spark.sql.DataFrame): Long =
-      Retrieval.buildPositionalIndex(d).dl
-        .agg(org.apache.spark.sql.functions.sum("dl"))
-        .head().getLong(0)
-    val (merged, mLen) = Retrieval.mergePositionalIndex(
-      Retrieval.buildPositionalIndex(even), len(even),
-      Retrieval.buildPositionalIndex(odd), len(odd))
-    val whole = Retrieval.buildPositionalIndex(all)
-    assert(merged.nDocs == whole.nDocs && merged.avgdl == whole.avgdl
-      && mLen == len(all))
-    def rows(p: Retrieval.PositionalIndex) =
-      p.postings.orderBy("doc_id", "term")
-        .collect().map(_.toSeq).toSeq
-    assert(rows(merged) == rows(whole))
-    val qs = Seq((0L, "alpha beta"), (1L, "delta epsilon"))
-      .toDF("query_id", "text")
-    def served(p: Retrieval.PositionalIndex) =
-      Retrieval.phraseQuery(p, qs, k = 10)
-        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    assert(served(merged) == served(whole) && served(whole).nonEmpty)
-  }
-
   test("proxQuery: minimal-interval semantics — left/right minimality, overlap, order, window, and the integer score") {
     import org.apache.spark.sql.functions.col
     // corpus built to pin every counting rule of the minimal-interval
@@ -336,7 +309,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("rare terms outrank the corpus-wide stopword") {
     // query = one rare + the stopword 'the' (in 6 of 8 docs, iq<0):
     // doc 6 (iota, no 'the') must beat every the-only doc
-    val res = Retrieval.bm25TopK(docs.toDF("doc_id", "text"),
+    val res = Retrieval.bm25Query(Retrieval.buildIndex(docs.toDF("doc_id", "text")),
         Seq((100L, "iota the")).toDF("query_id", "text"), k = 8)
       .orderBy("rank")
       .collect().map(r => (r.getLong(2), r.getLong(3)))

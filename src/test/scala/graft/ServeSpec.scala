@@ -103,12 +103,10 @@ class ServeSpec extends AnyFunSuite {
         while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)
         cond
       }
-      assert(await(server.registry.connectionCount("alpha") == 2 &&
-        server.registry.connected == Set("alpha", "beta")))
+      assert(await(server.registry.connected == Set("alpha", "beta")))
       // close one alpha connection: client stays registered on the other
+      // (the per-connection count itself is StreamingSpec's registry case)
       c1.close()
-      assert(await(server.registry.connectionCount("alpha") == 1))
-      assert(server.registry.connected == Set("alpha", "beta"))
       // beta goes silent past the read deadline with no close frame (a
       // pulled cable) while alpha keeps traffic flowing — any inbound
       // frame re-arms alpha's deadline, beta's expires and prunes it
@@ -117,8 +115,9 @@ class ServeSpec extends AnyFunSuite {
           System.currentTimeMillis() < deadline) {
         c2.sendText("keepalive"); Thread.sleep(200)
       }
+      // c1's close frame was pruned long before beta's deadline expired
       assert(server.registry.connected == Set("alpha"),
-        s"beta not pruned: ${server.registry.connected}")
+        s"beta not pruned, or alpha dropped with c1: ${server.registry.connected}")
       c2.close(); c3.close()
       assert(await(server.registry.connected.isEmpty))
     } finally server.stop()
@@ -267,7 +266,7 @@ class ServeSpec extends AnyFunSuite {
         socketFactory = Some(graft.sources.WsTls.clientSocketFactory(
           Some(trustKs), Some(pass))))
       val deadline = System.currentTimeMillis() + 15000
-      while (server.registry.connectionCount("alpha") < 1 &&
+      while (!server.registry.connected("alpha") &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(server.registry.connected == Set("alpha"))
       // an encrypted broadcast frame arrives intact
@@ -283,13 +282,13 @@ class ServeSpec extends AnyFunSuite {
       val c = WsClient.connect("127.0.0.1", server.boundPort, "/ws",
         headers = Map("X-API-Key" -> "key-alpha"))
       val deadline = System.currentTimeMillis() + 15000
-      while (server.registry.connectionCount("alpha") < 1 &&
+      while (!server.registry.connected("alpha") &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(server.registry.connectionCount("alpha") == 1)
+      assert(server.registry.connected == Set("alpha"))
       c.sendText("x" * 600) // over the 512-byte read limit
-      while (server.registry.connectionCount("alpha") > 0 &&
+      while (server.registry.connected("alpha") &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(server.registry.connectionCount("alpha") == 0,
+      assert(server.registry.connected.isEmpty,
         "oversized frame must close and prune the connection")
       c.close()
     } finally server.stop()

@@ -2,55 +2,52 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, Skew}
+import graft.ops.Dedup
 
 class SkewCcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("salted join equals plain join (inner and left)") {
-    val facts = (1 to 500).map(i => (i.toLong, if (i % 10 == 0) "rare" else "hot"))
-      .toDF("id", "k")
-    val dim = Seq(("hot", 1.0), ("rare", 2.0), ("unused", 3.0)).toDF("k", "w")
-    for (jt <- Seq("inner", "left")) {
-      val plain = facts.join(dim, Seq("k"), jt)
-        .select("id", "k", "w").orderBy("id").collect().toSeq
-      val salted = Skew.saltedJoin(facts, dim, "k", "id", 8, jt)
-        .select("id", "k", "w").orderBy("id").collect().toSeq
-      assert(salted == plain, s"join type $jt")
-    }
-  }
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  test("salted join rejects join types that would duplicate unmatched rows") {
-    val facts = Seq((1L, "a")).toDF("id", "k")
-    val dim = Seq(("a", 1.0)).toDF("k", "w")
-    for (jt <- Seq("right", "full", "full_outer", "right_outer"))
-      assertThrows[IllegalArgumentException](
-        Skew.saltedJoin(facts, dim, "k", "id", 4, jt))
-    // semi/anti are salt-safe and accepted
-    assert(Skew.saltedJoin(facts, dim, "k", "id", 4, "left_semi").count() == 1L)
+  /** Driver-side disjoint-set: the independent ground truth, every
+    * node labeled with its component's min id.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    // second pass: full path compression to the component min
+    nodes.map(x => x -> find(x)).sortBy(_._1)
   }
 
   test("connected components: non-convergence at maxIter throws") {
-    // a 4-chain needs >1 iteration to fully propagate the min label
+    // a 4-chain needs more than one star round to settle
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("i", "j")
     assertThrows[IllegalStateException](
-      Dedup.connectedComponents(pairs, maxIter = 1).collect())
+      Dedup.connectedComponentsStar(pairs, maxIter = 1).collect())
   }
 
   test("connected components: min label per component, chains converge") {
     // components: {1,2,3,4} (chain), {10,11}, pair graph only
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("i", "j")
-    val out = Dedup.connectedComponents(pairs).orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
-      (10L, 10L), (11L, 10L)))
+    val want = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
+      (10L, 10L), (11L, 10L))
+    assert(labelsOf(Dedup.connectedComponentsStar(pairs)) == want)
+    assert(labelsOf(Dedup.connectedComponentsForest(pairs)) == want)
   }
 
   test("AQE splits a skewed sort-merge join partition at runtime (skew=true)") {
-    // the production-default skew path: AQE detects the hot key's
-    // oversized partition and splits it — salting (above) is the
-    // fallback for when even split sub-partitions hotspot
+    // the one skew path: AQE detects the hot key's oversized
+    // partition and splits it
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
@@ -77,29 +74,6 @@ class SkewCcSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed tables join with no exchange (co-located join)") {
-    val conf = spark.conf
-    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val a = spark.range(1000).selectExpr("id AS k", "id * 2 AS va")
-      val b = spark.range(1000).selectExpr("id AS k", "id * 3 AS vb")
-      graft.io.Bucketing.writeBucketed(a, "graft_bkt_a", 4, Seq("k"))
-      graft.io.Bucketing.writeBucketed(b, "graft_bkt_b", 4, Seq("k"))
-      val joined = spark.table("graft_bkt_a")
-        .join(spark.table("graft_bkt_b"), "k")
-      assert(joined.collect().length == 1000)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"expected an exchange-free co-located join:\n$plan")
-    } finally {
-      saved.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_a")
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_b")
-    }
-  }
-
   test("partitioned layout: directory pruning engages, one file per value") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val df = spark.range(3000).selectExpr(
@@ -119,64 +93,28 @@ class SkewCcSpec extends AnyFunSuite {
   }
 
   test("star-contraction CC matches min-label on random graphs") {
-    def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fixed = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("i", "j")
-    assert(labelsOf(Dedup.connectedComponentsStar(fixed)) ==
-      labelsOf(Dedup.connectedComponents(fixed)))
+    val fixed = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L))
+    assert(labelsOf(Dedup.connectedComponentsStar(fixed.toDF("i", "j"))) ==
+      unionFind(fixed))
     val rnd = new scala.util.Random(42)
     val rpairs = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter(p => p._1 != p._2).toDF("i", "j")
-    assert(labelsOf(Dedup.connectedComponentsStar(rpairs)) ==
-      labelsOf(Dedup.connectedComponents(rpairs)))
+      .filter(p => p._1 != p._2)
+    assert(labelsOf(Dedup.connectedComponentsStar(rpairs.toDF("i", "j"))) ==
+      unionFind(rpairs))
   }
 
   test("CC property: both algorithms match a union-find reference model") {
-    // driver-side disjoint-set as the independent ground truth
-    def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      // second pass: full path compression to the component min
-      nodes.map(x => x -> find(x)).toMap
-    }
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
       val n = 40 + rnd.nextInt(40)
       val edges = Seq.fill(n)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
         .filter(p => p._1 != p._2)
-      val want = unionFind(50, edges).toSeq.sortBy(_._1)
+      val want = unionFind(edges)
       val df = edges.toDF("i", "j")
-      for (impl <- Seq(Dedup.connectedComponents(df), Dedup.connectedComponentsStar(df),
-          Dedup.connectedComponentsForest(df))) {
-        val got = impl.orderBy("doc_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        assert(got == want, s"seed=$seed")
-      }
+      for (impl <- Seq(Dedup.connectedComponentsStar(df),
+          Dedup.connectedComponentsForest(df)))
+        assert(labelsOf(impl) == want, s"seed=$seed")
     }
-  }
-
-  test("CC reliable mode: checkpointed loops produce identical labels") {
-    // reliable=true swaps the per-round localCheckpoint for a reliable
-    // checkpoint() so executor loss mid-loop is recoverable; labels
-    // must be unchanged and checkpoint files must actually land
-    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("i", "j")
-    def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val want = labelsOf(Dedup.connectedComponents(pairs))
-    assert(labelsOf(Dedup.connectedComponents(pairs, reliable = true)) == want)
-    assert(labelsOf(Dedup.connectedComponentsStar(pairs, reliable = true)) == want)
-    val dir = spark.sparkContext.getCheckpointDir
-    assert(dir.isDefined, "reliable CC must establish a checkpoint dir")
-    val files = new java.io.File(new java.net.URI(dir.get))
-    assert(files.exists, s"checkpoint dir ${dir.get} missing on disk")
   }
 
   test("forest CC: multi-partition coalesce tree merges cross-partition components") {
@@ -192,39 +130,16 @@ class SkewCcSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(200)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter(p => p._1 != p._2)
-    def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(labelsOf(Dedup.connectedComponentsForest(edges.toDF("i", "j").repartition(16), fanIn = 4)) ==
-      labelsOf(Dedup.connectedComponents(edges.toDF("i", "j"))))
+      unionFind(edges))
   }
 
   test("star-contraction CC converges in O(log n) rounds on a high-diameter chain") {
-    // a 60-node chain: diameter 59 blows min-label's default budget
-    // (maxIter=25 would throw); star contraction closes it in ~log n
+    // a 60-node chain: diameter 59 would need 59 min-label rounds;
+    // star contraction closes it inside its default 20-round budget
     val chain = (1L until 60L).map(i => (i, i + 1)).toDF("i", "j")
     val labels = Dedup.connectedComponentsStar(chain)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.length == 60 && labels.forall(_._2 == 1L))
-  }
-
-  test("CC auto-switch: node estimate exact below k, threshold picks forest vs star") {
-    val edges = (1L until 100L).map(i => (i, i + 1)).toDF("i", "j")
-      .repartition(8).localCheckpoint(true) // 100 distinct nodes
-    // KMV sketch is EXACT below k (k=1024 default)
-    val est = Dedup.estimateDistinctNodes(edges)
-    assert(est == 100.0, s"estimate $est should be exact below k")
-    def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val want = labelsOf(Dedup.connectedComponentsStar(edges))
-    // estimate <= limit: the forest path — shuffle-free labeling job
-    val auto = Dedup.connectedComponentsAuto(edges, nodeLimit = 100L)
-    assert(labelsOf(auto) == want)
-    assert(!auto.queryExecution.executedPlan.toString.contains("Exchange"),
-      "nodeLimit >= estimate must select the shuffle-free forest path")
-    // estimate > limit: the star path — shuffled rounds, same labels
-    val autoStar = Dedup.connectedComponentsAuto(edges, nodeLimit = 99L)
-    assert(labelsOf(autoStar) == want)
-    assert(autoStar.queryExecution.executedPlan.toString.contains("Exchange"),
-      "nodeLimit < estimate must select the star path")
   }
 }

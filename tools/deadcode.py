@@ -24,11 +24,15 @@ of a def already found test-only is not program use either, so the
 pass repeats until the test-only set stops growing: a helper that only
 test-only API calls is test-only too. Each must be listed in
 TEST_ONLY_API below with a one-line reason (library API kept for
-callers outside the tree, or the reference a spec compares against);
-otherwise it is dead code that a spec keeps alive. References from
+callers outside the tree); otherwise it is dead code that a spec keeps
+alive. A reference kernel a spec compares against is `private[graft]`
+instead, which keeps it out of the scan. References from
 perfbench/src count as program use: the benchmark harness compiles
 src/main/scala. An entry that is no longer test-only fails too, so the
 list cannot go stale.
+
+The summary line also reports the tree's size in lines (every line of
+every .scala file): the main tree, its io/ part, and the tests.
 
 Usage: python3 tools/deadcode.py            # report + exit 1 on findings
 
@@ -56,41 +60,14 @@ SCAN_DIRS = ["src/main/scala/graft", "src/main/scala/graft/ops",
              "src/main/scala/org/apache/spark/sql/graftbridge"]
 PROGRAM_DIRS = ["src/main/scala", "perfbench/src"]
 TEST_DIRS = ["src/test/scala"]
+# label -> dir whose .scala lines the summary line counts
+LOC_DIRS = {"main": "src/main/scala", "io/": "src/main/scala/graft/io",
+            "test": "src/test/scala"}
 
 # <file stem>.<def> -> why a def no program code calls stays public
 TEST_ONLY_API = {
-    "Auth.configLookup": "library API: the S6/F3 per-client config join",
-    "Dedup.withMinhashSignatureUnfused":
-        "reference: TrainingSpec compares the fused MinHash kernel to it",
-    "Dedup.connectedComponentsAuto":
-        "library API: one CC entry point for any graph size",
     "Ingest.sinkGuard": "library API: the reference's sink-side ts guard",
     "Ingest.toMarketData": "library API: the market_data row a JdbcSink appends",
-    "AnnLayout.prunedCorpusScan":
-        "library API: the probe-pruned corpus scan, for input-file audits",
-    "ForgetStore.readCorpusAt": "library API: time travel to a retained epoch",
-    "ForgetStore.positionalIndexAt":
-        "library API: time travel to a retained epoch",
-    "ForgetStore.readAnnCorpusAt": "library API: time travel to a retained epoch",
-    "ForgetStore.knnAt": "library API: time travel to a retained epoch",
-    "Registry.connectionCount": "library API: per-client connection count",
-    "Dedup.exactStreaming":
-        "library API: watermark-bounded exact dedup for unbounded feeds",
-    "NgramLm.scoreBackoff":
-        "library API: stupid-backoff trigram scoring of a corpus",
-    "Retrieval.mergePositionalIndex":
-        "library API: incremental merge of two positional indexes",
-    "Retrieval.bm25TopK": "library API: one-shot buildIndex + bm25Query",
-    "Similarity.dotHof":
-        "reference: the HOF dot product the native graft_dot is pinned to",
-    "TextOps.shingleSetComposed":
-        "reference: TrainingSpec compares the fused shingle kernel to it",
-    "Bucketing.writeBucketed": "library API: Spark-native bucketed write",
-    "Bucketing.writeZOrdered": "library API: two-dimension Z-order layout",
-    "ForgetStore.readCorpus": "library API: corpus at the current snapshot",
-    "ForgetStore.knn": "library API: IVF top-k at the current snapshot",
-    "ForgetStore.readAnnCorpus":
-        "library API: ANN members at the current snapshot",
     "LatestStream.keepLastStateful":
         "library API: stateful keep-last with TTL and state migration",
     "Pipeline.replayQuarantine":
@@ -98,18 +75,6 @@ TEST_ONLY_API = {
     "Pipeline.rebuildLatest":
         "library API: rebuild the latest table from the append log",
     "WsServer.tlsServerSocket": "library API: TLS listener for wss:// serving",
-    "Dedup.connectedComponents":
-        "library API: min-label CC, connectedComponentsAuto's forest path",
-    "Dedup.estimateDistinctNodes":
-        "library API: the KMV node count connectedComponentsAuto picks by",
-    "Dedup.streamAgainstHistory":
-        "library API: Bloom-fronted stream dedup against a history",
-    "Skew.saltedJoin": "library API: salted join of a hot key to a dim table",
-    "Bloom.mightContainSubquery":
-        "library API: Bloom probe whose sketch is a scalar subquery",
-    "Bloom.antiJoinSubquery":
-        "library API: Bloom-split anti join on the subquery sketch",
-    "Bucketing.writeZOrderedN": "library API: Z-order over 2-8 dimensions",
     "LatestStream.updateLatest":
         "library API: keepLastStateful's state update, for TestGroupState",
 }
@@ -190,6 +155,17 @@ def scala_files(dirs):
     return out
 
 
+def loc(d):
+    """Lines of every .scala file under `d`."""
+    n = 0
+    for root, _, files in os.walk(os.path.join(ROOT, d)):
+        for fn in files:
+            if fn.endswith(".scala"):
+                with open(os.path.join(root, fn)) as f:
+                    n += sum(1 for _ in f)
+    return n
+
+
 def public_defs():
     out = []  # (file, first line, last body line, name)
     for d in SCAN_DIRS:
@@ -250,9 +226,11 @@ def main():
     test_only = sorted(test_only)
     unlisted = [d for d in test_only if key[d] not in TEST_ONLY_API]
     stale = sorted(set(TEST_ONLY_API) - {key[d] for d in test_only})
+    lines = ", ".join(f"{k} {loc(d):,}" for k, d in LOC_DIRS.items())
     print(f"scanned {len(defs)} public defs in {len(SCAN_DIRS)} main-tree "
           f"dirs; "
-          f"{len(test_only)} test-only, {len(TEST_ONLY_API)} listed")
+          f"{len(test_only)} test-only, {len(TEST_ONLY_API)} listed; "
+          f"LoC {lines}")
     if orphans:
         print(f"ORPHANS ({len(orphans)}): public defs with no reference "
               "outside their own body:")
